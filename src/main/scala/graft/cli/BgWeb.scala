@@ -79,8 +79,16 @@ object BgWeb {
     // without an executor the JDK server dispatches every request on
     // ONE thread — a cron-driven /api/bgutil/compact would stall every
     // concurrent /render and /health behind the maintenance run. Spark
-    // schedules concurrent jobs from multiple threads fine.
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+    // schedules concurrent jobs from multiple threads fine. Daemon
+    // threads: server.stop ends the dispatcher but never this pool, and
+    // non-daemon workers would keep the JVM alive after it.
+    val workers = new java.util.concurrent.atomic.AtomicInteger()
+    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8,
+      (r: Runnable) => {
+        val t = new Thread(r, s"bgweb-http-${workers.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      }))
 
     server.createContext("/health", new HttpHandler {
       override def handle(ex: HttpExchange): Unit =
@@ -185,21 +193,30 @@ object BgWeb {
         require(Set("json", "csv", "raw")(format),
           s"unknown format: $format")
         // graphite time syntax: epoch, now, -6h …; ?now= pins the
-        // reference instant (tests, reproducible dashboards)
-        val nowS = opt("now").map(_.toLong)
-          .getOrElse(System.currentTimeMillis() / 1000)
+        // reference instant (tests, reproducible dashboards) — for the
+        // relative times AND for the reads' stage choice; without it a
+        // read's stage is chosen relative to its window end
+        val pinnedNow = opt("now").map(_.toLong)
+        val nowS = pinnedNow.getOrElse(System.currentTimeMillis() / 1000)
         val startS = RenderTarget.parseTime(opt("from").getOrElse("-1d"), nowS)
         val endS = RenderTarget.parseTime(opt("until").getOrElse("now"), nowS)
         val mdp = opt("maxDataPoints").map(_.toInt).getOrElse(0)
         // (name, [(ts, value-or-null)]) per series across all targets —
         // one shape, three serializations (format=json|csv|raw, like
-        // graphite-web's render views)
+        // graphite-web's render views). Ordering happens here on the
+        // driver: legend order where a sortBy* materialized
+        // series_order, name order otherwise; slots by ts.
         val series: Seq[(String, Seq[(Long, Option[Double])])] =
           targets.toSeq.flatMap { t =>
-            RenderTarget.render(db, t, startS, endS, mdp)
-              .select("name", "ts", "value").orderBy("name", "ts")
+            val df = RenderTarget.render(db, t, startS, endS, mdp, pinnedNow)
+            val legend = df.columns.contains("series_order")
+            df.select((Seq("name", "ts", "value") ++
+                (if (legend) Seq("series_order") else Nil)).map(col): _*)
               .collect()
-              .groupBy(_.getString(0)).toSeq.sortBy(_._1)
+              .groupBy(_.getString(0)).toSeq
+              .sortBy { case (name, rows) =>
+                (if (legend && !rows.head.isNullAt(3)) rows.head.getInt(3)
+                 else Int.MaxValue, name) }
               .map { case (name, rows) =>
                 (name, rows.sortBy(_.getLong(1)).toSeq.map { r =>
                   // NaN/Infinity are not JSON — graphite serializes

@@ -36,12 +36,13 @@ object Bgutil {
     /** `spark.graft.catalog.v2=true` reads the catalog through the
       * [[graft.sources.GraftCatalogSource]] DSv2 reader (explicit
       * row-group stats pruning on the glob columns) instead of the
-      * generic parquet source. Same rows either way. */
+      * generic parquet source. Same rows either way. A committed
+      * version is never rewritten, so its schema is inferred once. */
     def catalog: DataFrame =
       if (spark.conf.getOption("spark.graft.catalog.v2").contains("true"))
         spark.read.format(graft.sources.GraftCatalogSource.ShortName)
           .load(catalogPath)
-      else spark.read.parquet(catalogPath)
+      else graft.sources.InferredSchemas.parquet(spark, catalogPath, s"$dir/catalog")
     def points: DataFrame = spark.read.parquet(pointsPath)
     def hasCatalog: Boolean = new java.io.File(catalogPath).exists()
 
@@ -181,7 +182,8 @@ object Bgutil {
       if (rest.length > 3) rest(3) else Retention.default.toString,
       if (rest.length > 4) rest(4) else "average")
     case "read" => read(db, rest(0), rest(1).toLong, rest(2).toLong,
-      maxDataPoints = if (rest.length > 3) rest(3).toInt else 0).show(200)
+      maxDataPoints = if (rest.length > 3) rest(3).toInt else 0)
+      .orderBy("name", "ts").show(200)
     case "render" => render(db, rest(0), rest(1).toLong, rest(2).toLong,
       rest.drop(3).toSeq).show(200, truncate = false)
     case "list" => list(db, rest(0)).show(200, truncate = false)
@@ -513,14 +515,16 @@ object Bgutil {
   }
 
   /** Read dense series for every metric matching the glob
-    * (cli/command_read.py:73-147) — one planned job per retention class,
+    * (cli/command_read.py:73-147) — one planned scan per retention class,
     * not one plan per metric (TimeSeriesReader.findAndFetchPlanned).
     * `maxDataPoints > 0` consolidates server-side (graphite-web's
-    * maxDataPoints), applying xFilesFactor when the catalog carries it. */
+    * maxDataPoints), applying xFilesFactor when the catalog carries it.
+    * `nowS` is the instant stage selection measures age from; without
+    * one, the window end stands in for it. Rows come back unordered. */
   def read(db: Db, glob: String, startS: Long, endS: Long,
-      maxDataPoints: Int = 0): DataFrame = {
+      maxDataPoints: Int = 0, nowS: Option[Long] = None): DataFrame = {
     val cold = TimeSeriesReader.findAndFetchPlanned(db.spark, db.catalog,
-      db.pointsPath, glob, startS, endS, nowS = endS,
+      db.pointsPath, glob, startS, endS, nowS = nowS.getOrElse(endS),
       maxDataPoints = maxDataPoints)
     hotOverlay(db, cold, glob, startS, endS)
   }
@@ -678,10 +682,12 @@ object Bgutil {
     * `maxDataPoints` carries the request's consolidation budget into
     * the SECOND-operand reads (divideSeries/diffSeries/fallbackSeries/
     * weightedAverage) — without it a consolidated main series would
-    * ts-join an unconsolidated operand and miss every coarse slot. */
+    * ts-join an unconsolidated operand and miss every coarse slot;
+    * `nowS` carries the request's reference instant there for the same
+    * reason (the operand must land on the main series' stage). */
   private[cli] def applyRenderFn(db: Db, df: DataFrame, name: String,
       args: IndexedSeq[String], startS: Long, endS: Long,
-      maxDataPoints: Int = 0): DataFrame = {
+      maxDataPoints: Int = 0, nowS: Option[Long] = None): DataFrame = {
     import graft.operators.{SeriesFunctions => SF}
     // shims keeping the big match textually identical to the original
     // colon-spec form: parts(0) was the name, parts(i) the (i−1)th arg.
@@ -779,7 +785,7 @@ object Bgutil {
                 require(n != 0, "asPercent: constant total must be non-zero")
                 SF.scaleOffset(df, 100.0 / n)
               case None => SF.asPercentOf(df,
-                read(db, parts(1), startS, endS, maxDataPoints))
+                read(db, parts(1), startS, endS, maxDataPoints, nowS))
             }
           case "asPercent" => SF.asPercent(df)
           case "stacked" => SF.stacked(df)
@@ -807,9 +813,9 @@ object Bgutil {
             below = false)
           case "minimumBelow" => SF.minimumBelow(df, parts(1).toDouble)
           case "divideSeries" =>
-            SF.divideSeries(df, read(db, parts(1), startS, endS, maxDataPoints))
+            SF.divideSeries(df, read(db, parts(1), startS, endS, maxDataPoints, nowS))
           case "diffSeries" => SF.diffSeries(df,
-            read(db, parts(1), startS, endS, maxDataPoints),
+            read(db, parts(1), startS, endS, maxDataPoints, nowS),
             if (partsLen > 2) parts(2) else "diffSeries")
           case "hitcount" => SF.hitcount(df, intervalArg(1))
           case "changed" => SF.changed(df)
@@ -823,7 +829,7 @@ object Bgutil {
           case "holtWintersAberration" =>
             graft.operators.HoltWinters.aberration(df, parts(1).toLong)
           case "weightedAverage" =>
-            SF.weightedAverage(df, read(db, parts(1), startS, endS, maxDataPoints),
+            SF.weightedAverage(df, read(db, parts(1), startS, endS, maxDataPoints, nowS),
               parts(2).split(",").toSeq.map(_.toInt))
           case "multiplySeries" => SF.multiplySeries(df,
             if (partsLen > 1) parts(1) else "multiplySeries")
@@ -854,7 +860,7 @@ object Bgutil {
             if (partsLen > 2) parts(2).toInt else 0,
             if (partsLen > 3) parts(3).toInt else 7)
           case "fallbackSeries" =>
-            SF.fallbackSeries(df, read(db, parts(1), startS, endS, maxDataPoints))
+            SF.fallbackSeries(df, read(db, parts(1), startS, endS, maxDataPoints, nowS))
           case "exponentialMovingAverage" =>
             SF.exponentialMovingAverage(df, parts(1).toInt)
           case "lowest" => SF.lowest(df, parts(1).toInt,
@@ -906,17 +912,17 @@ object Bgutil {
           case "reduceSeries" => SF.reduceSeries(df, parts(1),
             parts(2).toInt, (3 until partsLen).map(parts))
           case "useSeriesAbove" => useSeriesAbove(db, df, parts(1).toDouble,
-            parts(2), parts(3), startS, endS, maxDataPoints)
+            parts(2), parts(3), startS, endS, maxDataPoints, nowS)
           case "sumSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints), "sum")
+            read(db, parts(1), startS, endS, maxDataPoints, nowS), "sum")
           case "diffSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints), "diff")
+            read(db, parts(1), startS, endS, maxDataPoints, nowS), "diff")
           case "multiplySeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints), "multiply")
+            read(db, parts(1), startS, endS, maxDataPoints, nowS), "multiply")
           case "divideSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints), "divide")
+            read(db, parts(1), startS, endS, maxDataPoints, nowS), "divide")
           case "aggregateSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints), parts(2) match {
+            read(db, parts(1), startS, endS, maxDataPoints, nowS), parts(2) match {
               case "total" => "sum"
               case f => f
             })
@@ -940,13 +946,13 @@ object Bgutil {
     * glob-capped fetch), resolved driver-side like applyByNode. */
   def useSeriesAbove(db: Db, df: DataFrame, value: Double, search: String,
       replace: String, startS: Long, endS: Long,
-      maxDataPoints: Int): DataFrame = {
+      maxDataPoints: Int, nowS: Option[Long] = None): DataFrame = {
     val names = df.groupBy("name").agg(max("value").as("__m"))
       .filter(col("__m") > value)
       .select("name").collect().map(_.getString(0))
     val derived = names.map(_.replaceAll(search, replace)).distinct.sorted
     if (derived.isEmpty) df.limit(0)
-    else derived.map(n => read(db, n, startS, endS, maxDataPoints))
+    else derived.map(n => read(db, n, startS, endS, maxDataPoints, nowS))
       .reduce(_ unionByName _)
   }
 

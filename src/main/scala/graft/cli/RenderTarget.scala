@@ -192,8 +192,13 @@ object RenderTarget {
     * setXFilesFactor) — arguments evaluate before their enclosing call,
     * so an inner setXFilesFactor governs every function wrapping it.
     * Scope is one target expression (graphite scopes it to the whole
-    * request; a request here is one render() call per target). */
-  private final class EvalCtx { var xff: Option[Double] = None }
+    * request; a request here is one render() call per target).
+    * `nowS` is the request's reference instant, when it pins one: every
+    * leaf read — shifted windows included — measures stage age from it,
+    * as graphite's fetch does from requestContext['now']. */
+  private final class EvalCtx(val nowS: Option[Long]) {
+    var xff: Option[Double] = None
+  }
 
   /** Consumers of the context default: the combine family (graphite's
     * aggregate reads requestContext when no explicit xff is passed) and
@@ -209,16 +214,18 @@ object RenderTarget {
 
   /** Evaluate a parsed target against a db and time window.
     * `maxDataPoints` consolidates the leaf reads like graphite's render
-    * parameter of the same name (0 = no consolidation). */
+    * parameter of the same name (0 = no consolidation); `nowS` pins the
+    * instant the leaf reads pick their stage by (default: each read's
+    * window end). */
   def eval(db: Bgutil.Db, node: Node, startS: Long, endS: Long,
-      maxDataPoints: Int = 0): DataFrame =
-    evalC(db, node, startS, endS, maxDataPoints, new EvalCtx)
+      maxDataPoints: Int = 0, nowS: Option[Long] = None): DataFrame =
+    evalC(db, node, startS, endS, maxDataPoints, new EvalCtx(nowS))
 
   private def evalC(db: Bgutil.Db, node: Node, startS: Long, endS: Long,
       maxDataPoints: Int, ctx: EvalCtx): DataFrame =
     node match {
       case PathNode(glob) =>
-        Bgutil.read(db, glob, startS, endS, maxDataPoints)
+        Bgutil.read(db, glob, startS, endS, maxDataPoints, ctx.nowS)
       // constantLine is a SOURCE, not a transform: its one argument is
       // the value, which the grammar necessarily parsed as the series
       case CallNode("constantLine", PathNode(v), Nil, _) =>
@@ -370,7 +377,7 @@ object RenderTarget {
           else mapped(fn, raw, Nil)
         Bgutil.applyRenderFn(db, unioned, name,
           withCtxXff(name, finalArgs, ctx).toIndexedSeq,
-          startS, endS, maxDataPoints)
+          startS, endS, maxDataPoints, ctx.nowS)
       // graphite's timeShift('1d') means "draw data from 1d AGO": the
       // FETCH window shifts into the past and the timestamps shift
       // forward onto the requested window (an unsigned offset implies
@@ -425,13 +432,14 @@ object RenderTarget {
         val (name, finalArgs) = mapped(fn, raw, joined)
         Bgutil.applyRenderFn(db, df, name,
           withCtxXff(name, finalArgs, ctx).toIndexedSeq,
-          startS, endS, maxDataPoints)
+          startS, endS, maxDataPoints, ctx.nowS)
     }
 
   /** Parse + evaluate in one step (the /render endpoint's entry). */
   def render(db: Bgutil.Db, target: String, startS: Long,
-      endS: Long, maxDataPoints: Int = 0): DataFrame =
-    eval(db, parse(target), startS, endS, maxDataPoints)
+      endS: Long, maxDataPoints: Int = 0,
+      nowS: Option[Long] = None): DataFrame =
+    eval(db, parse(target), startS, endS, maxDataPoints, nowS)
 
   /** Python %-format for aliasQuery legends ('%d cores', '%.1f qps'):
     * the numeric conversions graphite's newName takes. %d truncates

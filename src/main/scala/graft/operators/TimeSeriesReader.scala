@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Metric, Retention, Stage}
@@ -99,7 +99,7 @@ object TimeSeriesReader {
   }
 
   /** Planned multi-metric read — the full find+fetch lifecycle
-    * (plugins/graphite.py:365-412,142-225) as ONE job per retention class:
+    * (plugins/graphite.py:365-412,142-225) as ONE scan per retention class:
     * resolve the glob, group the matched metrics by retention driver-side
     * (the match list is bounded by the glob cap, so this is planning
     * metadata, not data), pick the stage + aligned window per retention
@@ -107,6 +107,13 @@ object TimeSeriesReader {
     * dense spine per group. Plan fan-out = #distinct retentions (typically
     * a handful), never #metrics — a glob matching 5,000 metrics is still
     * one scan, unlike a per-metric plan/union loop.
+    *
+    * The points move through ONE exchange: the scan is hash-partitioned by
+    * metric_id, which every later grouping (batch_seq last-write-wins,
+    * both pointGrouper aggregations, the per-metric slot fold) already
+    * satisfies. The aggregator and xFilesFactor ride as literals keyed on
+    * metric_id instead of a join. Rows come back in no particular order;
+    * consumers that print sort for themselves.
     *
     * Every found leaf gets a dense vector — metrics with no points in the
     * window come back all-null (plugins/graphite.py:182-219). */
@@ -129,18 +136,17 @@ object TimeSeriesReader {
       val metas = rows.toSeq.map(r => (r.getAs[String]("id"),
         r.getAs[String]("name"), r.getAs[String]("aggregator"),
         if (hasXff) r.getAs[Double]("xfilesfactor") else 0.0))
-      val metaDf = metas.toDF("metric_id", "name", "aggregator", "xff")
-      val scan = PointsStore
-        .read(spark, baseDir, p.stage, clampedStart, p.endS, metas.map(_._1))
-        .drop("aggregator")
-        .join(broadcast(metaDf.select("metric_id", "aggregator", "xff")),
-          Seq("metric_id"))
       // consolidation (step > stage precision) is where xFilesFactor
       // bites: under-filled coarse windows come back NaN when the
       // catalog carries a factor (whisper consolidation semantics)
       val xffSrc =
         if (hasXff && p.stepS > p.stage.precisionS) Some(p.stage.precisionS)
         else None
+      val scan = PointsStore
+        .read(spark, baseDir, p.stage, clampedStart, p.endS, metas.map(_._1),
+          byMetric = true)
+        .withColumn("aggregator", perMetric(metas.map(m => (m._1, m._3))))
+        .withColumn("xff", perMetric(metas.map(m => (m._1, m._4))))
       // consolidated windows anchor at the (stage-aligned) window start,
       // which need not be a multiple of the widened step: shift to a
       // start-relative timeline for the grouping, shift back after —
@@ -151,10 +157,44 @@ object TimeSeriesReader {
               scan.withColumn("ts", col("ts") - p.startS), p.stepS, xffSrc)
             .withColumn("ts", col("ts") + p.startS)
         else Downsample.pointGrouper(scan, p.stepS, xffSrc)
-      val spine = spark.range(p.startS, p.endS, p.stepS).select(col("id").as("ts"))
-      broadcast(metaDf.select("metric_id", "name")).crossJoin(spine)
-        .join(series, Seq("metric_id", "ts"), "left")
-        .select(col("name"), col("ts"), col("value"))
-    }.reduce(_ unionByName _).orderBy("name", "ts")
+      densify(series, metas.map(m => (m._1, m._2)).toDF("metric_id", "name"), p)
+    }.reduce(_ unionByName _)
+  }
+
+  /** A per-metric attribute as an expression over metric_id: one literal
+    * when every metric shares the value, else a CASE over the id set of
+    * each value (hashed IN lists — per-row cost does not grow with the
+    * match count the way a map-literal lookup's scan would). */
+  private def perMetric[T](values: Seq[(String, T)]): Column = {
+    val byValue = values.groupBy(_._2).toSeq
+      .map { case (v, ids) => (v, ids.map(_._1)) }
+      .sortBy { case (v, ids) => (-ids.size, v.toString) }
+    byValue.tail.foldLeft(lit(byValue.head._1)) { case (rest, (v, ids)) =>
+      when(col("metric_id").isin(ids: _*), lit(v)).otherwise(rest)
+    }
+  }
+
+  /** Dense vectors: every metric of `names` gets one row per slot of the
+    * plan's spine, null where the grouped `series` has no point
+    * (plugins/graphite.py:182-219). `series` is clustered by metric_id,
+    * so folding each metric's points into one array needs no exchange;
+    * the missing slots come from a hashed set difference against the
+    * spine, and one sort per metric orders its slots by ts. */
+  private def densify(series: DataFrame, names: DataFrame,
+      p: FetchPlan): DataFrame = {
+    val slotType = "array<struct<ts:bigint,value:double>>"
+    val folded = series
+      .filter(col("ts") >= p.startS && col("ts") < p.endS)
+      .groupBy("metric_id")
+      .agg(collect_list(struct(col("ts"), col("value"))).as("__pts"))
+    val spine =
+      if (p.endS > p.startS) sequence(lit(p.startS), lit(p.endS - 1), lit(p.stepS))
+      else array().cast("array<bigint>")
+    val pts = coalesce(col("__pts"), array().cast(slotType))
+    val empty = transform(array_except(spine, transform(pts, _.getField("ts"))),
+      t => struct(t.as("ts"), lit(null).cast("double").as("value")))
+    names.join(folded, Seq("metric_id"), "left")
+      .select(col("name"), explode(array_sort(concat(pts, empty))).as("__s"))
+      .select(col("name"), col("__s.ts").as("ts"), col("__s.value").as("value"))
   }
 }

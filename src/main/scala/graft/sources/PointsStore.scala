@@ -136,9 +136,14 @@ object PointsStore {
     * StreamingIngest.startIngestJob) is resolved HERE — the highest
     * batch_seq per (metric, replica, step) wins, so every consumer of the
     * read path (pointGrouper, fetchSeries, bgutil read) sees exactly the
-    * final state, never stale re-emissions. */
+    * final state, never stale re-emissions.
+    *
+    * `byMetric` hash-partitions the pruned rows by metric_id before that
+    * merge: the merge and every later per-metric grouping of the read
+    * (pointGrouper's two aggregations) then run on the one exchange. */
   def read(spark: SparkSession, baseDir: String, stage: Stage,
-      startS: Long, endS: Long, metricIds: Seq[String] = Nil): DataFrame = {
+      startS: Long, endS: Long, metricIds: Seq[String] = Nil,
+      byMetric: Boolean = false): DataFrame = {
     // spark.graft.points.v2=true reads through the GraftCatalogSource DSv2
     // reader: stage/bucket dir pruning PLUS metric_id/ts row-group
     // stats+dictionary pruning inside each file — a narrow point fetch
@@ -147,15 +152,16 @@ object PointsStore {
     val base =
       if (spark.conf.getOption("spark.graft.points.v2").contains("true"))
         spark.read.format(GraftCatalogSource.ShortName).load(baseDir)
-      else spark.read.parquet(baseDir)
-    readFrom(base, stage, startS, endS, metricIds)
+      else InferredSchemas.parquet(spark, baseDir, baseDir)
+    readFrom(base, stage, startS, endS, metricIds, byMetric)
   }
 
   /** [[read]] against a caller-supplied base relation — so a compaction
     * loop can list the store's files ONCE and prune per slice, instead
     * of re-listing the whole table every slice. */
   private[sources] def readFrom(base: DataFrame, stage: Stage,
-      startS: Long, endS: Long, metricIds: Seq[String] = Nil): DataFrame = {
+      startS: Long, endS: Long, metricIds: Seq[String] = Nil,
+      byMetric: Boolean = false): DataFrame = {
     val span = bucketSpanS(stage.precisionS)
     val b0 = startS / span * span
     val b1 = endS / span * span
@@ -164,6 +170,7 @@ object PointsStore {
       .filter(col("bucket") >= b0 && col("bucket") <= b1)
       .filter(col("ts") >= startS && col("ts") < endS)
     if (metricIds.nonEmpty) df = df.filter(col("metric_id").isin(metricIds: _*))
+    if (byMetric) df = df.repartition(col("metric_id"))
     if (df.columns.contains("batch_seq")) {
       val extra = if (df.columns.contains("replica")) Seq("replica") else Nil
       // null batch_seq (rows from files written without the column, e.g.

@@ -147,6 +147,66 @@ class BgWebSpec extends SparkSuite {
     } finally server.stop(0)
   }
 
+  test("render: sortBy* legend order survives the web face") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("bgweblegend").toString)
+    Bgutil.syncdb(db)
+    // maxima order (b, c, a) differs from name order (a, b, c)
+    Bgutil.writePoints(db, Seq(("s.a", 120L, 1.0), ("s.b", 120L, 9.0),
+      ("s.c", 120L, 5.0)), "60*60s:24*3600s", "average")
+    val server = BgWeb.build(db, 0)
+    server.start()
+    val port = server.getAddress.getPort
+    def order(target: String): Seq[String] = {
+      val (c, body) = get(s"http://localhost:$port/render?target=" +
+        java.net.URLEncoder.encode(target, "UTF-8") + "&from=120&until=180")
+      assert(c === 200, body)
+      "\"target\":\"([^\"]+)\"".r.findAllMatchIn(body).map(_.group(1)).toSeq
+    }
+    try {
+      assert(order("sortByMaxima(s.*)") === Seq("s.b", "s.c", "s.a"))
+      assert(order("sortByMinima(s.*)") === Seq("s.a", "s.c", "s.b"))
+      assert(order("s.*") === Seq("s.a", "s.b", "s.c"))
+    } finally server.stop(0)
+  }
+
+  test("render: ?now= steers the stage choice, not only relative times") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("bgwebnow").toString)
+    Bgutil.syncdb(db)
+    val now = 30L * 86400
+    // a point every 10 minutes over [now-3d, now-2d): minute stage 0
+    // keeps one day, the hourly stage 30 days
+    val from = now - 3 * 86400
+    Bgutil.writePoints(db, (0 until 144).map(i => ("s.x", from + i * 600L, 1.0)),
+      "1440*60s:720*3600s", "average")
+    val server = BgWeb.build(db, 0)
+    server.start()
+    val port = server.getAddress.getPort
+    try {
+      // measured from now, the window is 2-3 days old: past stage 0's
+      // day, so it must come from the hourly stage (24 slots of 3600 s)
+      val (c, body) = get(s"http://localhost:$port/render?target=s.x" +
+        s"&from=-3d&until=-2d&now=$now&format=raw")
+      assert(c === 200, body)
+      assert(body.startsWith(s"s.x,$from,${from + 86400},3600|"), body)
+      assert(body.trim.split("\\|")(1).split(",").toSeq === Seq.fill(24)("1.0"), body)
+    } finally server.stop(0)
+  }
+
+  test("web: no non-daemon thread outlives a started and stopped server") {
+    import scala.jdk.CollectionConverters._
+    def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = nonDaemon()
+    val server = BgWeb.build(freshDb(), 0)
+    server.start()
+    try {
+      val (hc, _) = get(s"http://localhost:${server.getAddress.getPort}/health")
+      assert(hc === 200)
+    } finally server.stop(0)
+    val left = nonDaemon() -- before
+    assert(left.isEmpty, s"non-daemon threads left: ${left.map(_.getName)}")
+  }
+
   test("shell: dispatches lines against one session, survives errors") {
     val db = freshDb()
     val script = Seq(

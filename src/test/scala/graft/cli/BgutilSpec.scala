@@ -174,6 +174,18 @@ class BgutilSpec extends SparkSuite {
       s"expected one 2-way union for two retention classes")
     // 12 metrics × 2 slots at 60 s + 2 metrics × 4 slots at 30 s
     assert(q2.count() === 12 * 2 + 2 * 4)
+
+    // mixed aggregators within one retention class still plan no Union
+    // (the per-metric aggregator is a literal, not one branch per kind)
+    Bgutil.write(db, "sys.cpu.12.load", 120L, 5.0, "60*60s:24*3600s", "total")
+    Bgutil.write(db, "sys.cpu.13.load", 120L, 6.0, "60*60s:24*3600s", "maximum")
+    val q3 = Bgutil.read(db, "sys.cpu.*.load", 120L, 240L)
+    val unions3 = q3.queryExecution.optimizedPlan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }
+    assert(unions3.isEmpty,
+      s"expected no Union for mixed aggregators:\n${q3.queryExecution.optimizedPlan}")
+    assert(q3.count() === 14 * 2)
   }
 
   test("compact + expire: stream-append → CLI compact → identical read") {
