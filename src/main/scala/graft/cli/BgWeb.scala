@@ -99,19 +99,16 @@ object BgWeb {
       override def handle(ex: HttpExchange): Unit = try {
         val name = ex.getRequestURI.getPath
           .stripPrefix("/api/biggraphite/metric/")
-        val rows = db.catalog.filter(col("name") === name)
-          .select("name", "id", "aggregator", "retention", "updated_on")
-          .collect()
-        if (rows.isEmpty)
-          respond(ex, 404, s"""{"error":"unknown metric: ${jsonEscape(name)}"}""")
-        else {
-          val r = rows.head
-          respond(ex, 200,
-            s"""{"name":"${jsonEscape(r.getString(0))}",""" +
-            s""""id":"${jsonEscape(r.getString(1))}",""" +
-            s""""metadata":{"aggregator":"${jsonEscape(r.getString(2))}",""" +
-            s""""retention":"${jsonEscape(r.getString(3))}"},""" +
-            s""""updated_on":${r.getLong(4)}}""")
+        Bgutil.metricInfo(db, name) match {
+          case None =>
+            respond(ex, 404, s"""{"error":"unknown metric: ${jsonEscape(name)}"}""")
+          case Some(r) =>
+            respond(ex, 200,
+              s"""{"name":"${jsonEscape(r.getString(0))}",""" +
+              s""""id":"${jsonEscape(r.getString(1))}",""" +
+              s""""metadata":{"aggregator":"${jsonEscape(r.getString(2))}",""" +
+              s""""retention":"${jsonEscape(r.getString(3))}"},""" +
+              s""""updated_on":${r.getLong(4)}}""")
         }
       } catch {
         case e: Exception =>
@@ -125,10 +122,9 @@ object BgWeb {
       override def handle(ex: HttpExchange): Unit = try {
         val glob = parseParams(ex).collectFirst { case ("query", v) => v }
           .getOrElse(throw new IllegalArgumentException("missing ?query="))
-        val nodes = graft.operators.TimeSeriesReader
-          .findNodes(db.catalog, glob).collect()
-          .map(r => s"""{"text":"${jsonEscape(r.getString(0))}",""" +
-            s""""leaf":${r.getBoolean(1)}}""")
+        val nodes = Bgutil.findNodes(db, glob)
+          .map { case (name, leaf) =>
+            s"""{"text":"${jsonEscape(name)}","leaf":$leaf}""" }
         respond(ex, 200, nodes.mkString("[", ",", "]"))
       } catch {
         case e: Exception =>
@@ -147,10 +143,9 @@ object BgWeb {
           .getOrElse(throw new IllegalArgumentException("missing ?query="))
         val leavesOnly =
           params.collectFirst { case ("leavesOnly", v) => v }.contains("1")
-        val nodes = graft.operators.TimeSeriesReader
-          .findNodes(db.catalog, glob).collect()
-          .filter(r => !leavesOnly || r.getBoolean(1))
-          .map(r => s""""${jsonEscape(r.getString(0))}"""").distinct.sorted
+        val nodes = Bgutil.findNodes(db, glob)
+          .collect { case (name, leaf) if !leavesOnly || leaf =>
+            s""""${jsonEscape(name)}"""" }.distinct.sorted
         respond(ex, 200, nodes.mkString("""{"results":[""", ",", "]}"))
       } catch {
         case e: Exception =>
@@ -162,11 +157,14 @@ object BgWeb {
     // graphite-web's /metrics/index.json: every leaf metric name,
     // sorted — the autocomplete index. Inherently a full catalog dump
     // (graphite walks its whole tree for this too); the projection is
-    // one pruned column off the catalog parquet.
+    // one pruned column off the catalog parquet, collected whole, so it
+    // sorts on the driver (in Spark's UTF-8 byte order) instead of in a
+    // range-sampled Spark sort.
     server.createContext("/metrics/index.json", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = try {
-        val names = db.catalog.select("name").orderBy("name").collect()
-          .map(r => s""""${jsonEscape(r.getString(0))}"""")
+        val names = db.catalog.select("name").collect().map(_.getString(0))
+          .sortBy(org.apache.spark.unsafe.types.UTF8String.fromString)
+          .map(n => s""""${jsonEscape(n)}"""")
         respond(ex, 200, names.mkString("[", ",", "]"))
       } catch {
         case e: Exception =>

@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -27,22 +26,26 @@ object Bgutil {
       * version intact — readers never observe a partial catalog (the old
       * two-phase overwrite had a destructive window). */
     private def currentFile = Paths.get(s"$dir/CURRENT")
-    // pointer content is an opaque token: "N" (legacy) or "N-nonce"
-    def catalogPath: String =
+    /** The committed catalog version's directory; None for the
+      * pre-versioning `<db>/catalog` layout, which is rewritten in place.
+      * Pointer content is an opaque token: "N" (legacy) or "N-nonce". */
+    def catalogVersion: Option[String] =
       if (Files.exists(currentFile))
-        s"$dir/catalog_v${Files.readString(currentFile).trim}"
-      else s"$dir/catalog" // pre-versioning layout
+        Some(s"$dir/catalog_v${Files.readString(currentFile).trim}")
+      else None
+    def catalogPath: String = catalogVersion.getOrElse(s"$dir/catalog")
     def pointsPath = s"$dir/points"
-    /** `spark.graft.catalog.v2=true` reads the catalog through the
-      * [[graft.sources.GraftCatalogSource]] DSv2 reader (explicit
-      * row-group stats pruning on the glob columns) instead of the
-      * generic parquet source. Same rows either way. A committed
+    def catalog: DataFrame = catalogAt(catalogPath)
+    /** The catalog stored at `path`. `spark.graft.catalog.v2=true` reads
+      * it through the [[graft.sources.GraftCatalogSource]] DSv2 reader
+      * (explicit row-group stats pruning on the glob columns) instead of
+      * the generic parquet source. Same rows either way. A committed
       * version is never rewritten, so its schema is inferred once. */
-    def catalog: DataFrame =
+    def catalogAt(path: String): DataFrame =
       if (spark.conf.getOption("spark.graft.catalog.v2").contains("true"))
         spark.read.format(graft.sources.GraftCatalogSource.ShortName)
-          .load(catalogPath)
-      else graft.sources.InferredSchemas.parquet(spark, catalogPath, s"$dir/catalog")
+          .load(path)
+      else graft.sources.InferredSchemas.parquet(spark, path, s"$dir/catalog")
     def points: DataFrame = spark.read.parquet(pointsPath)
     def hasCatalog: Boolean = new java.io.File(catalogPath).exists()
 
@@ -514,72 +517,130 @@ object Bgutil {
     }, db.pointsPath)
   }
 
+  /** Catalog answers memoized per committed catalog version: a version
+    * directory is never rewritten, so (version, query) always has the
+    * same answer, and a commit's new version is a new key — nothing is
+    * ever invalidated. The pre-versioning `<db>/catalog` layout is
+    * rewritten in place and bypasses the memo. A fixed LRU bounds it;
+    * every entry is glob-capped (≤ 2 × 5000 rows for a find), so the
+    * memo holds at most [[CatalogMemo.Entries]] × that many rows. Points
+    * are never memoized. */
+  private[graft] object CatalogMemo {
+    val Entries = 64
+    /** One answer, computed once: a request of a key being computed
+      * waits for it (a dashboard sends the same glob from several
+      * panels at once). A failed computation is retried by the next. */
+    private final class Cell(compute: () => AnyRef) {
+      lazy val value: AnyRef = compute()
+    }
+    private val lru = new java.util.LinkedHashMap[(String, Any), Cell](
+        16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Any), Cell]): Boolean =
+        size() > Entries
+    }
+    def entries: Int = lru.synchronized(lru.size())
+
+    /** `compute` over `db`'s current catalog, memoized per (version,
+      * `query`); `query` names both the kind of answer and its
+      * arguments. */
+    def apply[V <: AnyRef](db: Db, query: Product)(compute: DataFrame => V): V =
+      db.catalogVersion match {
+        case None => compute(db.catalog)
+        case Some(v) =>
+          lru.synchronized(lru.computeIfAbsent((v, query),
+            _ => new Cell(() => compute(db.catalogAt(v))))).value.asInstanceOf[V]
+      }
+  }
+
+  /** The metrics a glob matches (glob-capped, name-ordered), memoized per
+    * catalog version: a repeated glob resolves with no Spark job, like
+    * the reference's find cache keyed on the query
+    * (plugins/graphite.py:368-371). */
+  def resolve(db: Db, glob: String,
+      maxMetrics: Int = 5000): IndexedSeq[TimeSeriesReader.Matched] =
+    CatalogMemo(db, ("match", glob, maxMetrics))(
+      TimeSeriesReader.resolve(_, glob, maxMetrics))
+
+  /** graphite-web's find_nodes — (name, is_leaf), ordered — memoized per
+    * catalog version like [[resolve]]. */
+  def findNodes(db: Db, glob: String): IndexedSeq[(String, Boolean)] =
+    CatalogMemo(db, ("nodes", glob))(
+      TimeSeriesReader.findNodes(_, glob).collect().toIndexedSeq
+        .map(r => (r.getString(0), r.getBoolean(1))))
+
+  /** One metric's catalog row (name, id, aggregator, retention,
+    * updated_on), memoized per catalog version like [[resolve]]. */
+  def metricInfo(db: Db, name: String): Option[org.apache.spark.sql.Row] =
+    CatalogMemo(db, ("metric", name))(_.filter(col("name") === name)
+      .select("name", "id", "aggregator", "retention", "updated_on")
+      .collect().headOption)
+
   /** Read dense series for every metric matching the glob
-    * (cli/command_read.py:73-147) — one planned scan per retention class,
-    * not one plan per metric (TimeSeriesReader.findAndFetchPlanned).
-    * `maxDataPoints > 0` consolidates server-side (graphite-web's
-    * maxDataPoints), applying xFilesFactor when the catalog carries it.
-    * `nowS` is the instant stage selection measures age from; without
-    * one, the window end stands in for it. Rows come back unordered. */
+    * (cli/command_read.py:73-147): the memoized [[resolve]], then one
+    * planned fetch ([[TimeSeriesReader.fetchMatched]]) that reduces in
+    * Spark, collects once and densifies on the driver, filling empty
+    * slots from the carbon spool backlog. `maxDataPoints > 0`
+    * consolidates server-side (graphite-web's maxDataPoints), applying
+    * xFilesFactor when the catalog carries it. `nowS` is the instant
+    * stage selection measures age from; without one, the window end
+    * stands in for it. Returns a local relation ordered by (name, ts)
+    * within each retention class. */
   def read(db: Db, glob: String, startS: Long, endS: Long,
       maxDataPoints: Int = 0, nowS: Option[Long] = None): DataFrame = {
-    val cold = TimeSeriesReader.findAndFetchPlanned(db.spark, db.catalog,
-      db.pointsPath, glob, startS, endS, nowS = nowS.getOrElse(endS),
-      maxDataPoints = maxDataPoints)
-    hotOverlay(db, cold, glob, startS, endS)
+    val matched = resolve(db, glob)
+    TimeSeriesReader.fetchMatched(db.spark, matched, db.pointsPath, startS,
+      endS, nowS.getOrElse(endS), maxDataPoints,
+      hot = spoolBacklog(db, matched, startS, endS))
   }
 
   /** Carbonlink parity (plugins/graphite.py:196-205): the read face
     * FILLS empty spine slots from the carbon daemon's unflushed points —
     * here the spool backlog the streaming job hasn't drained yet (the
     * drain deletes consumed files, so the spool is the in-flight set).
-    * Backlog lines are LWW-resolved per (metric, stage0 step) by
-    * LATEST RAW TS (arrival order only breaks exact-duplicate-ts
-    * ties), the same rule the ingest's in-batch LWW and the batch
-    * downsampler apply, so a slot answers the same whether its point
-    * is still hot or already durable. Durable data WINS over the backlog: the spool cleaner is
-    * asynchronous, and a lingering already-drained file must never
-    * shadow a newer durable value. Slots the backlog can't hit
-    * (coarser consolidated spines) keep the durable value, same as
-    * carbonlink's grain mismatch. A db with no spool (no daemon) pays
-    * one file-exists check. */
-  private def hotOverlay(db: Db, cold: DataFrame, glob: String,
-      startS: Long, endS: Long): DataFrame = {
+    * Returns the backlog of the matched metrics as (name, stage0 step) →
+    * value. Lines are LWW-resolved per (metric, stage0 step) by LATEST
+    * RAW TS (arrival order only breaks exact-duplicate-ts ties), the
+    * same rule the ingest's in-batch LWW and the batch downsampler
+    * apply, so a slot answers the same whether its point is still hot or
+    * already durable. The fetch lets durable data WIN over the backlog:
+    * the spool cleaner is asynchronous, and a lingering already-drained
+    * file must never shadow a newer durable value. Slots the backlog
+    * can't hit (coarser consolidated spines) keep the durable value,
+    * same as carbonlink's grain mismatch. A db with no spool (no daemon)
+    * pays one file-exists check. */
+  private def spoolBacklog(db: Db, matched: Seq[TimeSeriesReader.Matched],
+      startS: Long, endS: Long): Map[(String, Long), Double] = {
     val spoolDir = new java.io.File(s"${db.dir}/carbon_spool")
     val files = Option(spoolDir.listFiles(
         (_: java.io.File, n: String) => n.startsWith("batch-")))
       .getOrElse(Array.empty[java.io.File])
-    if (files.isEmpty) return cold
-    // the drain deletes consumed files CONCURRENTLY with this lazy
-    // scan — a listed file may be gone by execution time, which is the
-    // normal operating state, not an error
-    val raw = graft.streaming.StreamingIngest.parseCarbonLines(
-      db.spark.read.option("ignoreMissingFiles", "true")
-        .text(files.map(_.getPath): _*))
-    val metrics = MetricCatalog.globMetrics(db.catalog, glob)
-      .select(col("name"), col("retention"))
-    val hot = raw.toDF()
-      // scan order = file listing order then line order, the same order
-      // the streaming drain feeds its in-batch LWW
-      .withColumn("__seq", monotonically_increasing_id())
-      .withColumnRenamed("metric", "name")
-      .join(broadcast(metrics), Seq("name"))
-      // backlog points are by nature stage0-recent: snap to the
-      // metric's own stage0 precision (first stage of its retention)
-      .withColumn("__prec",
-        regexp_extract(col("retention"), "^\\d+\\*(\\d+)s", 1).cast("long"))
-      .withColumn("__step",
-        (col("ts") / col("__prec")).cast("long") * col("__prec"))
-      .filter(col("__step") >= startS && col("__step") < endS)
-    val w = Window.partitionBy("name", "__step")
-      .orderBy(col("ts").desc, col("__seq").desc)
-    val lww = hot.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("name"), col("__step").as("ts"), col("value").as("__hot"))
-    val cols = cold.columns.toSeq
-    cold.join(lww, Seq("name", "ts"), "left")
-      .withColumn("value", coalesce(col("value"), col("__hot")))
-      .select(cols.map(col): _*)
+    if (files.isEmpty || matched.isEmpty) return Map.empty
+    // backlog points are by nature stage0-recent: snap to the metric's
+    // own stage0 precision (first stage of its retention)
+    val precision = matched.map(m =>
+      m.name -> Retention.fromString(m.retention).stage0.precisionS).toMap
+    // the drain deletes consumed files CONCURRENTLY with this scan — a
+    // listed file may be gone by execution time, which is the normal
+    // operating state, not an error. Collected order is Spark's scan
+    // order (file by file, line by line), the order the streaming
+    // drain's in-batch LWW numbers its rows in
+    val lines = graft.streaming.StreamingIngest.parseCarbonLines(
+        db.spark.read.option("ignoreMissingFiles", "true")
+          .text(files.map(_.getPath): _*))
+      .filter(col("metric").isin(precision.keys.toSeq: _*))
+      .select("metric", "ts", "value").collect()
+    val latest = scala.collection.mutable.HashMap.empty[(String, Long), (Long, Double)]
+    lines.foreach { r =>
+      val (name, ts, v) = (r.getString(0), r.getLong(1), r.getDouble(2))
+      val prec = precision(name)
+      val step = (ts.toDouble / prec).toLong * prec
+      // a later line wins a raw-ts tie
+      if (step >= startS && step < endS &&
+          latest.get((name, step)).forall(_._1 <= ts))
+        latest((name, step)) = (ts, v)
+    }
+    latest.map { case (k, (_, v)) => k -> v }.toMap
   }
 
   /** The render API surface over the planned read: apply a graphite-style

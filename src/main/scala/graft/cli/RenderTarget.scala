@@ -301,8 +301,7 @@ object RenderTarget {
         // throw the data away (each prefix template re-reads anyway)
         val names = series match {
           case PathNode(glob) =>
-            graft.sources.MetricCatalog.globMetrics(db.catalog, glob)
-              .select("name").collect().map(_.getString(0))
+            Bgutil.resolve(db, glob).map(_.name).toArray
           case other =>
             evalC(db, other, startS, endS, maxDataPoints, ctx)
               .select("name").distinct().collect().map(_.getString(0))

@@ -123,13 +123,17 @@ object Downsample {
     val step = floor(col("ts") / precisionS)
     // max_by over the packed row needs no sort (vs a row_number window)
     // and aggregates partially map-side — the winner per slot is decided
-    // before the shuffle wherever a mapper holds competing writes
+    // before the shuffle wherever a mapper holds competing writes. The
+    // key columns pass through as the grouping keys themselves, not as
+    // struct fields, so a later per-metric grouping still sees the
+    // input's metric_id partitioning and needs no exchange of its own
+    val keys = "metric_id" +: extraKeys
     points
       .withColumn("__row", struct(cols.map(col): _*))
       .groupBy(Seq(col("metric_id"), step.as("__step"))
         ++ extraKeys.map(col): _*)
       .agg(max_by(col("__row"), orderCol).as("__row"))
-      .select(cols.map(c => col(s"__row.$c")): _*)
+      .select(cols.map(c => if (keys.contains(c)) col(c) else col(s"__row.$c")): _*)
   }
 
   /** Derive the `replica` column from a 16-bit `shard` column

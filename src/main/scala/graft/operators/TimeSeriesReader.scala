@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.model.{Metric, Retention, Stage}
 import graft.sources.{MetricCatalog, PointsStore}
@@ -98,67 +99,133 @@ object TimeSeriesReader {
     leaves.unionByName(dirs).orderBy("name", "is_leaf")
   }
 
-  /** Planned multi-metric read — the full find+fetch lifecycle
-    * (plugins/graphite.py:365-412,142-225) as ONE scan per retention class:
-    * resolve the glob, group the matched metrics by retention driver-side
-    * (the match list is bounded by the glob cap, so this is planning
-    * metadata, not data), pick the stage + aligned window per retention
-    * (metric.py:593-623), then run a single pruned scan + pointGrouper +
-    * dense spine per group. Plan fan-out = #distinct retentions (typically
-    * a handful), never #metrics — a glob matching 5,000 metrics is still
-    * one scan, unlike a per-metric plan/union loop.
-    *
-    * The points move through ONE exchange: the scan is hash-partitioned by
-    * metric_id, which every later grouping (batch_seq last-write-wins,
-    * both pointGrouper aggregations, the per-metric slot fold) already
-    * satisfies. The aggregator and xFilesFactor ride as literals keyed on
-    * metric_id instead of a join. Rows come back in no particular order;
-    * consumers that print sort for themselves.
-    *
-    * Every found leaf gets a dense vector — metrics with no points in the
-    * window come back all-null (plugins/graphite.py:182-219). */
-  def findAndFetchPlanned(spark: SparkSession, catalog: DataFrame,
-      baseDir: String, glob: String, startS: Long, endS: Long,
-      nowS: Long, maxMetrics: Int = 5000, maxDataPoints: Int = 0): DataFrame = {
-    import spark.implicits._
+  /** One metric a glob matched: the catalog columns a fetch plans with.
+    * `xff` is set when the catalog carries an xFilesFactor column. */
+  final case class Matched(name: String, id: String, aggregator: String,
+      retention: String, xff: Option[Double])
+
+  /** Resolve a glob against the catalog — graphite's find
+    * (plugins/graphite.py:365-412) — into the glob-capped, name-ordered
+    * match list a fetch plans with: one catalog job. */
+  def resolve(catalog: DataFrame, glob: String,
+      maxMetrics: Int = 5000): IndexedSeq[Matched] = {
     val hasXff = catalog.columns.contains("xfilesfactor")
     val cols = Seq("name", "id", "aggregator", "retention") ++
       (if (hasXff) Seq("xfilesfactor") else Nil)
-    val matched = MetricCatalog.globMetrics(catalog, glob, maxMetrics)
-      .select(cols.map(col): _*).collect()
+    MetricCatalog.globMetrics(catalog, glob, maxMetrics)
+      .select(cols.map(col): _*).collect().toIndexedSeq
+      .map(r => Matched(r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), if (hasXff) Some(r.getAs[Double](4)) else None))
+  }
+
+  /** Planned multi-metric read — the full find+fetch lifecycle
+    * (plugins/graphite.py:365-412,142-225): [[resolve]], then
+    * [[fetchMatched]]. */
+  def findAndFetchPlanned(spark: SparkSession, catalog: DataFrame,
+      baseDir: String, glob: String, startS: Long, endS: Long,
+      nowS: Long, maxMetrics: Int = 5000, maxDataPoints: Int = 0): DataFrame =
+    fetchMatched(spark, resolve(catalog, glob, maxMetrics), baseDir, startS,
+      endS, nowS, maxDataPoints)
+
+  /** The rows every read returns: one per (name, ts) slot. */
+  val SeriesSchema: StructType = StructType(Seq(
+    StructField("name", StringType),
+    StructField("ts", LongType, nullable = false),
+    StructField("value", DoubleType)))
+
+  /** Fetch the dense series of resolved metrics. The matched metrics are
+    * grouped by retention driver-side (the match list is bounded by the
+    * glob cap, so this is planning metadata, not data); each retention
+    * class picks its stage + aligned window (metric.py:593-623) and runs
+    * ONE pruned scan + [[Downsample.pointGrouper]], so plan fan-out is
+    * #distinct retentions, never #metrics.
+    *
+    * Spark does every data reduction: the scan is hash-partitioned by
+    * metric_id once, which the batch_seq last-write-wins merge and both
+    * pointGrouper aggregations share; aggregator and xFilesFactor ride as
+    * literals keyed on metric_id. The grouped (metric_id, ts, value) rows
+    * of every class are collected in one result job, and each matched
+    * metric is then densified on the driver against its class's spine —
+    * a slot per step, null where no point, ts-ordered — the way the
+    * reference's read_points builds its arrays in the web process
+    * (plugins/graphite.py:182-219). Every matched leaf gets a vector, so
+    * a metric with no points in the window comes back all-null.
+    *
+    * `hot` fills slots the durable store leaves null, keyed by (name,
+    * ts) — carbonlink's merge (plugins/graphite.py:196-205); durable
+    * values always win.
+    *
+    * The result is a local relation per retention class (one class:
+    * collecting it runs no job), each ordered by (name, ts). */
+  def fetchMatched(spark: SparkSession, matched: Seq[Matched],
+      baseDir: String, startS: Long, endS: Long, nowS: Long,
+      maxDataPoints: Int = 0,
+      hot: Map[(String, Long), Double] = Map.empty): DataFrame = {
     if (matched.isEmpty)
-      return Seq.empty[(String, Long, Double)].toDF("name", "ts", "value")
-    val groups = matched.groupBy(_.getAs[String]("retention")).toSeq.sortBy(_._1)
-    groups.map { case (retStr, rows) =>
-      val p = planConsolidated(Retention.fromString(retStr), startS, endS,
-        nowS, maxDataPoints)
-      val clampedStart = math.max(p.startS, p.endS - p.stage.durationS)
-      val metas = rows.toSeq.map(r => (r.getAs[String]("id"),
-        r.getAs[String]("name"), r.getAs[String]("aggregator"),
-        if (hasXff) r.getAs[Double]("xfilesfactor") else 0.0))
-      // consolidation (step > stage precision) is where xFilesFactor
-      // bites: under-filled coarse windows come back NaN when the
-      // catalog carries a factor (whisper consolidation semantics)
-      val xffSrc =
-        if (hasXff && p.stepS > p.stage.precisionS) Some(p.stage.precisionS)
-        else None
-      val scan = PointsStore
-        .read(spark, baseDir, p.stage, clampedStart, p.endS, metas.map(_._1),
-          byMetric = true)
-        .withColumn("aggregator", perMetric(metas.map(m => (m._1, m._3))))
-        .withColumn("xff", perMetric(metas.map(m => (m._1, m._4))))
-      // consolidated windows anchor at the (stage-aligned) window start,
-      // which need not be a multiple of the widened step: shift to a
-      // start-relative timeline for the grouping, shift back after —
-      // pointGrouper itself stays absolute-aligned for plain reads
-      val series =
-        if (p.stepS > p.stage.precisionS)
-          Downsample.pointGrouper(
-              scan.withColumn("ts", col("ts") - p.startS), p.stepS, xffSrc)
-            .withColumn("ts", col("ts") + p.startS)
-        else Downsample.pointGrouper(scan, p.stepS, xffSrc)
-      densify(series, metas.map(m => (m._1, m._2)).toDF("metric_id", "name"), p)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](), SeriesSchema)
+    val classes = matched.groupBy(_.retention).toSeq.sortBy(_._1).map {
+      case (retStr, ms) =>
+        val p = planConsolidated(Retention.fromString(retStr), startS, endS,
+          nowS, maxDataPoints)
+        (p, ms, grouped(spark, baseDir, ms, p))
+    }
+    // one collect for every class's grouped points
+    val byId = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.LongMap[java.lang.Double]]
+    classes.map(_._3).reduce(_ unionByName _).collect().foreach { r =>
+      byId.getOrElseUpdate(r.getString(0),
+        scala.collection.mutable.LongMap.empty[java.lang.Double])
+        .update(r.getLong(1), if (r.isNullAt(2)) null else r.getDouble(2))
+    }
+    val none = scala.collection.mutable.LongMap.empty[java.lang.Double]
+    classes.map { case (p, ms, _) =>
+      val rows = new java.util.ArrayList[Row]()
+      for (m <- ms) {
+        val pts = byId.getOrElse(m.id, none)
+        var ts = p.startS
+        while (ts < p.endS) {
+          val v = pts.getOrNull(ts) match {
+            case null if hot.nonEmpty =>
+              hot.get((m.name, ts)).map(Double.box).orNull
+            case d => d
+          }
+          rows.add(Row(m.name, ts, v))
+          ts += p.stepS
+        }
+      }
+      spark.createDataFrame(rows, SeriesSchema)
     }.reduce(_ unionByName _)
+  }
+
+  /** One retention class's grouped points in the plan's window:
+    * (metric_id, ts, value) rows, at most one per slot. */
+  private def grouped(spark: SparkSession, baseDir: String,
+      ms: Seq[Matched], p: FetchPlan): DataFrame = {
+    val clampedStart = math.max(p.startS, p.endS - p.stage.durationS)
+    // consolidation (step > stage precision) is where xFilesFactor
+    // bites: under-filled coarse windows come back NaN when the
+    // catalog carries a factor (whisper consolidation semantics)
+    val hasXff = ms.exists(_.xff.isDefined)
+    val xffSrc =
+      if (hasXff && p.stepS > p.stage.precisionS) Some(p.stage.precisionS)
+      else None
+    val scan = PointsStore
+      .read(spark, baseDir, p.stage, clampedStart, p.endS, ms.map(_.id),
+        byMetric = true)
+      .withColumn("aggregator", perMetric(ms.map(m => (m.id, m.aggregator))))
+      .withColumn("xff", perMetric(ms.map(m => (m.id, m.xff.getOrElse(0.0)))))
+    // consolidated windows anchor at the (stage-aligned) window start,
+    // which need not be a multiple of the widened step: shift to a
+    // start-relative timeline for the grouping, shift back after —
+    // pointGrouper itself stays absolute-aligned for plain reads
+    val series =
+      if (p.stepS > p.stage.precisionS)
+        Downsample.pointGrouper(
+            scan.withColumn("ts", col("ts") - p.startS), p.stepS, xffSrc)
+          .withColumn("ts", col("ts") + p.startS)
+      else Downsample.pointGrouper(scan, p.stepS, xffSrc)
+    series.filter(col("ts") >= p.startS && col("ts") < p.endS)
+      .select("metric_id", "ts", "value")
   }
 
   /** A per-metric attribute as an expression over metric_id: one literal
@@ -172,29 +239,5 @@ object TimeSeriesReader {
     byValue.tail.foldLeft(lit(byValue.head._1)) { case (rest, (v, ids)) =>
       when(col("metric_id").isin(ids: _*), lit(v)).otherwise(rest)
     }
-  }
-
-  /** Dense vectors: every metric of `names` gets one row per slot of the
-    * plan's spine, null where the grouped `series` has no point
-    * (plugins/graphite.py:182-219). `series` is clustered by metric_id,
-    * so folding each metric's points into one array needs no exchange;
-    * the missing slots come from a hashed set difference against the
-    * spine, and one sort per metric orders its slots by ts. */
-  private def densify(series: DataFrame, names: DataFrame,
-      p: FetchPlan): DataFrame = {
-    val slotType = "array<struct<ts:bigint,value:double>>"
-    val folded = series
-      .filter(col("ts") >= p.startS && col("ts") < p.endS)
-      .groupBy("metric_id")
-      .agg(collect_list(struct(col("ts"), col("value"))).as("__pts"))
-    val spine =
-      if (p.endS > p.startS) sequence(lit(p.startS), lit(p.endS - 1), lit(p.stepS))
-      else array().cast("array<bigint>")
-    val pts = coalesce(col("__pts"), array().cast(slotType))
-    val empty = transform(array_except(spine, transform(pts, _.getField("ts"))),
-      t => struct(t.as("ts"), lit(null).cast("double").as("value")))
-    names.join(folded, Seq("metric_id"), "left")
-      .select(col("name"), explode(array_sort(concat(pts, empty))).as("__s"))
-      .select(col("name"), col("__s.ts").as("ts"), col("__s.value").as("value"))
   }
 }

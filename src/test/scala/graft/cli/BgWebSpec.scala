@@ -192,6 +192,28 @@ class BgWebSpec extends SparkSuite {
     } finally server.stop(0)
   }
 
+  test("repeated identical /render and /metrics/find requests reply byte-identically") {
+    val db = freshDb()
+    Bgutil.write(db, "sys.cpu.1.load", 120L, 9.0, "60*60s:24*3600s", "average")
+    val server = BgWeb.build(db, 0)
+    server.start()
+    val port = server.getAddress.getPort
+    def twice(path: String): Unit = {
+      val first = get(s"http://localhost:$port$path")
+      assert(first._1 === 200, first._2)
+      assert(get(s"http://localhost:$port$path") === first, path)
+    }
+    try {
+      twice("/render?target=sys.cpu.0.load&from=120&until=240")
+      twice("/render?target=" + java.net.URLEncoder.encode(
+        "sortByMaxima(sys.*.*.*)", "UTF-8") + "&from=120&until=240&format=raw")
+      twice("/metrics/find?query=sys.*")
+      twice("/metrics/find?query=sys.cpu.*.load")
+      twice("/metrics/expand?query=sys.**")
+      twice("/api/biggraphite/metric/sys.cpu.1.load")
+    } finally server.stop(0)
+  }
+
   test("web: no non-daemon thread outlives a started and stopped server") {
     import scala.jdk.CollectionConverters._
     def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala

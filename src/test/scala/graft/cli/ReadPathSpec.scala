@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions.{col, lit}
 import graft.SparkSuite
 import graft.cli.Bgutil.Db
 import graft.model.Retention
-import graft.sources.PointsStore
+import graft.sources.{MetricCatalog, PointsStore}
 
-/** The planned read's job budget, and the freshness of the schemas it
-  * no longer infers on every request. */
+/** The planned read's job budget, the freshness of the schemas it no
+  * longer infers on every request, and the per-catalog-version memo of
+  * glob matches. */
 class ReadPathSpec extends SparkSuite {
 
   /** Spark jobs started by `body`, counted by a listener. */
@@ -80,5 +81,161 @@ class ReadPathSpec extends SparkSuite {
       db.pointsPath, stage0, writeSalt = 1)
     assert(series(db, "m.a", 0L, 180L) ===
       Seq((0L, None), (60L, Some(7.0)), (120L, None)))
+  }
+
+  private def names(db: Db, glob: String): Set[String] =
+    Bgutil.read(db, glob, 0L, 180L).collect().map(_.getString(0)).toSet
+
+  test("a warm single-series read: at most 2 jobs on a repeated glob, 3 on a new one") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("readjobs2").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db,
+      (0 until 120).flatMap(i => Seq(("sys.cpu.0.load", i * 60L, i.toDouble),
+        ("sys.cpu.1.load", i * 60L, 2.0 * i))),
+      "1440*60s:720*3600s", "average")
+    def readOnce(glob: String): Int = Bgutil.read(db, glob, 0L, 7200L).collect().length
+    assert(readOnce("sys.cpu.0.load") === 120) // cold: infers the schemas
+    // repeated glob: the memo answers the resolve; the points exchange
+    // and the one result collect remain
+    val warm = jobsOf { assert(readOnce("sys.cpu.0.load") === 120) }
+    assert(warm <= 2, s"a warm repeated-glob read ran $warm Spark jobs")
+    // a glob not seen before adds its one catalog job
+    val fresh = jobsOf { assert(readOnce("sys.cpu.0.loa*") === 120) }
+    assert(fresh <= 3, s"a warm new-glob read ran $fresh Spark jobs")
+  }
+
+  /** A store holding one metric with a plain point at 120060 (bucket
+    * 120000). */
+  private def plainStore(prefix: String, name: String): Db = {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory(prefix).toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, Seq((name, 120060L, 1.0)), "10000*60s", "average")
+    db
+  }
+
+  /** Two streaming-style re-emissions of `name`'s slot 60 (bucket 0,
+    * whose files sort first, so the store's schema carries batch_seq);
+    * batch 2 wins. No catalog commit. */
+  private def appendSeq(db: Db, name: String): Unit = {
+    val id = Bgutil.resolve(db, name).head.id
+    import spark.implicits._
+    PointsStore.write(Seq((60L, 5.0, 1L), (60L, 7.0, 2L)).toDF("ts", "value", "batch_seq")
+      .select(lit(id).as("metric_id"), col("ts"), col("value"),
+        lit(1.0).as("count"), lit(0).as("replica"), col("batch_seq")),
+      db.pointsPath, Retention.fromString("10000*60s").stage0, writeSalt = 1)
+  }
+
+  test("a warm read of a store carrying batch_seq shuffles the points once") {
+    val db = plainStore("readseq", "q.a")
+    appendSeq(db, "q.a")
+    def readOnce(): Seq[(Long, Option[Double])] = series(db, "q.a", 0L, 180L)
+    val want = Seq((0L, None), (60L, Some(7.0)), (120L, None))
+    assert(readOnce() === want)
+    // the last-write-wins merge keeps the metric_id partitioning, so
+    // pointGrouper adds no exchange: the points exchange and the result
+    val jobs = jobsOf { assert(readOnce() === want) }
+    assert(jobs <= 2, s"a warm batch_seq read ran $jobs Spark jobs")
+  }
+
+  test("a repeated resolve runs no Spark job") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("resolve0").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, Seq(("r.a", 60L, 1.0), ("r.b", 60L, 2.0)),
+      "10000*60s", "average")
+    val first = Bgutil.resolve(db, "r.*")
+    assert(first.map(_.name) === Seq("r.a", "r.b"))
+    var again: Seq[graft.operators.TimeSeriesReader.Matched] = Nil
+    assert(jobsOf { again = Bgutil.resolve(db, "r.*") } === 0)
+    assert(again === first)
+  }
+
+  test("a catalog commit is a new memo key: the next read sees a new name") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("memofresh").toString)
+    Bgutil.syncdb(db)
+    val retention = "10000*60s"
+    Bgutil.writePoints(db, Seq(("n.a", 60L, 1.0)), retention, "average")
+    assert(names(db, "n.*") === Set("n.a"))
+    val before = db.catalogVersion
+    Bgutil.writePoints(db, Seq(("n.b", 60L, 2.0)), retention, "average")
+    assert(db.catalogVersion !== before)
+    assert(names(db, "n.*") === Set("n.a", "n.b"))
+  }
+
+  test("points are never memoized: appends and compaction show on the next read") {
+    val db = plainStore("memopoints", "p.a")
+    val version = db.catalogVersion
+    assert(series(db, "p.*", 0L, 180L) === Seq((0L, None), (60L, None), (120L, None)))
+    // an append on the same catalog version: the memoized glob reads it
+    appendSeq(db, "p.a")
+    val appended = Seq((0L, None), (60L, Some(7.0)), (120L, None))
+    assert(series(db, "p.*", 0L, 180L) === appended)
+    Bgutil.compact(db)
+    assert(db.catalogVersion === version)
+    assert(series(db, "p.*", 0L, 180L) === appended)
+    assert(series(db, "p.*", 120000L, 120180L) ===
+      Seq((120000L, None), (120060L, Some(1.0)), (120120L, None)))
+  }
+
+  test("a legacy unversioned catalog, rewritten in place, is not memoized") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memolegacy").toString
+    val db = Db(spark, dir)
+    def writeCatalog(ns: String*): Unit =
+      MetricCatalog.withMetricId(MetricCatalog.withDerivedColumns(ns.toDF("name")))
+        .withColumn("aggregator", lit("average"))
+        .withColumn("retention", lit("10000*60s"))
+        .withColumn("updated_on", lit(0L))
+        .write.mode("overwrite").parquet(s"$dir/catalog")
+    writeCatalog("l.a")
+    assert(db.catalogVersion === None)
+    val entries = Bgutil.CatalogMemo.entries
+    assert(Bgutil.resolve(db, "l.*").map(_.name) === Seq("l.a"))
+    assert(Bgutil.CatalogMemo.entries === entries)
+    writeCatalog("l.a", "l.b")
+    assert(Bgutil.resolve(db, "l.*").map(_.name) === Seq("l.a", "l.b"))
+  }
+
+  test("the catalog memo is a bounded LRU") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("memolru").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, Seq(("e.a", 60L, 1.0)), "10000*60s", "average")
+    // Entries + 1 distinct globs, each matching e.a
+    val globs = (0 to Bgutil.CatalogMemo.Entries).map(i => s"e.{a,x$i}")
+    globs.foreach(g => assert(Bgutil.resolve(db, g).map(_.name) === Seq("e.a")))
+    assert(Bgutil.CatalogMemo.entries === Bgutil.CatalogMemo.Entries)
+    // the least recently used glob was evicted: resolving it scans again
+    assert(jobsOf(Bgutil.resolve(db, globs.head)) === 1)
+    // the most recently used one is still held
+    assert(jobsOf(Bgutil.resolve(db, globs.last)) === 0)
+  }
+
+  test("a durable slot beats a lingering spool backlog line") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.model.{Aggregator, MetricMetadata}
+    import graft.streaming.CarbonListener
+    val dir = java.nio.file.Files.createTempDirectory("hotlinger").toString
+    val db = Db(spark, dir)
+    Bgutil.syncdb(db)
+    val spool = java.nio.file.Paths.get(dir, "carbon_spool")
+    java.nio.file.Files.createDirectories(spool)
+    val meta = MetricMetadata(Aggregator.Average, Retention.fromString("60*60s:24*3600s"))
+    def spoolWrite(file: String, lines: String): Unit =
+      java.nio.file.Files.writeString(spool.resolve(file), lines)
+    def drain(): Unit =
+      CarbonListener.ingestFromSpool(spark, spool.toString, db.pointsPath,
+          s"$dir/ckpt", _ => meta, autoCreate = Some(db.catalogStore))
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    spoolWrite("batch-0.txt", "h.m 1.0 60\n")
+    drain()
+    spoolWrite("batch-1.txt", "h.m 5.0 65\n")
+    drain()
+    assert(series(db, "h.m", 60L, 180L) === Seq((60L, Some(5.0)), (120L, None)))
+    // a lingering file (the spool cleaner is asynchronous) holds a line
+    // for the durable slot with a later raw ts than the durable point's:
+    // it must not shadow the durable value. An undrained file fills the
+    // empty slot, a raw-ts tie going to the later line
+    spoolWrite("batch-0.txt", "h.m 1.0 119\n")
+    spoolWrite("batch-2.txt", "h.m 2.0 125\nh.m 6.0 125\n")
+    assert(series(db, "h.m", 60L, 180L) === Seq((60L, Some(5.0)), (120L, Some(6.0))))
   }
 }
