@@ -529,7 +529,8 @@ object Bgutil {
     val Entries = 64
     /** One answer, computed once: a request of a key being computed
       * waits for it (a dashboard sends the same glob from several
-      * panels at once). A failed computation is retried by the next. */
+      * panels at once). A failed computation (an invalid glob) leaves no
+      * entry behind. */
     private final class Cell(compute: () => AnyRef) {
       lazy val value: AnyRef = compute()
     }
@@ -548,8 +549,11 @@ object Bgutil {
       db.catalogVersion match {
         case None => compute(db.catalog)
         case Some(v) =>
-          lru.synchronized(lru.computeIfAbsent((v, query),
-            _ => new Cell(() => compute(db.catalogAt(v))))).value.asInstanceOf[V]
+          val key = (v, query)
+          val cell = lru.synchronized(lru.computeIfAbsent(key,
+            _ => new Cell(() => compute(db.catalogAt(v)))))
+          try cell.value.asInstanceOf[V]
+          catch { case e: Throwable => lru.synchronized(lru.remove(key, cell)); throw e }
       }
   }
 
@@ -584,8 +588,7 @@ object Bgutil {
     * consolidates server-side (graphite-web's maxDataPoints), applying
     * xFilesFactor when the catalog carries it. `nowS` is the instant
     * stage selection measures age from; without one, the window end
-    * stands in for it. Returns a local relation ordered by (name, ts)
-    * within each retention class. */
+    * stands in for it. Rows come back unordered. */
   def read(db: Db, glob: String, startS: Long, endS: Long,
       maxDataPoints: Int = 0, nowS: Option[Long] = None): DataFrame = {
     val matched = resolve(db, glob)
@@ -624,11 +627,15 @@ object Bgutil {
     // listed file may be gone by execution time, which is the normal
     // operating state, not an error. Collected order is Spark's scan
     // order (file by file, line by line), the order the streaming
-    // drain's in-batch LWW numbers its rows in
+    // drain's in-batch LWW numbers its rows in. Only lines whose raw ts
+    // can snap into the window reach the driver: a step lies within one
+    // precision of its points
+    val maxPrec = precision.values.max
     val lines = graft.streaming.StreamingIngest.parseCarbonLines(
         db.spark.read.option("ignoreMissingFiles", "true")
           .text(files.map(_.getPath): _*))
-      .filter(col("metric").isin(precision.keys.toSeq: _*))
+      .filter(col("metric").isin(precision.keys.toSeq: _*) &&
+        col("ts") > startS - maxPrec && col("ts") < endS + maxPrec)
       .select("metric", "ts", "value").collect()
     val latest = scala.collection.mutable.HashMap.empty[(String, Long), (Long, Double)]
     lines.foreach { r =>

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import graft.SparkSuite
 import graft.cli.Bgutil.Db
 import graft.model.Retention
+import graft.operators.TimeSeriesReader
 import graft.sources.{MetricCatalog, PointsStore}
 
 /** The planned read's job budget, the freshness of the schemas it no
@@ -86,7 +87,7 @@ class ReadPathSpec extends SparkSuite {
   private def names(db: Db, glob: String): Set[String] =
     Bgutil.read(db, glob, 0L, 180L).collect().map(_.getString(0)).toSet
 
-  test("a warm single-series read: at most 2 jobs on a repeated glob, 3 on a new one") {
+  test("a warm single-series read: at most 3 jobs on a repeated glob, 4 on a new one") {
     val db = Db(spark, java.nio.file.Files.createTempDirectory("readjobs2").toString)
     Bgutil.syncdb(db)
     Bgutil.writePoints(db,
@@ -95,13 +96,14 @@ class ReadPathSpec extends SparkSuite {
       "1440*60s:720*3600s", "average")
     def readOnce(glob: String): Int = Bgutil.read(db, glob, 0L, 7200L).collect().length
     assert(readOnce("sys.cpu.0.load") === 120) // cold: infers the schemas
-    // repeated glob: the memo answers the resolve; the points exchange
-    // and the one result collect remain
+    // repeated glob: the memo answers the resolve; the points exchange,
+    // the one collect of the grouped points and the explode of the
+    // driver-built vectors remain
     val warm = jobsOf { assert(readOnce("sys.cpu.0.load") === 120) }
-    assert(warm <= 2, s"a warm repeated-glob read ran $warm Spark jobs")
+    assert(warm <= 3, s"a warm repeated-glob read ran $warm Spark jobs")
     // a glob not seen before adds its one catalog job
     val fresh = jobsOf { assert(readOnce("sys.cpu.0.loa*") === 120) }
-    assert(fresh <= 3, s"a warm new-glob read ran $fresh Spark jobs")
+    assert(fresh <= 4, s"a warm new-glob read ran $fresh Spark jobs")
   }
 
   /** A store holding one metric with a plain point at 120060 (bucket
@@ -132,9 +134,58 @@ class ReadPathSpec extends SparkSuite {
     val want = Seq((0L, None), (60L, Some(7.0)), (120L, None))
     assert(readOnce() === want)
     // the last-write-wins merge keeps the metric_id partitioning, so
-    // pointGrouper adds no exchange: the points exchange and the result
+    // pointGrouper adds no exchange: the points exchange, the grouped
+    // collect and the explode
     val jobs = jobsOf { assert(readOnce() === want) }
-    assert(jobs <= 2, s"a warm batch_seq read ran $jobs Spark jobs")
+    assert(jobs <= 3, s"a warm batch_seq read ran $jobs Spark jobs")
+  }
+
+  test("the collected grouped points are one planned scan per retention class") {
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("readunion").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, (0 until 12).map(i => (s"u.cpu.$i", 120L, i.toDouble)),
+      "60*60s:24*3600s", "average")
+    Bgutil.writePoints(db, Seq(("u.cpu.12", 120L, 5.0)), "60*60s:24*3600s", "total")
+    def unions(glob: String): Seq[Int] =
+      TimeSeriesReader.groupedPoints(spark, Bgutil.resolve(db, glob), db.pointsPath,
+          120L, 240L, 240L, 0)._2
+        .queryExecution.optimizedPlan.collect { case u: Union => u.children.size }
+    // 13 metrics, mixed aggregators, one retention: no Union at all
+    assert(unions("u.cpu.*") === Nil)
+    // a second retention class: exactly one 2-way Union
+    Bgutil.writePoints(db, Seq(("u.gpu.0", 120L, 1.0), ("u.gpu.1", 150L, 2.0)),
+      "120*30s:24*3600s", "average")
+    assert(unions("u.*.*") === Seq(2))
+  }
+
+  test("the driver holds one vector per metric, not one row per slot") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("readvec").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, (0 until 30).map(i => (s"v.m$i", 60L * i, i.toDouble)),
+      "1440*60s:720*3600s", "average")
+    val q = Bgutil.read(db, "v.*", 0L, 7200L)
+    val held = q.queryExecution.analyzed.collect { case l: LocalRelation => l.data.size }
+    assert(held === Seq(30))
+    assert(q.count() === 30 * 120)
+    // a reducing render over the vectors sums every slot
+    val sum = RenderTarget.render(db, "sumSeries(v.*)", 0L, 7200L).collect()
+      .map(r => (r.getAs[Long]("ts"), Option(r.getAs[java.lang.Double]("value"))))
+      .sortBy(_._1)
+    assert(sum.length === 120)
+    assert(sum.take(30).map(_._2.map(_.doubleValue)).toSeq ===
+      (0 until 30).map(i => Some(i.toDouble)))
+    assert(sum.drop(30).forall(_._2.isEmpty))
+  }
+
+  test("an invalid glob leaves no memo entry") {
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("memobad").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, Seq(("b.a", 60L, 1.0)), "10000*60s", "average")
+    val entries = Bgutil.CatalogMemo.entries
+    intercept[IllegalArgumentException](Bgutil.resolve(db, "b.{a"))
+    assert(Bgutil.CatalogMemo.entries === entries)
   }
 
   test("a repeated resolve runs no Spark job") {
