@@ -70,8 +70,7 @@ object Bench {
   private[graft] val ExtraTaskNames: Seq[String] = Seq(
     "x1_curation_pipeline", "x2_embedding_pipeline",
     "x5_pretrain_prep_pipeline",
-    "bg_glob_3wild", "bg_glob_3wild_v2store", "bg_read_3600_stage0",
-    "bg_read_3600_stage0_v2", "bg_read_3600_stage1",
+    "bg_glob_3wild", "bg_read_3600_stage0", "bg_read_3600_stage1",
     "bg_ingest_1m_points", "bg_ingest_100x1", "bg_curation_stream")
 
   /** FROZEN chunk manifest — which tasks share a measurement JVM. Chunk
@@ -105,7 +104,7 @@ object Bench {
     Seq("h15_top_supplier", "pr4_top_tokens", "pr5_top_tokens_sketch", "r6_phrase_index", "er1_fuzzy_ed_join", "er2_nearest_master", "zo1_zorder_scan", "cd1_scd2_intervals"),
     Seq("cd2_pit_snapshot", "cd3_snapshot_diff", "dq1_expectations"),
     Seq("x1_curation_pipeline", "x2_embedding_pipeline", "x5_pretrain_prep_pipeline"),
-    Seq("bg_glob_3wild", "bg_glob_3wild_v2store", "bg_read_3600_stage0", "bg_read_3600_stage0_v2", "bg_read_3600_stage1", "bg_ingest_1m_points", "bg_ingest_100x1"))
+    Seq("bg_glob_3wild", "bg_read_3600_stage0", "bg_read_3600_stage1", "bg_ingest_1m_points", "bg_ingest_100x1"))
 
   /** The build-then-probe queries whose in-query index/layout build
     * dominates their total (r10 verdict item 6: k8's probe could
@@ -556,9 +555,7 @@ object Bench {
     * which carries every sample). */
   private val BgShort = Map(
     "bg_glob_3wild" -> "bg_glob3",
-    "bg_glob_3wild_v2store" -> "bg_glob3v2",
     "bg_read_3600_stage0" -> "bg_read0",
-    "bg_read_3600_stage0_v2" -> "bg_read0v2",
     "bg_read_3600_stage1" -> "bg_read1",
     "bg_ingest_1m_points" -> "bg_ingest1m",
     "bg_ingest_100x1" -> "bg_ingest100",
@@ -694,6 +691,8 @@ object Bench {
     catalog.count()
     val metric = Metric("toto.tutu.0.tata.0.titi.0.chipiron",
       MetricMetadata(Aggregator.Average, retention))
+    val matched = Seq(TimeSeriesReader.Matched(metric.name, metric.id,
+      metric.aggregator.name, retention.toString, None))
     val storeDir = java.nio.file.Files.createTempDirectory("bgbench").toString
     val pts = (0 until 3600).map(i =>
       (metric.id, i * 60L, i.toDouble, 1.0, 0))
@@ -703,12 +702,6 @@ object Bench {
       Downsample.rollupStage(pts.withColumn("aggregator", lit("average")), 3600)
         .withColumn("replica", lit(0)),
       storeDir, retention.stages(1))
-
-    // stored-catalog variant for the DSv2 source: same 10k names on disk,
-    // read back through graft-catalog so the glob predicates drive
-    // parquet row-group stats pruning (untimed setup)
-    val catalogDir = java.nio.file.Files.createTempDirectory("bgcat").toString
-    catalog.write.mode("overwrite").parquet(catalogDir)
 
     // streaming-curation setup (untimed): a 4-file copy of the sf docs
     // so the file source yields 4 real micro-batches at
@@ -728,24 +721,9 @@ object Bench {
         MetricCatalog.globMetrics(catalog,
           "toto.tutu.*.tata.*.titi.*.chipiron").count(); ()
       }),
-      "bg_glob_3wild_v2store" -> (() => {
-        val stored = spark.read
-          .format(graft.sources.GraftCatalogSource.ShortName).load(catalogDir)
-        MetricCatalog.globMetrics(stored,
-          "toto.tutu.*.tata.*.titi.*.chipiron").count(); ()
-      }),
       "bg_read_3600_stage0" -> (() => {
-        TimeSeriesReader.fetchSeries(spark, storeDir, metric,
+        TimeSeriesReader.fetchMatched(spark, matched, storeDir,
           0L, 3600 * 60L, nowS = 3600 * 60L).count(); ()
-      }),
-      // same single-series fetch through the DSv2 points reader: bucket
-      // dirs pruned at plan time + metric_id/ts row-group pruning in-file
-      "bg_read_3600_stage0_v2" -> (() => {
-        spark.conf.set("spark.graft.points.v2", "true")
-        try TimeSeriesReader.fetchSeries(spark, storeDir, metric,
-          0L, 3600 * 60L, nowS = 3600 * 60L).count()
-        finally spark.conf.set("spark.graft.points.v2", "false")
-        ()
       }),
       "bg_read_3600_stage1" -> (() => {
         val rows = PointsStore.read(spark, storeDir, retention.stages(1),

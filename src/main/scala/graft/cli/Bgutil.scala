@@ -36,16 +36,10 @@ object Bgutil {
     def catalogPath: String = catalogVersion.getOrElse(s"$dir/catalog")
     def pointsPath = s"$dir/points"
     def catalog: DataFrame = catalogAt(catalogPath)
-    /** The catalog stored at `path`. `spark.graft.catalog.v2=true` reads
-      * it through the [[graft.sources.GraftCatalogSource]] DSv2 reader
-      * (explicit row-group stats pruning on the glob columns) instead of
-      * the generic parquet source. Same rows either way. A committed
-      * version is never rewritten, so its schema is inferred once. */
+    /** The catalog stored at `path`. A committed version is never
+      * rewritten, so its schema is inferred once. */
     def catalogAt(path: String): DataFrame =
-      if (spark.conf.getOption("spark.graft.catalog.v2").contains("true"))
-        spark.read.format(graft.sources.GraftCatalogSource.ShortName)
-          .load(path)
-      else graft.sources.InferredSchemas.parquet(spark, path, s"$dir/catalog")
+      graft.sources.InferredSchemas.parquet(spark, path, s"$dir/catalog")
     def points: DataFrame = spark.read.parquet(pointsPath)
     def hasCatalog: Boolean = new java.io.File(catalogPath).exists()
 
@@ -599,19 +593,20 @@ object Bgutil {
 
   /** Carbonlink parity (plugins/graphite.py:196-205): the read face
     * FILLS empty spine slots from the carbon daemon's unflushed points —
-    * here the spool backlog the streaming job hasn't drained yet (the
-    * drain deletes consumed files, so the spool is the in-flight set).
-    * Returns the backlog of the matched metrics as (name, stage0 step) →
-    * value. Lines are LWW-resolved per (metric, stage0 step) by LATEST
-    * RAW TS (arrival order only breaks exact-duplicate-ts ties), the
-    * same rule the ingest's in-batch LWW and the batch downsampler
-    * apply, so a slot answers the same whether its point is still hot or
-    * already durable. The fetch lets durable data WIN over the backlog:
-    * the spool cleaner is asynchronous, and a lingering already-drained
-    * file must never shadow a newer durable value. Slots the backlog
-    * can't hit (coarser consolidated spines) keep the durable value,
-    * same as carbonlink's grain mismatch. A db with no spool (no daemon)
-    * pays one file-exists check. */
+    * here the carbon spool. It holds the backlog the streaming job hasn't
+    * drained yet AND drained files its asynchronous cleaner has not
+    * deleted yet: a drained file can linger well after its batch
+    * committed. Returns the spool lines of the matched metrics as (name,
+    * stage0 step) → value. Lines are LWW-resolved per (metric, stage0
+    * step) by LATEST RAW TS (arrival order only breaks exact-duplicate-ts
+    * ties), the same rule the ingest's in-batch LWW and the batch
+    * downsampler apply, so a slot answers the same whether its point is
+    * still hot or already durable. The fetch lets durable values WIN over
+    * the spool, so a lingering already-drained line never shadows a newer
+    * durable value. Slots the spool can't hit (coarser consolidated
+    * spines) keep the durable value, same as carbonlink's grain
+    * mismatch. A db with no spool (no daemon) pays one file-exists
+    * check. */
   private def spoolBacklog(db: Db, matched: Seq[TimeSeriesReader.Matched],
       startS: Long, endS: Long): Map[(String, Long), Double] = {
     val spoolDir = new java.io.File(s"${db.dir}/carbon_spool")
@@ -1189,15 +1184,19 @@ object Bgutil {
     MetricCatalog.orphanPoints(db.points, db.catalog)
       .select("metric_id").distinct()
 
-  /** Copy points of a subtree to a new prefix (cli/command_copy.py:37-190). */
+  /** Copy points of a subtree to a new prefix (cli/command_copy.py:37-190).
+    * Each copied point carries the destination metric's id — the uuid5 of
+    * `newPrefix + name`, the id a catalog row for that name gets — so the
+    * copy reads back under the new name once the name is in the catalog.
+    * The copy is an ordinary store append: the layout writer, under the
+    * compaction guard. */
   def copy(db: Db, glob: String, newPrefix: String): Unit = {
     val ids = MetricCatalog.globMetrics(db.catalog, glob)
       .select(col("id").as("metric_id"), col("name"))
-    db.points.join(broadcast(ids), Seq("metric_id"))
-      .withColumn("metric_id", concat(lit(newPrefix), col("name")))
-      .drop("name")
-      .write.mode(SaveMode.Append).partitionBy("stage", "bucket")
-      .parquet(db.pointsPath)
+    PointsStore.append(db.points.join(broadcast(ids), Seq("metric_id"))
+      .withColumn("metric_id", graft.functions.GraftFunctions.graft_uuid5(
+        concat(lit(newPrefix), col("name"))))
+      .drop("name"), db.pointsPath)
   }
 
   /** Delete a subtree from the catalog (cli/command_delete.py:26-55). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.model.{Metric, Retention, Stage}
+import graft.model.{Retention, Stage}
 import graft.sources.{MetricCatalog, PointsStore}
 
 /** The Finder/Reader facade: glob → metrics → aligned window → pruned
@@ -50,40 +50,6 @@ object TimeSeriesReader {
       // outward to the coarser step
       FetchPlan(p.startS, p.endS, p.stage, p.stepS * factor)
     }
-  }
-
-  /** Fetch one metric's dense series from a points store directory.
-    * Returns rows (ts, value) covering every step of the aligned window,
-    * with nulls where no data exists (plugins/graphite.py:182-219). */
-  def fetchSeries(spark: SparkSession, baseDir: String, metric: Metric,
-      startS: Long, endS: Long, nowS: Long): DataFrame = {
-    val p = plan(metric.retention, startS, endS, nowS)
-    val clampedStart = math.max(p.startS, p.endS - p.stage.durationS)
-    val rows = PointsStore.read(spark, baseDir, p.stage, clampedStart, p.endS,
-      Seq(metric.id))
-      .withColumn("aggregator", lit(metric.aggregator.name))
-    val series = Downsample.pointGrouper(rows, p.stepS)
-    Downsample.denseSpine(series, p.startS, p.endS, p.stepS)
-      .select(col("ts"), col("value"))
-      .orderBy("ts")
-  }
-
-  /** Resolve a glob against the catalog and fetch every matching series,
-    * one result row per (name, ts) — the find+fetch_async flow
-    * (plugins/graphite.py:365-412,142-225) as a single plan: the glob
-    * filter prunes the catalog scan, a broadcast join attaches metadata,
-    * and one grouped pass re-aggregates all series together. */
-  def findAndFetch(spark: SparkSession, catalog: DataFrame, baseDir: String,
-      glob: String, stage: Stage, startS: Long, endS: Long): DataFrame = {
-    val metrics = MetricCatalog.globMetrics(catalog, glob)
-      .select(col("id").as("metric_id"), col("name"), col("aggregator"))
-    val rows = PointsStore.read(spark, baseDir, stage, startS, endS)
-      .drop("aggregator")
-      .join(broadcast(metrics), Seq("metric_id"))
-    Downsample.pointGrouper(rows, stage.precisionS)
-      .join(broadcast(metrics.select("metric_id", "name")), Seq("metric_id"))
-      .select(col("name"), col("ts"), col("value"))
-      .orderBy("name", "ts")
   }
 
   /** Combined find: leaves (metrics) and branches (directories) matching

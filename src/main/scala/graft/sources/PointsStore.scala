@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Stage
@@ -27,11 +27,6 @@ object PointsStore {
   def bucketSpanS(precisionS: Long): Long =
     math.min(precisionS * MaxPartitionSize,
       math.max(precisionS * ExpectedPointsPerRead, MinPartitionSpanS))
-
-  def bucketOf(stage: Stage) = {
-    val span = bucketSpanS(stage.precisionS)
-    (tsS: Long) => tsS / span * span
-  }
 
   /** Salt sized to a micro-batch's row count: one writer per ~32k rows,
     * capped at 64 files per (stage, bucket). Live ingest concentrates a
@@ -95,47 +90,60 @@ object PointsStore {
           "one column set (metric_id, ts, value, count, replica, and " +
           "batch_seq on all batches or none)")
     }
-    Compaction.guardedAppend(batches.head._1.sparkSession, baseDir) {
-      batches.map { case (points, stage, writeSalt) =>
-        val span = bucketSpanS(stage.precisionS)
-        points
-          .withColumn("stage", lit(stage.toString))
-          .withColumn("bucket", (col("ts") / span).cast("long") * span)
-          .withColumn("__salt", pmod(hash(col("metric_id")), lit(writeSalt)))
-      }.reduce(_ unionByName _)
-        .repartition(col("stage"), col("bucket"), col("__salt"))
-        .drop("__salt")
-        // local sort inside each writer: row groups become metric-id
-        // clustered, so min/max stats actually prune a single-series
-        // fetch (unsorted uuid ids span every row group's stats range);
-        // the bloom filter catches the IN-list probes stats can't.
-        // Leading with (stage, bucket) satisfies the file writer's
-        // required ordering — otherwise it inserts its own partition-col
-        // sort and the metric clustering is lost
-        .sortWithinPartitions("stage", "bucket", "metric_id", "ts")
-        .write.mode("append")
-        // ndv sized to ONE FILE's content (saltFor targets ~32k rows per
-        // writer), not the corpus: a 1M-ndv bloom is a ~1.2 MB bitmap per
-        // file — measurable pure overhead on small writes — while 32k ndv
-        // is ~40 KB and still right-sized for what a file can hold
-        .option("parquet.bloom.filter.enabled#metric_id", "true")
-        .option("parquet.bloom.filter.expected.ndv#metric_id", "32768")
-        .partitionBy("stage", "bucket")
-        .parquet(baseDir)
-    }
+    append(batches.map { case (points, stage, writeSalt) =>
+      val span = bucketSpanS(stage.precisionS)
+      points
+        .withColumn("stage", lit(stage.toString))
+        .withColumn("bucket", (col("ts") / span).cast("long") * span)
+        .withColumn("__salt", pmod(hash(col("metric_id")), lit(writeSalt)))
+    }.reduce(_ unionByName _)
+      .repartition(col("stage"), col("bucket"), col("__salt"))
+      .drop("__salt"), baseDir)
   }
+
+  /** Append points that already carry their `stage` and `bucket` columns
+    * (a salted [[writeMulti]] batch, or rows copied out of a store) through
+    * the layout writer, under the append side of the compaction guard. */
+  def append(points: DataFrame, baseDir: String): Unit =
+    Compaction.guardedAppend(points.sparkSession, baseDir) {
+      layout(points).mode("append").parquet(baseDir)
+    }
+
+  /** The one writer of the points layout — appends and compaction both go
+    * through it, so every file of the store has the same shape. */
+  private def layout(points: DataFrame): DataFrameWriter[Row] =
+    points
+      // local sort inside each writer: row groups become metric-id
+      // clustered, so min/max stats actually prune a single-series
+      // fetch (unsorted uuid ids span every row group's stats range);
+      // the bloom filter catches the IN-list probes stats can't.
+      // Leading with (stage, bucket) satisfies the file writer's
+      // required ordering — otherwise it inserts its own partition-col
+      // sort and the metric clustering is lost
+      .sortWithinPartitions("stage", "bucket", "metric_id", "ts")
+      .write
+      // ndv sized to ONE FILE's content (saltFor targets ~32k rows per
+      // writer), not the corpus: a 1M-ndv bloom is a ~1.2 MB bitmap per
+      // file — measurable pure overhead on small writes — while 32k ndv
+      // is ~40 KB and still right-sized for what a file can hold
+      .option("parquet.bloom.filter.enabled#metric_id", "true")
+      .option("parquet.bloom.filter.expected.ndv#metric_id", "32768")
+      .partitionBy("stage", "bucket")
 
   /** Pruned scan of one stage and time range; `metricIds` optionally
     * narrows to a metric set (pushed to parquet as an IN filter).
     * Partition pruning on (stage, bucket) replaces the reference's
-    * hand-computed partition list (drivers/cassandra.py:1887-1919).
+    * hand-computed partition list (drivers/cassandra.py:1887-1919);
+    * inside the surviving files the IN filter skips row groups by
+    * metric_id stats, dictionary and bloom filter, which the layout
+    * writer's (metric_id, ts) sort makes selective.
     *
     * Stores written by the streaming ingest job carry a `batch_seq`
     * column: each micro-batch re-emits running coarse aggregates, and the
     * upsert contract (Cassandra-style last-write-wins,
     * StreamingIngest.startIngestJob) is resolved HERE — the highest
     * batch_seq per (metric, replica, step) wins, so every consumer of the
-    * read path (pointGrouper, fetchSeries, bgutil read) sees exactly the
+    * read path (pointGrouper, fetchMatched, bgutil read) sees exactly the
     * final state, never stale re-emissions.
     *
     * `byMetric` hash-partitions the pruned rows by metric_id before that
@@ -144,15 +152,7 @@ object PointsStore {
   def read(spark: SparkSession, baseDir: String, stage: Stage,
       startS: Long, endS: Long, metricIds: Seq[String] = Nil,
       byMetric: Boolean = false): DataFrame = {
-    // spark.graft.points.v2=true reads through the GraftCatalogSource DSv2
-    // reader: stage/bucket dir pruning PLUS metric_id/ts row-group
-    // stats+dictionary pruning inside each file — a narrow point fetch
-    // then opens only the row groups whose stats can match, where the
-    // generic source stops at the directory level. Same rows either way.
-    val base =
-      if (spark.conf.getOption("spark.graft.points.v2").contains("true"))
-        spark.read.format(GraftCatalogSource.ShortName).load(baseDir)
-      else InferredSchemas.parquet(spark, baseDir, baseDir)
+    val base = InferredSchemas.parquet(spark, baseDir, baseDir)
     readFrom(base, stage, startS, endS, metricIds, byMetric)
   }
 
@@ -164,7 +164,9 @@ object PointsStore {
       byMetric: Boolean = false): DataFrame = {
     val span = bucketSpanS(stage.precisionS)
     val b0 = startS / span * span
-    val b1 = endS / span * span
+    // endS is exclusive: a window ending on a bucket boundary stops at
+    // the bucket before it
+    val b1 = (endS - 1) / span * span
     var df = base
       .filter(col("stage") === stage.toString)
       .filter(col("bucket") >= b0 && col("bucket") <= b1)
@@ -269,6 +271,8 @@ object PointsStore {
     * uniform while streaming keeps appending (a fresh re-emission after
     * compaction still supersedes the compacted row via the normal read
     * merge). `dropBatchSeq` is for terminal compaction only.
+    * Slices are rewritten through the same layout writer appends use, so
+    * a compacted bucket keeps its (metric_id, ts) clustering.
     * Returns the compacted bucket values. */
   def compactStageSlices(spark: SparkSession, baseDir: String, stage: Stage,
       bucketsPerSlice: Int = 8, sinceS: Long = Long.MinValue,
@@ -294,9 +298,8 @@ object PointsStore {
         val merged = readFrom(base, stage, slice.min, slice.max + span)
         if (dropBatchSeq) merged.drop("batch_seq") else merged
       } { (staged, _) =>
-        staged.write.mode("overwrite")
+        layout(staged).mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("stage", "bucket")
           .parquet(baseDir)
       }
       buckets

@@ -85,9 +85,11 @@ object CarbonListener {
       metadataFor: String => MetricMetadata,
       autoCreate: Option[graft.sources.MetricCatalog.CatalogStore] = None)
       : DataStreamWriter[_] = {
-    // consumed spool files are DELETED after their batch commits, so the
-    // spool directory always holds exactly the un-ingested backlog — the
-    // read face's carbonlink overlay (Bgutil.hotOverlay) relies on this
+    // consumed spool files are deleted by the file source's cleanSource,
+    // which lags the batch commit: drained files linger in the spool
+    // beside the un-ingested backlog. The read face's carbonlink overlay
+    // (Bgutil.spoolBacklog) therefore only fills slots the durable store
+    // leaves empty — durable values win
     val lines = spark.readStream.format("text")
       .option("cleanSource", "delete")
       .load(spoolDir)

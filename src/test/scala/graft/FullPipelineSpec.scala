@@ -45,10 +45,14 @@ class FullPipelineSpec extends SparkSuite {
         storeDir, st)
     }
 
-    // read back at stage1 (3600 s) through glob find + grouped fetch
-    val got = TimeSeriesReader.findAndFetch(spark, catalog, storeDir,
-      "ev.click.*", retention.stages(1), 1704067200L, 1704067200L + 86400)
+    // read back at stage1 (3600 s) through glob find + grouped fetch: a
+    // day that ended a day before nowS is past stage0's one-day retention
+    val got = TimeSeriesReader.findAndFetchPlanned(spark, catalog, storeDir,
+      "ev.click.*", 1704067200L, 1704067200L + 86400,
+      nowS = 1704067200L + 2 * 86400)
+      .filter(col("value").isNotNull)
       .withColumn("value", round(col("value"), 6))
+      .orderBy("name", "ts")
       .as[(String, Long, Double)].collect().toSeq
 
     // direct oracle: the ingest path last-write-wins per 60 s stage0 step,

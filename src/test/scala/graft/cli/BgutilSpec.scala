@@ -248,6 +248,113 @@ class BgutilSpec extends SparkSuite {
     }
   }
 
+  test("copy: copied points read back under the new name once it has a " +
+      "catalog row") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.GraftFunctions.graft_uuid5
+    import graft.sources.MetricCatalog
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bgcopy").toString
+    val db = Db(spark, dir)
+    Bgutil.syncdb(db)
+    val retention = "60*60s:24*3600s"
+    Bgutil.writePoints(db, Seq(("sys.cpu.0.load", 120L, 1.0),
+      ("sys.cpu.0.load", 180L, 3.0)), retention, "average")
+    Bgutil.copy(db, "sys.cpu.0.load", "copy.")
+    // the copy writes points only; give the destination name its row
+    db.commitCatalog(MetricCatalog.dedupByName(db.catalog.unionByName(
+      MetricCatalog.withDerivedColumns(Seq("copy.sys.cpu.0.load").toDF("name"))
+        .withColumn("id", graft_uuid5(col("name")))
+        .withColumn("aggregator", lit("average"))
+        .withColumn("retention", lit(retention))
+        .withColumn("updated_on", lit(180L)),
+      allowMissingColumns = true)))
+    def series(glob: String) = Bgutil.read(db, glob, 120L, 240L)
+      .collect().map(r => (r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(_._1).toSeq
+    assert(series("copy.sys.cpu.0.load") === Seq((120L, Some(1.0)),
+      (180L, Some(3.0))))
+    assert(series("copy.sys.cpu.0.load") === series("sys.cpu.0.load"))
+  }
+
+  test("copy: refused while a compaction holds the store, writing no file") {
+    import graft.sources.{Compaction, ConcurrentCompactionException}
+    val dir = java.nio.file.Files.createTempDirectory("bgcopyguard").toString
+    val db = Db(spark, dir)
+    Bgutil.syncdb(db)
+    Bgutil.write(db, "sys.cpu.0.load", 120L, 1.0, "60*60s:24*3600s", "average")
+    def files(): Set[String] = {
+      def walk(f: java.io.File): Seq[String] =
+        if (f.isDirectory)
+          Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
+        else Seq(f.getPath)
+      walk(new java.io.File(db.pointsPath)).toSet
+    }
+    val marker = java.nio.file.Paths.get(db.pointsPath, Compaction.CompactingMarker)
+    java.nio.file.Files.createFile(marker)
+    val before = files()
+    try {
+      intercept[ConcurrentCompactionException] {
+        Bgutil.copy(db, "sys.cpu.0.load", "copy.")
+      }
+      assert(files() === before)
+    } finally java.nio.file.Files.delete(marker)
+  }
+
+  test("compact: every bucket file ends up ordered by (metric_id, ts), " +
+      "on a streamed store and on one of plain appends") {
+    import graft.model.Retention
+    import graft.sources.PointsStore
+    import spark.implicits._
+    val stage0 = Retention.fromString("60*60s:24*3600s").stage0
+    val ids = (0 until 60).map(m => java.util.UUID.nameUUIDFromBytes(
+      s"m$m".getBytes("UTF-8")).toString)
+    def batch(ms: Seq[String], steps: Seq[Int], seq: Long) =
+      (for (id <- ms; i <- steps) yield (id, i * 60L, seq * 100.0 + i, 1.0, 0, seq))
+        .toDF("metric_id", "ts", "value", "count", "replica", "batch_seq")
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory)
+        Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(parquetFiles)
+      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+    /** Append each batch to a fresh store, compact it, check every file's
+      * row order; returns the store's logical stage0 points. */
+    def compacted(appends: Seq[org.apache.spark.sql.DataFrame]) = {
+      val db = Db(spark,
+        java.nio.file.Files.createTempDirectory("bgcompactlayout").toString)
+      appends.foreach(PointsStore.write(_, db.pointsPath, stage0, writeSalt = 2))
+      Bgutil.compact(db)
+      val files = parquetFiles(new java.io.File(db.pointsPath))
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        // one small file is one read partition: collect keeps file order
+        val keys = spark.read.parquet(f.getPath).select("metric_id", "ts")
+          .as[(String, Long)].collect().toSeq
+        val ordered = keys == keys.sorted
+        assert(ordered, s"${f.getPath} is not (metric_id, ts) ordered")
+      }
+      PointsStore.read(spark, db.pointsPath, stage0, 0L, 1800L)
+        .select("metric_id", "ts", "value").as[(String, Long, Double)].collect()
+    }
+
+    // streamed: batch 2 re-emits every other step of every metric, and
+    // the compaction's last-write-wins merge keeps its values
+    val streamed = compacted(Seq(batch(ids, 0 until 30, 1L),
+      batch(ids, 0 until 30 by 2, 2L)))
+    assert(streamed.length === ids.size * 30)
+    assert(streamed.forall { case (_, ts, v) =>
+      val i = (ts / 60).toInt
+      v === (if (i % 2 == 0) 200.0 + i else 100.0 + i)
+    })
+    // plain appends (bgutil write, writePoints) carry no batch_seq, so the
+    // compaction merges nothing: with more files than cores (one file
+    // per append here) a task reads several of them, holding interleaved
+    // metric sets
+    val plain = compacted((0 until 8).map(k =>
+      batch(ids.zipWithIndex.collect { case (id, i) if i % 8 == k => id },
+        0 until 30, 1L).drop("batch_seq")))
+    assert(plain.length === ids.size * 30)
+  }
+
   test("carbonlink hot read: spool backlog visible before the drain") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger

@@ -39,9 +39,11 @@ class ReaderAndMultimodalSpec extends SparkSuite {
     assert(found.count() === 1)
 
     // fetch a window straddling the data, dense at 60 s
-    val series = TimeSeriesReader.fetchSeries(spark, dir, metric,
+    val matched = Seq(TimeSeriesReader.Matched(metric.name, metric.id,
+      metric.aggregator.name, retention.toString, None))
+    val series = TimeSeriesReader.fetchMatched(spark, matched, dir,
       startS = start + 3, endS = start + 1800 - 3, nowS = start + 1810)
-    val values = series.select("value").collect().map(r =>
+    val values = series.orderBy("ts").select("value").collect().map(r =>
       if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     // aligned window [start, start+1800): 30 slots, avg = minute index
     assert(values.length === 30)
@@ -61,9 +63,10 @@ class ReaderAndMultimodalSpec extends SparkSuite {
       Seq((m1.name, m1.id, "average", retention.toString),
         (m2.name, m2.id, "total", retention.toString))
         .toDF("name", "id", "aggregator", "retention"))
-    val got = TimeSeriesReader.findAndFetch(spark, catalog, dir,
-      "sys.cpu.*.load", retention.stage0, 0L, 60L)
-      .as[(String, Long, Double)].collect().toSeq
+    // a window inside stage0's retention at nowS plans stage0 (60 s)
+    val got = TimeSeriesReader.findAndFetchPlanned(spark, catalog, dir,
+      "sys.cpu.*.load", 0L, 60L, nowS = 60L)
+      .orderBy("name", "ts").as[(String, Long, Double)].collect().toSeq
     assert(got === Seq(("sys.cpu.0.load", 0L, 2.0), ("sys.cpu.1.load", 0L, 12.0)))
   }
 
