@@ -140,36 +140,6 @@ object Bench {
     * publishes in. */
   private[graft] def allTaskNames: Seq[String] = Headline ++ ExtraTaskNames
 
-  /** The bench SparkSession profile (one per JVM — forked chunk children
-    * each build their own, which is the point of the fork). */
-  private def makeSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // ~50 queries x several codegen stages each churn the default
-      // 100-entry generated-class cache, so later passes re-compile
-      // (and re-warm C2 on) stages they already ran — visible as
-      // multi-pass warm-up tails in the samples. Size the cache to the
-      // whole headline set.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-    // Scan-split floor: r15 defaulted this to 16 KB to parallelize the
-    // tiny sf0.1 scans, but the driver's matched-protocol bench showed
-    // the extra tasks cost more than the parallelism bought (89/131
-    // queries regressed, monotone in core count). Spark's 4 MB default
-    // stands; the env override remains for explicit A/Bs only.
-    sys.env.get("SPARK_GRAFT_OPEN_COST").foreach { v =>
-      builder.config("spark.sql.files.openCostInBytes", v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** One warm-up pass over a tiny query to absorb JVM/codegen startup,
     * plus JIT-warming the native expression hot loops (MinHashSig,
     * ShingleSet, SimHashSig, ArrayDot) on 100 in-memory rows so the
@@ -266,14 +236,13 @@ object Bench {
     val sampleLists = collection.mutable.LinkedHashMap[String, Vector[Double]]()
     val stealFracs = collection.mutable.ArrayBuffer[Double]()
     for (pass <- 1 to passes) {
-      val (s0, t0) = cpuTicks()
+      val ticks0 = cpuTicks()
       for ((name, thunk) <- tasks) {
         val s = once(name, thunk)
         sampleLists(name) = sampleLists.getOrElse(name, Vector.empty) :+ s
         System.err.println(f"[bench] pass $pass $name%-28s ${s}%.2f s")
       }
-      val (s1, t1) = cpuTicks()
-      stealFracs += (if (t1 > t0) (s1 - s0).toDouble / (t1 - t0) else 0.0)
+      stealFracs += stealFrac(ticks0, cpuTicks())
     }
     (sampleLists, stealFracs.toVector)
   }
@@ -281,15 +250,98 @@ object Bench {
   private def benchPasses: Int =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
 
+  /** Usage (queries read `SPARK_GRAFT_SF_DIR`):
+    *   graft.Bench                              — the official bench
+    *   graft.Bench --chunk <outTsv> <task>...   — one forked chunk
+    *   graft.Bench explain <outDir> <query>...  — write formatted plans
+    *   graft.Bench time <reps> <query>...       — noop-sink timings with
+    *                                              job/stage/task accounting */
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.length >= 2 && args(0) == "--chunk")
-      runChunk(sfDir, args(1), args.drop(2).toSeq)
-    else {
-      val fork = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1")
-      if (fork == "0" || fork.equalsIgnoreCase("false")) runInProcess(sfDir)
-      else runForked(sfDir)
+    args.toList match {
+      case "--chunk" :: outFile :: names => runChunk(sfDir, outFile, names)
+      case "explain" :: outDir :: names => explain(sfDir, outDir, names)
+      case "time" :: reps :: names => time(sfDir, reps.toInt, names)
+      case _ =>
+        val fork = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1")
+        if (fork == "0" || fork.equalsIgnoreCase("false")) runInProcess(sfDir)
+        else runForked(sfDir)
     }
+  }
+
+  /** Write each query's `.explain("formatted")` plan to `<outDir>/<q>.txt`. */
+  private def explain(sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    val spark = GraftSession()
+    new java.io.File(outDir).mkdirs()
+    names.foreach { n =>
+      val plan = SparkEntry.queries(n)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$outDir/$n.txt"), plan)
+      System.err.println(s"[bench] wrote $outDir/$n.txt")
+    }
+    spark.stop()
+  }
+
+  /** What one query run cost the scheduler: its jobs' callsites and its
+    * completed stages (each with its task count and task metrics). */
+  private class RunProfile extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    val jobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    // a stage's name is the short callsite of the action that created
+    // it; a job's result stage is its last-created, highest-id stage
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      jobSites.add(j.stageInfos.sortBy(_.stageId).lastOption.map(_.name)
+        .getOrElse("?"))
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      stages.add(s.stageInfo)
+  }
+
+  /** Time each query `reps` passes (interleaved) on the noop sink, one
+    * line per query run: wall, plan construction, jobs, stages, tasks
+    * and task time — where the wall time goes at bench scale, where
+    * orchestration dominates. After a query's last pass, list that
+    * pass's top 15 stages by task time and its job-callsite histogram. */
+  private def time(sfDir: String, reps: Int, names: Seq[String]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val spark = GraftSession()
+    val profile = new RunProfile
+    spark.sparkContext.addSparkListener(profile)
+    def taskMillis(i: org.apache.spark.scheduler.StageInfo): Long =
+      Option(i.taskMetrics).map(_.executorRunTime).getOrElse(0L)
+    for (pass <- 1 to reps; n <- names) {
+      drainBlocks(spark)
+      spark.sparkContext.setJobDescription(s"bench:$n")
+      profile.jobSites.clear(); profile.stages.clear()
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      val tCon = (System.nanoTime() - t0) / 1e9
+      df.write.format("noop").mode("overwrite").save()
+      val wall = (System.nanoTime() - t0) / 1e9
+      // listener events drain asynchronously; settle briefly
+      Thread.sleep(300)
+      val stages = profile.stages.asScala.toSeq
+      println(f"[bench] pass $pass $n%-28s $wall%7.3f s  " +
+        f"(construct $tCon%6.3f)  jobs=${profile.jobSites.size}%3d " +
+        f"stages=${stages.size}%3d " +
+        f"tasks=${stages.map(_.numTasks).sum}%4d " +
+        f"taskTime=${stages.map(taskMillis).sum / 1e3}%7.2f s")
+      if (pass == reps) {
+        println(s"[bench]   $n stages by task time:")
+        stages.sortBy(-taskMillis(_)).take(15).foreach { i =>
+          println(f"[bench]   ${taskMillis(i) / 1e3}%8.2f s  ${i.stageId} " +
+            s"[${i.numTasks} tasks] ${i.name}: " +
+            i.rddInfos.map(_.name).distinct.mkString(",").take(120))
+        }
+        println(s"[bench]   $n job callsites:")
+        profile.jobSites.asScala.groupBy(identity).toSeq
+          .sortBy(-_._2.size)
+          .foreach { case (k, v) => println(f"[bench]   ${v.size}%4d  $k") }
+      }
+    }
+    spark.stop()
   }
 
   /** Child mode: time ONLY `names` in this fresh JVM and write raw
@@ -298,7 +350,7 @@ object Bench {
     * not JSON, so the parent needs no JSON parser. */
   private def runChunk(sfDir: String, outFile: String,
       names: Seq[String]): Unit = {
-    val spark = makeSession()
+    val spark = GraftSession()
     warmup(spark, sfDir)
     val tasks = buildTasks(spark, sfDir, names)
     val (samples, steals) = runTasks(spark, tasks, benchPasses)
@@ -471,7 +523,7 @@ object Bench {
     * in one JVM. Kept as the fallback when forking is impossible; its
     * late-query inflation is documented in ROUND_NOTES_r9.md §7. */
   private def runInProcess(sfDir: String): Unit = {
-    val spark = makeSession()
+    val spark = GraftSession()
     warmup(spark, sfDir)
     val tasks = buildTasks(spark, sfDir, allTaskNames)
     val (samples, steals) = runTasks(spark, tasks, benchPasses)
@@ -602,6 +654,13 @@ object Bench {
       (if (l.length > 7) l(7) else 0L, l.sum)
     } finally src.close()
   } catch { case _: Throwable => (0L, 0L) }
+
+  /** Fraction of host cycles stolen between two [[cpuTicks]] readings
+    * (0 when the counters did not move). */
+  private[graft] def stealFrac(before: (Long, Long), after: (Long, Long)): Double = {
+    val ((s0, t0), (s1, t1)) = (before, after)
+    if (t1 > t0) (s1 - s0).toDouble / (t1 - t0) else 0.0
+  }
 
   /** Unpersist checkpoint/cache blocks orphaned by completed queries.
     * Every pipeline query `localCheckpoint`s its reused intermediates;

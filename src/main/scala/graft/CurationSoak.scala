@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the streaming-curation path (`bg_curation_stream`):
@@ -8,7 +7,7 @@ import org.apache.spark.sql.functions._
   * docs), run at 1× and `factor`× of the documents table so the
   * store-write and anti-join scaling can be pinned where the
   * per-trigger floor is fully amortized (at 100×: 4 × 125k docs per
-  * trigger). Documents inflate with [[Soak.inflate]]'s token-disjoint
+  * trigger). Documents inflate with [[Soak.inflateDocs]]' token-disjoint
   * semantics (copy k prefixes every token `q<k>_`, copy 0 verbatim) so
   * each copy reproduces the corpus's internal duplicate structure —
   * content keys stay distinct across copies, the history store grows
@@ -31,42 +30,14 @@ object CurationSoak {
     val out = if (args.length > 1) args(1) else "/tmp/graft_cursoak"
     val factor = if (args.length > 2) args(2).toInt else 100
     val passes = if (args.length > 3) args(3).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // documents-only inflation (1×-normalized small leg + factor× big
-    // leg), sentinel-reused like Soak's — the other tables aren't read
-    // by this path, so inflating them at 100× would be wasted minutes
-    def inflateDocs(dir: String, f: Int): Unit = {
-      val sentinel = java.nio.file.Paths.get(dir, s"_inflate_docs_$f.ok")
-      if (!java.nio.file.Files.exists(sentinel)) {
-        val ks = explode(sequence(lit(0), lit(f - 1))).as("k")
-        spark.read.parquet(s"$src/documents.parquet")
-          .select(col("*"), ks)
-          .select((col("doc_id") * f + col("k")).as("doc_id"),
-            when(col("k") === 0, col("text")).otherwise(
-              regexp_replace(col("text"), lit("(\\S+)"),
-                concat(lit("q"), col("k"), lit("_$1")))).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(dir))
-        java.nio.file.Files.createFile(sentinel)
-      }
-    }
+    // leg) — the other tables aren't read by this path, so inflating
+    // them at 100× would be wasted minutes
     val small = s"${out}_1x"
-    inflateDocs(small, 1)
-    inflateDocs(out, factor)
+    Soak.inflateDocs(spark, src, small, 1)
+    Soak.inflateDocs(spark, src, out, factor)
 
     // frozen router model from the BASE corpus (trained offline in a
     // deployment — its size never scales with the stream); pinned so
@@ -97,7 +68,7 @@ object CurationSoak {
         .createTempDirectory("cursoak_ckpt").toString
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val (s0, j0) = Bench.cpuTicks()
+      val ticks0 = Bench.cpuTicks()
       val t0 = System.nanoTime()
       val q = graft.streaming.DocumentStream.startCurationPipelineJob(
         stream, "text", "doc_id", "source", model, store, card, ckpt)
@@ -107,8 +78,7 @@ object CurationSoak {
       try {
         q.processAllAvailable()
         val sec = (System.nanoTime() - t0) / 1e9
-        val (s1, j1) = Bench.cpuTicks()
-        val steal = if (j1 > j0) (s1 - s0).toDouble / (j1 - j0) else 0.0
+        val steal = Bench.stealFrac(ticks0, Bench.cpuTicks())
         val attribution = q.recentProgress.toSeq.map { p =>
           val d = p.durationMs
           s"""{"batch":${p.batchId},"rows":${p.numInputRows},""" +
@@ -141,13 +111,7 @@ object CurationSoak {
         s""""exponent":${Bench.fmt(exp, 2)},""" +
         s""""steal":[${(steal1 ++ stealN).map(Bench.fmt(_, 3)).mkString(",")}]}"""
     println(row)
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "soak_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (row + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Throwable =>
-      System.err.println(s"[cursoak] could not write $outFile: ${e.getMessage}") }
+    Soak.appendRow(row)
     spark.stop()
   }
 }

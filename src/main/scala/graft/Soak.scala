@@ -55,31 +55,7 @@ object Soak {
       allQueryNames.foreach(println)
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // Spark-default scan splits (the r15 16 KB floor regressed the
-    // bench; see Bench.makeSession). Env override for explicit A/Bs.
-    sys.env.get("SPARK_GRAFT_OPEN_COST").foreach { v =>
-      builder.config("spark.sql.files.openCostInBytes", v)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — session conf overrides for
-    // measurement variants (e.g. the single-node r4 memory knob:
-    // spark.graft.tfidf.statsStorage=disk). Published legs note the
-    // conf they ran under.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>
-      kvs.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      }
-    }
+    val spark = GraftSession()
 
     // inflate once per (outDir, factor); chunked fresh-JVM runs reuse it.
     // The SMALL leg runs against a layout-normalized 1× copy (inflate
@@ -155,11 +131,10 @@ object Soak {
       // ph1 measured 18.5 s inside the polluted session vs 4.8 s in a
       // fresh JVM on the same 10× data (a 1.40 vs 0.47 exponent)
       Bench.drainBlocks(spark)
-      val (s0, j0) = Bench.cpuTicks()
+      val ticks0 = Bench.cpuTicks()
       val t0 = System.nanoTime(); fn
       val sec = (System.nanoTime() - t0) / 1e9
-      val (s1, j1) = Bench.cpuTicks()
-      (sec, if (j1 > j0) (s1 - s0).toDouble / (j1 - j0) else 0.0)
+      (sec, Bench.stealFrac(ticks0, Bench.cpuTicks()))
     }
     val selected =
       if (only.isEmpty) allQueryNames
@@ -212,13 +187,20 @@ object Soak {
         s""""exponent":${Bench.fmt(exp, 2)},""" +
         s""""steal":[${Bench.fmt(stealSmall, 3)},${Bench.fmt(stealBig, 3)}]}"""
     }
-    rows.foreach(println)
+    rows.foreach { row => println(row); appendRow(row) }
+    spark.stop()
+  }
+
+  /** Append one JSON row to `SPARK_GRAFT_SOAK_OUT` (default
+    * soak_out.json) — the output file every soak main shares. */
+  def appendRow(row: String): Unit = {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "soak_out.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-      rows.mkString("", "\n", "\n"))
+    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
+      (row + "\n").getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
     catch { case e: Throwable =>
       System.err.println(s"[soak] could not write $outFile: ${e.getMessage}") }
-    spark.stop()
   }
 
   /** Every soaked query, in run order; `x1_curation_pipeline` (the
@@ -277,25 +259,12 @@ object Soak {
     * accident of files.maxPartitionBytes splitting. */
   private val Files = 32
 
-  /** Write `factor`-times-inflated copies of documents + events. */
+  /** Write `factor`-times-inflated copies of documents, events and the
+    * warehouse facts. */
   def inflate(spark: SparkSession, src: String, out: String,
       factor: Int): Unit = {
     val ks = explode(sequence(lit(0), lit(factor - 1))).as("k")
-
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    docs.select(col("*"), ks)
-      .select(
-        (col("doc_id") * factor + col("k")).as("doc_id"),
-        // token-disjoint copies: q<k>_ prefix on every token (k=0 stays
-        // verbatim so the source corpus is a subset). The underscore
-        // separator keeps copies disjoint at any factor — without it,
-        // q1 + digit-leading token collides with q10+ token
-        when(col("k") === 0, col("text")).otherwise(
-          regexp_replace(col("text"), lit("(\\S+)"),
-            concat(lit("q"), col("k"), lit("_$1")))).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-      .repartition(Files) // deterministic 32-way layout, see `main`
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    inflateDocs(spark, src, out, factor)
 
     val ev = spark.read.parquet(s"$src/events.parquet")
     ev.select(col("*"), ks)
@@ -344,6 +313,31 @@ object Soak {
         col("label"))
       .repartition(Files)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+  }
+
+  /** Write the `factor`× documents copy `<out>/documents.parquet`, once:
+    * the `_inflate_docs_<factor>.ok` sentinel skips a dir already
+    * written. Copy k re-keys `doc_id` to `doc_id·factor + k` and prefixes
+    * every token with `q<k>_` (copy 0 stays verbatim, so the source
+    * corpus is a subset); the underscore keeps copies token-disjoint at
+    * any factor — without it, q1 + a digit-leading token collides with
+    * a q10+ token. */
+  def inflateDocs(spark: SparkSession, src: String, out: String,
+      factor: Int): Unit = {
+    val sentinel = java.nio.file.Paths.get(out, s"_inflate_docs_$factor.ok")
+    if (!java.nio.file.Files.exists(sentinel)) {
+      spark.read.parquet(s"$src/documents.parquet")
+        .select(col("*"), explode(sequence(lit(0), lit(factor - 1))).as("k"))
+        .select(
+          (col("doc_id") * factor + col("k")).as("doc_id"),
+          when(col("k") === 0, col("text")).otherwise(
+            regexp_replace(col("text"), lit("(\\S+)"),
+              concat(lit("q"), col("k"), lit("_$1")))).as("text"),
+          col("lang"), col("source"), col("n_chars"))
+        .repartition(Files) // deterministic 32-way layout, see `main`
+        .write.mode("overwrite").parquet(s"$out/documents.parquet")
+      java.nio.file.Files.createFile(sentinel)
+    }
   }
 
   /** ER-axis customer copy under `$out/er/`: the entity-resolution

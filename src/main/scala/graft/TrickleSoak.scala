@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Trickle-shape soak for the streaming-curation store: the OTHER axis
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   * Three legs, each over its own seeded store:
   *  - `h1`    — history from the 1× documents corpus
-  *  - `hN`    — history from the `factor`× corpus ([[CurationSoak]]'s
+  *  - `hN`    — history from the `factor`× corpus ([[Soak.inflateDocs]]'
   *              token-disjoint inflation), accreted in `seedBatches`
   *              curation batches so every kp dir carries the real
   *              many-trigger small-file layout (~`seedBatches` files
@@ -48,40 +47,12 @@ object TrickleSoak {
     val passes = if (args.length > 3) args(3).toInt else 3
     val triggers = if (args.length > 4) args(4).toInt else 24
     val seedBatches = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import graft.streaming.DocumentStream
 
-    def inflateDocs(dir: String, f: Int): Unit = {
-      val sentinel = java.nio.file.Paths.get(dir, s"_inflate_docs_$f.ok")
-      if (!java.nio.file.Files.exists(sentinel)) {
-        val ks = explode(sequence(lit(0), lit(f - 1))).as("k")
-        spark.read.parquet(s"$src/documents.parquet")
-          .select(col("*"), ks)
-          .select((col("doc_id") * f + col("k")).as("doc_id"),
-            when(col("k") === 0, col("text")).otherwise(
-              regexp_replace(col("text"), lit("(\\S+)"),
-                concat(lit("q"), col("k"), lit("_$1")))).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(dir))
-        java.nio.file.Files.createFile(sentinel)
-      }
-    }
     val small = s"${out}_1x"
-    inflateDocs(small, 1)
-    inflateDocs(out, factor)
+    Soak.inflateDocs(spark, src, small, 1)
+    Soak.inflateDocs(spark, src, out, factor)
 
     val baseDocs = spark.read.parquet(s"$src/documents.parquet")
     val model = graft.operators.Classify.nbFit(
@@ -147,7 +118,7 @@ object TrickleSoak {
         .createTempDirectory("trksoak_ckpt").toString
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val (s0, j0) = Bench.cpuTicks()
+      val ticks0 = Bench.cpuTicks()
       val q = stream.writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
@@ -159,8 +130,7 @@ object TrickleSoak {
         .start()
       try {
         q.processAllAvailable()
-        val (s1, j1) = Bench.cpuTicks()
-        val steal = if (j1 > j0) (s1 - s0).toDouble / (j1 - j0) else 0.0
+        val steal = Bench.stealFrac(ticks0, Bench.cpuTicks())
         val ms = q.recentProgress.toSeq
           .filter(_.numInputRows > 0)
           .map(_.durationMs.get("triggerExecution").toDouble)
@@ -219,13 +189,7 @@ object TrickleSoak {
         s""""h$factor":${arr(hN, 0)},"h${factor}c":${arr(hNc, 0)}},""" +
         s""""steal":${arr(steal1 ++ stealN ++ stealNc, 3)}}"""
     println(row)
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "soak_out.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (row + "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case e: Throwable =>
-      System.err.println(s"[trksoak] could not write $outFile: ${e.getMessage}") }
+    Soak.appendRow(row)
     spark.stop()
   }
 }

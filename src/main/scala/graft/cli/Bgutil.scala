@@ -100,9 +100,7 @@ object Bgutil {
       // bootstrap) writes flat too — a partitioned write of zero rows
       // produces no files at all, leaving nothing to infer schema from
       if (df.columns.contains("updated_on") && !df.isEmpty)
-        graft.sources.MetricCatalog.withUpdatedMonth(df)
-          .write.mode(SaveMode.Overwrite).partitionBy("updated_month")
-          .parquet(s"$dir/${label}_v$nextToken")
+        MetricCatalog.writeDated(df, s"$dir/${label}_v$nextToken")
       else df.write.mode(SaveMode.Overwrite).parquet(s"$dir/${label}_v$nextToken")
       if (token != prevToken) {
         org.apache.commons.io.FileUtils.deleteQuietly(

@@ -55,33 +55,20 @@ object Bpe {
 
   /** Train `rounds` merges. Returns
     * (merges: (round, lhs, rhs, merged, pair_count), finalReprs:
-    * (word, freq, repr)). Stops early if no pair is left to merge. */
-  /** Conf key for how many lazy merge rounds may stack before
-    * [[trainMerges]] cuts the reprs lineage with a checkpoint (each
-    * pending round adds one `replace` node whose re-execution every
-    * later round in the window pays again: the next round's top-pair
-    * job re-runs the pending chain from the last cut). Small cadence =
-    * more checkpoint jobs, less re-execution; large = the reverse. */
-  val LineageCutKey = "spark.graft.bpe.lineageCutRounds"
-
-  /** Default cadence: 1 = checkpoint every round. Measured A/B over
-    * 1/4/16 on bp1 (8 rounds, solo fresh-JVM probes, clean harness):
-    * warm wall 1.8 s / 2.0 s / 2.8 s — each pending round's replace is
-    * re-executed by EVERY later top-pair job in the window (O(window²)
-    * total re-execution) and stacks replace nodes into the per-round
-    * plan, which costs more than the one materialization job per round
-    * it saves, at bench scale and worse at vocabulary scale (the
-    * re-executed chain is vocab-sized work). See OPTIMIZATION_r16.md. */
-  private val LineageCutDefault = 1
-
+    * (word, freq, repr)). Stops early if no pair is left to merge.
+    *
+    * The reprs lineage is cut with a checkpoint after EVERY round. A
+    * pending round's replace would be re-executed by every later round's
+    * top-pair job until the next cut (O(window²) re-execution of
+    * vocabulary-sized work) and stacks a replace node into each round's
+    * plan; that costs more than the one materialization job per round.
+    * Measured on bp1 (8 rounds, solo fresh-JVM runs) with a cut every
+    * 1 / 4 / 16 rounds: warm wall 1.8 / 2.0 / 2.8 s. */
   def trainMerges(words: DataFrame,
       rounds: Int): (DataFrame, DataFrame) = {
     require(rounds > 0, s"rounds must be positive, got $rounds")
     val spark = words.sparkSession
     import spark.implicits._
-    val cutEvery = spark.conf.getOption(LineageCutKey)
-      .map(_.toInt).getOrElse(LineageCutDefault)
-    require(cutEvery > 0, s"$LineageCutKey must be positive, got $cutEvery")
     var reprs = words.select(col("word"), col("freq"),
         seedRepr(col("word")).as("repr"))
       .localCheckpoint(true)
@@ -106,14 +93,9 @@ object Bpe {
         val (l, rr, cnt) =
           (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r.toLong, l, rr, l + rr, cnt))
-        // LAZY between cuts: a replace is one map-side string op over
-        // the vocabulary-scale reprs, so the next round's top-pair job
-        // re-runs the pending chain from the last cut. The cadence
-        // trades that re-execution (up to cutEvery−1 stacked replaces)
-        // against one materialization job per cut; see LineageCutKey.
         reprs = reprs.withColumn("repr",
           replace(col("repr"), lit(s" $l $rr "), lit(s" ${l + rr} ")))
-        if (r % cutEvery == 0) reprs = reprs.localCheckpoint(true)
+          .localCheckpoint(true)
         r += 1
       }
     }

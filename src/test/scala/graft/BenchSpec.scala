@@ -93,4 +93,20 @@ class BenchSpec extends AnyFunSuite {
       s"""{"metric":"total","value":99999.99,"unit":"sec","queries":$qs,"cpu_steal":$steal,"sf":"sf0.1","full":"bench_out.json"}"""
     assert(line.length < 1900, s"compact line ${line.length} chars")
   }
+
+  test("GraftSession profile: the exact conf every harness runs under") {
+    // session conf is part of the measured system — any change to this
+    // list is a reviewed diff and needs an A/B
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    assert(GraftSession.Profile === Seq(
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.codegen.cache.maxEntries" -> "2000",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"))
+    assert(!GraftSession.Profile.exists(_._1.contains("openCostInBytes")))
+  }
 }

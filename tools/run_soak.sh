@@ -1,18 +1,6 @@
 #!/bin/bash
-# Launch graft.Soak with the bench JVM profile (plain java, no sbt).
+# Launch graft.Soak with the bench JVM profile (tools/run_java.sh).
 # Usage: run_soak.sh <outJson> <factor> [query...]
 OUT_JSON="$1"; FACTOR="$2"; shift 2
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-exec env SPARK_GRAFT_SOAK_OUT="$OUT_JSON" java \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -Xms24g -Xmx24g -cp "$CP" graft.Soak /root/testdata/sf0.1 "/tmp/graft_soak$FACTOR" "$FACTOR" "$@"
+exec env SPARK_GRAFT_SOAK_OUT="$OUT_JSON" "$(dirname "$0")/run_java.sh" \
+  graft.Soak /root/testdata/sf0.1 "/tmp/graft_soak$FACTOR" "$FACTOR" "$@"
