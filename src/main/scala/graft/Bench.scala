@@ -464,6 +464,7 @@ object Bench {
       collection.mutable.LinkedHashMap[String, (Vector[Double], Vector[Double])]()
     val steals = collection.mutable.ArrayBuffer[Double]()
     var firstChunkFailed = false
+    var anyChunkFailed = false
     for ((names, i) <- chunks.zipWithIndex if !firstChunkFailed) {
       val outFile = s"$tmpDir/chunk_$i.tsv"
       val logFile = new java.io.File(s"$tmpDir/chunk_$i.log")
@@ -494,6 +495,14 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] chunk $i result unreadable: ${e.getMessage}")
       }
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outFile))
+      // a chunk that returned every task's row leaves nothing behind; a
+      // failed one keeps its log for the post-mortem
+      if (names.forall(parsed.contains)) logFile.delete()
+      else {
+        anyChunkFailed = true
+        System.err.println(s"[bench] chunk $i log kept at $logFile")
+      }
       if (parsed.isEmpty) {
         System.err.println(s"[bench] chunk $i produced nothing (rc=$rc) — " +
           s"log tail:")
@@ -512,6 +521,7 @@ object Bench {
           f"${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
     }
+    if (!anyChunkFailed) new java.io.File(tmpDir).delete()
     if (firstChunkFailed) {
       System.err.println("[bench] first chunk failed — falling back to the " +
         "in-process protocol")

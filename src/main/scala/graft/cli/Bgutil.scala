@@ -8,8 +8,9 @@ import graft.operators.{Downsample, TimeSeriesReader}
 import graft.sources.{MetricCatalog, PointsStore}
 
 /** `bgutil`-equivalent admin CLI (biggraphite/cli/commands.py:38-54) over a
-  * directory-backed database: `<db>/catalog` (metric metadata parquet) and
-  * `<db>/points` ((stage, bucket)-partitioned parquet).
+  * directory-backed database: the metric catalog (parquet versions behind
+  * the `<db>/CURRENT` pointer) and `<db>/points` ((stage,
+  * bucket)-partitioned parquet).
   *
   * Subcommands: syncdb, write, read, list, du, stats, clean, repair,
   * copy, delete, info — each a thin driver over the library operators,
@@ -23,29 +24,22 @@ object Bgutil {
     /** Catalog versions commit via a CURRENT pointer file: the parquet is
       * written to a fresh `catalog_v{N}` dir, then CURRENT is replaced by
       * an atomic rename. A writer killed mid-commit leaves the previous
-      * version intact — readers never observe a partial catalog (the old
-      * two-phase overwrite had a destructive window). */
+      * version intact — readers never observe a partial catalog. */
     private def currentFile = Paths.get(s"$dir/CURRENT")
-    /** The committed catalog version's directory; None for the
-      * pre-versioning `<db>/catalog` layout, which is rewritten in place.
-      * Pointer content is an opaque token: "N" (legacy) or "N-nonce". */
-    def catalogVersion: Option[String] =
-      if (Files.exists(currentFile))
-        Some(s"$dir/catalog_v${Files.readString(currentFile).trim}")
-      else None
-    def catalogPath: String = catalogVersion.getOrElse(s"$dir/catalog")
+    /** The committed catalog version's directory; the pointer holds an
+      * opaque "N-nonce" token. */
+    def catalogVersion: String = {
+      require(hasCatalog, s"$dir has no catalog: run syncdb first")
+      s"$dir/catalog_v${Files.readString(currentFile).trim}"
+    }
     def pointsPath = s"$dir/points"
-    def catalog: DataFrame = catalogAt(catalogPath)
+    def catalog: DataFrame = catalogAt(catalogVersion)
     /** The catalog stored at `path`. A committed version is never
       * rewritten, so its schema is inferred once. */
     def catalogAt(path: String): DataFrame =
       graft.sources.InferredSchemas.parquet(spark, path, s"$dir/catalog")
     def points: DataFrame = spark.read.parquet(pointsPath)
-    def hasCatalog: Boolean = new java.io.File(catalogPath).exists()
-
-    /** Commit a new catalog version atomically. */
-    def commitCatalog(df: DataFrame): Unit =
-      commitVersioned(df, currentFile, "catalog")
+    def hasCatalog: Boolean = Files.exists(currentFile)
 
     /** This db's catalog as a [[MetricCatalog.CatalogStore]] — the
       * handle [[graft.streaming.StreamingIngest.startIngestJob]] uses
@@ -56,69 +50,45 @@ object Bgutil {
       override def commit(df: DataFrame): Unit = commitCatalog(df)
     }
 
-    // ---- directories table (drivers/cassandra.py:698-713,1783-1804) --
-    // Maintained alongside the catalog; the reference tolerates drift
-    // and reconciles in repair/clean, and so do we (repairDirectories).
-
-    private def dirsCurrentFile = Paths.get(s"$dir/CURRENT_DIRS")
-    def hasDirectories: Boolean = Files.exists(dirsCurrentFile)
-    def directoriesPath: String =
-      s"$dir/directories_v${Files.readString(dirsCurrentFile).trim}"
-    def directories: DataFrame = spark.read.parquet(directoriesPath)
-
-    def commitDirectories(df: DataFrame): Unit =
-      commitVersioned(df, dirsCurrentFile, "directories")
-
-    /** Crash-atomic AND concurrency-loud: each commit writes to a unique
-      * `{label}_v{N}-{nonce}` directory (two racing writers can never
-      * clobber each other's parquet), then re-reads the pointer just
-      * before the atomic move and fails if another commit won the race —
-      * a compare-and-swap on the pointer content. A genuine lost-update
-      * window remains between the check and the move (the filesystem has
-      * no CAS primitive), but a concurrent commit now almost always fails
-      * loudly instead of silently discarding updates; this is a
-      * single-writer tool like the reference CLI. */
-    private def commitVersioned(df: DataFrame,
-        pointer: java.nio.file.Path, label: String): Unit = {
+    /** Commit a new catalog version. Crash-atomic AND concurrency-loud:
+      * each commit writes to a unique `catalog_v{N}-{nonce}` directory
+      * (two racing writers can never clobber each other's parquet), then
+      * re-reads the pointer just before the atomic move and fails if
+      * another commit won the race — a compare-and-swap on the pointer
+      * content. A genuine lost-update window remains between the check
+      * and the move (the filesystem has no CAS primitive), but a
+      * concurrent commit now almost always fails loudly instead of
+      * silently discarding updates; this is a single-writer tool like
+      * the reference CLI. */
+    def commitCatalog(df: DataFrame): Unit = {
       def token: Option[String] =
-        if (Files.exists(pointer)) Some(Files.readString(pointer).trim) else None
+        if (hasCatalog) Some(Files.readString(currentFile).trim) else None
       val prevToken = token
-      val prev = prevToken match {
-        case Some(t) => Some(s"$dir/${label}_v$t")
-        case None if label == "catalog" &&
-          Files.exists(Paths.get(s"$dir/catalog")) =>
-          Some(s"$dir/catalog") // pre-versioning layout
-        case None => None
-      }
       val prevVersion = prevToken.map(_.takeWhile(_.isDigit).toLong).getOrElse(0L)
       val nonce = java.util.UUID.randomUUID().toString.take(8)
       val nextToken = s"${prevVersion + 1}-$nonce"
-      // catalog versions use the DATED layout (partitioned by 30-day
-      // updated_on month, the ES dated-index analog) so time-scoped
-      // maintenance scans prune whole month dirs; tables without
-      // updated_on (directories) stay flat. An EMPTY commit (syncdb's
-      // bootstrap) writes flat too — a partitioned write of zero rows
-      // produces no files at all, leaving nothing to infer schema from
-      if (df.columns.contains("updated_on") && !df.isEmpty)
-        MetricCatalog.writeDated(df, s"$dir/${label}_v$nextToken")
-      else df.write.mode(SaveMode.Overwrite).parquet(s"$dir/${label}_v$nextToken")
+      val next = s"$dir/catalog_v$nextToken"
+      // the DATED layout (partitioned by 30-day updated_on month, the ES
+      // dated-index analog) so time-scoped maintenance scans prune whole
+      // month dirs. An EMPTY commit (syncdb's bootstrap) writes flat — a
+      // partitioned write of zero rows produces no files at all, leaving
+      // nothing to infer schema from
+      if (!df.isEmpty) MetricCatalog.writeDated(df, next)
+      else df.write.mode(SaveMode.Overwrite).parquet(next)
       if (token != prevToken) {
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$dir/${label}_v$nextToken"))
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(next))
         throw new IllegalStateException(
-          s"concurrent $label commit detected: pointer moved from " +
+          s"concurrent catalog commit detected: pointer moved from " +
             s"$prevToken to $token while writing v$nextToken; " +
             "this commit was discarded — retry on the new version")
       }
-      val tmp = Paths.get(s"$dir/$label.CURRENT.tmp")
+      val tmp = Paths.get(s"$dir/catalog.CURRENT.tmp")
       Files.writeString(tmp, nextToken)
-      Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
+      Files.move(tmp, currentFile, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
       // old version is garbage now; best-effort cleanup
-      prev.filter(_ != s"$dir/${label}_v$nextToken").foreach { p =>
-        if (Files.exists(Paths.get(p)))
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
-      }
+      prevToken.foreach(t => org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"$dir/catalog_v$t")))
     }
   }
 
@@ -148,7 +118,7 @@ object Bgutil {
         "  compactlayout <dir> [nFiles]                  refold an append-fragmented z-order layout\n" +
         "  read <glob> <startS> <endS> [maxDataPoints]   dense series, optionally consolidated\n" +
         "  render <glob> <startS> <endS> [fn[:arg]...]   apply graphite function chain\n" +
-        "  dirs <glob>                                   directory glob (stored table or derived)\n" +
+        "  dirs <glob>                                   directory glob, derived from the catalog\n" +
         "  clustersdiff <otherDb> <t0> <t1> <glob...>    cross-cluster diff + timing pctls\n" +
         "  carbon <port> [retention] [aggregator]        carbon plaintext daemon -> streaming ingest\n" +
         "  shell                                         interactive loop, one warm session\n" +
@@ -185,9 +155,7 @@ object Bgutil {
     case "du" => du(db).show(200, truncate = false)
     case "stats" => stats(db).show(200, truncate = false)
     case "clean" => clean(db, rest(0).toLong, rest(1).toLong)
-    case "repair" =>
-      repair(db).show(200, truncate = false)
-      repairDirectories(db).show(200, truncate = false)
+    case "repair" => repair(db).show(200, truncate = false)
     case "dirs" => listDirs(db, rest(0)).show(200, truncate = false)
     case "copy" => copy(db, rest(0), rest(1))
     case "delete" => delete(db, rest(0))
@@ -381,96 +349,30 @@ object Bgutil {
   /** Create the table layout (drivers/cassandra.py:2289-2355 syncdb). */
   def syncdb(db: Db): Unit = {
     import db.spark.implicits._
-    if (!db.hasCatalog) {
-      db.commitCatalog(
-        MetricCatalog.withDerivedColumns(Seq.empty[String].toDF("name"))
-          .withColumn("id", col("name"))
-          .withColumn("aggregator", col("name"))
-          .withColumn("retention", col("name"))
-          .withColumn("updated_on", lit(0L)))
-    }
+    if (!db.hasCatalog)
+      db.commitCatalog(MetricCatalog.catalogRows(Seq.empty[(String, String, String)]
+        .toDF("name", "aggregator", "retention"), 0L))
   }
 
-  /** Ingest one point, auto-creating the metric (plugins/carbon.py:177-230):
-    * runs the incremental downsampler for every stage and upserts with
-    * last-write-wins. Single-point convenience; bulk ingest goes through
-    * StreamingIngest. */
+  /** `bgutil write`: ingest one point, (re-)creating the metric
+    * (cli/command_write.py) — [[writePoints]] of one point. */
   def write(db: Db, name: String, ts: Long, value: Double,
-      retentionStr: String, aggregatorName: String): Unit = {
-    import db.spark.implicits._
-    val metadata = MetricMetadata(Aggregator.fromName(aggregatorName),
-      Retention.fromString(retentionStr))
-    val metric = Metric(name, metadata)
-    syncdb(db)
-    val existing = if (db.hasCatalog) db.catalog else null
-    val row = MetricCatalog.withDerivedColumns(Seq(metric.name).toDF("name"))
-      .withColumn("id", lit(metric.id))
-      .withColumn("aggregator", lit(metadata.aggregator.name))
-      .withColumn("retention", lit(metadata.retention.toString))
-      .withColumn("updated_on", lit(ts))
-    val merged = MetricCatalog.dedupByName(
-      existing.unionByName(row, allowMissingColumns = true))
-    db.commitCatalog(merged)
+      retentionStr: String, aggregatorName: String): Unit =
+    writePoints(db, Seq((name, ts, value)), retentionStr, aggregatorName)
 
-    // every stage in ONE write job with ONE commit (writeMulti); one
-    // point / a backfill spanning many buckets: no hot-bucket salt
-    PointsStore.writeMulti(metadata.retention.stages.map { st =>
-      val stepTs = st.roundDown(ts)
-      (Seq((metric.id, stepTs, value, 1.0, 0))
-        .toDF("metric_id", "ts", "value", "count", "replica"), st, 1)
-    }, db.pointsPath)
-    upsertDirectories(db, Seq(metric.name).toDF("name"))
-  }
+  /** Directory glob (drivers/cassandra.py:2071-2076), derived from the
+    * catalog's metric names like `/metrics/find` (the ES model). */
+  def listDirs(db: Db, glob: String, maxResults: Int = 5000): DataFrame =
+    MetricCatalog.globDirectories(db.catalog, glob, maxResults)
 
-  /** Maintain the stored directories table: union the ancestor chains of
-    * newly created names (drivers/cassandra.py:1783-1804 creates the
-    * parent chain per metric create). Drift is tolerated and reconciled
-    * by [[repairDirectories]], mirroring the reference's repair-based
-    * consistency model. */
-  private def upsertDirectories(db: Db, names: DataFrame): Unit = {
-    val newDirs = MetricCatalog.directories(names)
-    val merged =
-      if (db.hasDirectories) db.directories.unionByName(newDirs).distinct()
-      else newDirs
-    db.commitDirectories(merged)
-  }
-
-  /** Directory glob over the STORED directories table when present
-    * (the Cassandra model, drivers/cassandra.py:2071-2076), falling back
-    * to on-the-fly derivation from metric names (the ES model). */
-  def listDirs(db: Db, glob: String, maxResults: Int = 5000): DataFrame = {
-    require(graft.glob.Glob.isValid(glob), s"invalid glob: $glob")
-    val dirs =
-      if (db.hasDirectories) db.directories
-      else MetricCatalog.directories(db.catalog)
-    dirs.filter(col("name").rlike(graft.glob.Glob.toRegex(glob)))
-      .orderBy("name").limit(maxResults)
-  }
-
-  /** Reconcile the stored directories table against the catalog: add
-    * ancestor dirs that are missing (reference repair,
-    * drivers/cassandra.py:2844-2934), drop dirs with no metric beneath
-    * (clean empty dirs, drivers/cassandra.py:2936-3050). Returns the
-    * missing set that was added. */
-  def repairDirectories(db: Db): DataFrame = {
-    import db.spark.implicits._
-    val stored =
-      if (db.hasDirectories) db.directories.select("name")
-      else Seq.empty[String].toDF("name")
-    val missing = MetricCatalog.missingDirectories(db.catalog, stored)
-      .localCheckpoint(true) // survives the version cleanup below
-    val empty = MetricCatalog.emptyDirectories(stored, db.catalog)
-    val fixed = stored.unionByName(missing)
-      .join(empty, Seq("name"), "left_anti").distinct()
-    db.commitDirectories(fixed)
-    missing
-  }
-
-  /** Batched point ingest — CLI parity with `bgutil write` fed a point
-    * list (cli/command_write.py): ONE catalog merge and one store write
-    * per stage for the whole batch, instead of a catalog rewrite per
-    * point. All points share one retention/aggregator (like a single
-    * bgutil invocation). */
+  /** Batched point ingest — `bgutil write` fed a point list
+    * (cli/command_write.py), and the one write path every CLI writer
+    * takes: names are sanitized, the batch's metrics are (re-)created in
+    * ONE [[MetricCatalog.upsert]] of their [[MetricCatalog.catalogRows]]
+    * (`updated_on` = the batch's latest ts), and every stage's points —
+    * keyed by the catalog id, staged by [[Downsample.stagePoints]] — land
+    * in one store write. All points share one retention/aggregator (like
+    * a single bgutil invocation). */
   def writePoints(db: Db, points: Seq[(String, Long, Double)],
       retentionStr: String, aggregatorName: String): Unit = {
     if (points.isEmpty) return
@@ -478,42 +380,27 @@ object Bgutil {
     val metadata = MetricMetadata(Aggregator.fromName(aggregatorName),
       Retention.fromString(retentionStr))
     syncdb(db)
-    val names = points.map(_._1).distinct
-    val maxTs = points.map(_._2).max
-    val rows = MetricCatalog.withDerivedColumns(names.toDF("name"))
-      .withColumn("id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
+    val name = MetricCatalog.sanitizedName(col("name"))
+    val metrics = points.map(_._1).distinct.toDF("name")
+      .select(name.as("name")).filter(col("name") =!= "").distinct()
       .withColumn("aggregator", lit(metadata.aggregator.name))
       .withColumn("retention", lit(metadata.retention.toString))
-      .withColumn("updated_on", lit(maxTs))
-    val merged = MetricCatalog.dedupByName(
-      db.catalog.unionByName(rows, allowMissingColumns = true))
-    db.commitCatalog(merged)
+    db.commitCatalog(MetricCatalog.upsert(Some(db.catalog),
+      MetricCatalog.catalogRows(metrics, points.map(_._2).max)))
 
-    upsertDirectories(db, names.toDF("name"))
     val raw = points.toDF("name", "ts", "value")
+      .withColumn("name", name).filter(col("name") =!= "")
       .withColumn("metric_id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
       .withColumn("aggregator", lit(metadata.aggregator.name))
     // every stage in ONE write job with ONE commit (writeMulti)
-    PointsStore.writeMulti(metadata.retention.stages.map { st =>
-      val staged =
-        if (st.stage0)
-          Downsample.lastWriteWins(raw, st.precisionS, col("ts"))
-            .select(col("metric_id"),
-              (floor(col("ts") / st.precisionS) * st.precisionS).cast("long").as("ts"),
-              col("value"), lit(1.0).as("count"), lit(0).as("replica"))
-        else
-          Downsample.rollupStage(raw, st.precisionS)
-            .select(col("metric_id"), col("ts"), col("value"), col("count"),
-              lit(0).as("replica"))
-      (staged, st, 1)
-    }, db.pointsPath)
+    PointsStore.writeMulti(metadata.retention.stages.map(st =>
+      (Downsample.stagePoints(raw, st), st, 1)), db.pointsPath)
   }
 
   /** Catalog answers memoized per committed catalog version: a version
     * directory is never rewritten, so (version, query) always has the
     * same answer, and a commit's new version is a new key — nothing is
-    * ever invalidated. The pre-versioning `<db>/catalog` layout is
-    * rewritten in place and bypasses the memo. A fixed LRU bounds it;
+    * ever invalidated. A fixed LRU bounds it;
     * every entry is glob-capped (≤ 2 × 5000 rows for a find), so the
     * memo holds at most [[CatalogMemo.Entries]] × that many rows. Points
     * are never memoized. */
@@ -537,16 +424,14 @@ object Bgutil {
     /** `compute` over `db`'s current catalog, memoized per (version,
       * `query`); `query` names both the kind of answer and its
       * arguments. */
-    def apply[V <: AnyRef](db: Db, query: Product)(compute: DataFrame => V): V =
-      db.catalogVersion match {
-        case None => compute(db.catalog)
-        case Some(v) =>
-          val key = (v, query)
-          val cell = lru.synchronized(lru.computeIfAbsent(key,
-            _ => new Cell(() => compute(db.catalogAt(v)))))
-          try cell.value.asInstanceOf[V]
-          catch { case e: Throwable => lru.synchronized(lru.remove(key, cell)); throw e }
-      }
+    def apply[V <: AnyRef](db: Db, query: Product)(compute: DataFrame => V): V = {
+      val v = db.catalogVersion
+      val key = (v, query)
+      val cell = lru.synchronized(lru.computeIfAbsent(key,
+        _ => new Cell(() => compute(db.catalogAt(v)))))
+      try cell.value.asInstanceOf[V]
+      catch { case e: Throwable => lru.synchronized(lru.remove(key, cell)); throw e }
+    }
   }
 
   /** The metrics a glob matches (glob-capped, name-ordered), memoized per

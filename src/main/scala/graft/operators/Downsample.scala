@@ -52,6 +52,23 @@ object Downsample {
         mergedCount().as("count"))
   }
 
+  /** Raw points (metric_id, ts, value, aggregator) as stored at stage
+    * `st` — the batch form of the carbon write path: stage0 keeps the last
+    * write per step with count 1 ([[lastWriteWins]]), a coarser stage holds
+    * Aggregator.merge's (value, count) partial per step ([[rollupStage]]).
+    * Emits metric_id, ts (step-aligned), value, count, replica = 0 — the
+    * [[graft.sources.PointsStore.write]] contract. */
+  def stagePoints(raw: DataFrame, st: graft.model.Stage): DataFrame =
+    if (st.stage0)
+      lastWriteWins(raw, st.precisionS, col("ts"))
+        .select(col("metric_id"),
+          (floor(col("ts") / st.precisionS) * st.precisionS).cast("long").as("ts"),
+          col("value"), lit(1.0).as("count"), lit(0).as("replica"))
+    else
+      rollupStage(raw, st.precisionS)
+        .select(col("metric_id"), col("ts"), col("value"), col("count"),
+          lit(0).as("replica"))
+
   /** Merge already-aggregated (value, count) rows into a coarser stage —
     * same dispatch but counts are summed (weighted), matching
     * Aggregator.merge over partials. Expects: metric_id, ts, value, count,

@@ -48,11 +48,37 @@ object MetricCatalog {
           .otherwise(lit("")))
   }
 
-  /** Derive the metric id column with the native UUIDv5 expression
-    * (graft.functions.MetricUuid5) — codegen'd, so id assignment for
-    * billions of names stays a projection inside the scan stage. */
-  def withMetricId(df: DataFrame): DataFrame =
-    df.withColumn("id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
+  /** `MetricName.sanitize` as a column: drop empty path components,
+    * "a..b." → "a.b" (metric.py:181-194). Every writer applies it before
+    * a name is keyed, so a metric has one name however it came in. Two
+    * regex replaces rather than split/filter/join: a higher-order
+    * `filter` has no generated code, and this runs on every carbon line. */
+  def sanitizedName(name: Column): Column =
+    regexp_replace(regexp_replace(name, "\\.\\.+", "."), "^\\.|\\.\\z", "")
+
+  /** The one way a catalog row is made. `metrics` carries name,
+    * aggregator, retention and optionally xfilesfactor; each row gains the
+    * derived p0..pN/depth/parent columns, `updated_on`, and `id` = UUIDv5
+    * of the name (native graft_uuid5, codegen'd) — the key every writer
+    * stores the metric's points under. */
+  def catalogRows(metrics: DataFrame, updatedOn: Long): DataFrame =
+    withDerivedColumns(metrics)
+      .withColumn("id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
+      .withColumn("updated_on", lit(updatedOn))
+
+  /** The one catalog upsert (create_metric, drivers/cassandra.py
+    * 1783-1804): [[dedupByName]] over the committed catalog and the
+    * incoming [[catalogRows]], an incoming row winning a tie on
+    * `updated_on` — so a metric re-created with a new aggregator or
+    * retention at the same instant takes the new one. */
+  def upsert(existing: Option[DataFrame], incoming: DataFrame): DataFrame =
+    existing match {
+      case None => incoming
+      case Some(cat) => dedupByName(
+        cat.withColumn("__incoming", lit(0)).unionByName(
+          incoming.withColumn("__incoming", lit(1)), allowMissingColumns = true),
+        col("__incoming")).drop("__incoming")
+    }
 
   /** Resolve a glob over the catalog: prunable component predicates + the
     * authoritative anchored-regex post-filter, sorted by name and capped —
@@ -122,9 +148,11 @@ object MetricCatalog {
   }
 
   /** Latest-version dedup by name — the ES doc resolution rule
-    * (drivers/elasticsearch.py:667-677): keep the most recent updated_on. */
-  def dedupByName(catalog: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("name")).orderBy(col("updated_on").desc)
+    * (drivers/elasticsearch.py:667-677): keep the most recent updated_on,
+    * the greatest `tieBreak` among rows of one updated_on. */
+  private def dedupByName(catalog: DataFrame, tieBreak: Column): DataFrame = {
+    val w = Window.partitionBy(col("name"))
+      .orderBy(col("updated_on").desc, tieBreak.desc)
     catalog.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
   }
@@ -171,12 +199,14 @@ object MetricCatalog {
   def orphanPoints(points: DataFrame, catalog: DataFrame): DataFrame =
     points.join(catalog.select(col("id").as("metric_id")), Seq("metric_id"), "left_anti")
 
-  /** Directories missing from a directory table (bgutil repair,
-    * drivers/cassandra.py:2844-2934): expected ancestor set minus existing. */
+  /** Directories missing from a directory table (drivers/cassandra.py
+    * 2844-2934): expected ancestor set minus existing. The store keeps no
+    * directory table — directories derive from the catalog — so this and
+    * [[emptyDirectories]] serve the oracle's reconciliation queries. */
   def missingDirectories(catalog: DataFrame, existingDirs: DataFrame): DataFrame =
     directories(catalog).join(existingDirs, Seq("name"), "left_anti")
 
-  /** Directories with no metric beneath them (bgutil clean empty dirs,
+  /** Directories with no metric beneath them (clean empty dirs,
     * drivers/cassandra.py:2936-3050): anti-join dirs against the ancestor
     * closure of live metrics. */
   def emptyDirectories(existingDirs: DataFrame, catalog: DataFrame): DataFrame =

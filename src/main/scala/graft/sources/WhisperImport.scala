@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.model.{Retention, Stage}
+import graft.model.{MetricName, Retention, Stage}
 
 /** Whisper (.wsp) bulk import — S6 (cli/import_whisper.py:51-303) as a
   * Spark job: `binaryFile` datasource scan → pure-JVM byte decoding →
@@ -43,12 +43,13 @@ object WhisperImport {
 
   /** Metric name from a .wsp path under `rootDir`
     * (import_whisper.py:51-67): relative path, extension stripped,
-    * separators → dots, prefix prepended. */
+    * separators → dots, prefix prepended, sanitized like every other
+    * writer's names. */
   def metricNameFromPath(rootDir: String, prefix: String, wspPath: String): String = {
     val root = rootDir.stripSuffix("/") + "/"
     val rel = wspPath.stripPrefix("file:").stripPrefix(root.stripPrefix("file:"))
     require(!rel.contains(".."), s"$wspPath not a child of $rootDir")
-    prefix + rel.stripSuffix(".wsp").replace("/", ".")
+    MetricName.sanitize(prefix + rel.stripSuffix(".wsp").replace("/", "."))
   }
 
   /** Decode the header + archive table (whisper.info equivalent). */
@@ -90,7 +91,8 @@ object WhisperImport {
   /** Scan `rootDir` recursively for .wsp files and decode them all.
     * Returns (metadata, points):
     *   metadata: name, aggregator, retention, xfilesfactor
-    *   points:   metric_id (= name), stage, ts, value, count, replica
+    *   points:   metric_id (UUIDv5 of the name, the catalog id), stage,
+    *             bucket, ts, value, count, replica — the store's layout
     * File-level parallelism comes from the binaryFile scan partitioning;
     * at scale the decode is embarrassingly parallel (one task chain per
     * file batch, no shuffle until the store write). */
@@ -111,31 +113,26 @@ object WhisperImport {
     }.toDF("name", "aggregator", "retention", "xfilesfactor")
 
     val points = files.flatMap { case (path, bytes) =>
-      val name = metricNameFromPath(rootDir, prefix, path)
+      val id = MetricName.metricId(metricNameFromPath(rootDir, prefix, path))
+      val span = parseInfo(bytes).retention.stages.map(st =>
+        st.toString -> PointsStore.bucketSpanS(st.precisionS)).toMap
       decodePoints(bytes).map { case (stage, ts, v, c) =>
-        (name, stage, ts, v, c, 0)
+        (id, stage, ts / span(stage) * span(stage), ts, v, c, 0)
       }
-    }.toDF("metric_id", "stage", "ts", "value", "count", "replica")
+    }.toDF("metric_id", "stage", "bucket", "ts", "value", "count", "replica")
 
     (meta, points)
   }
 
-  /** Full import into a bgutil-layout database: catalog rows derived with
-    * the usual tree columns, points written per stage through
-    * [[PointsStore]] (pruned-readable immediately). */
+  /** Full import into a bgutil-layout database: every stage's points in
+    * one store append (each decoded row already knows its stage and
+    * bucket, so no stage set is collected first), and the imported
+    * metrics' [[MetricCatalog.catalogRows]], stamped with the import
+    * time, returned for the caller to commit. */
   def importToStore(spark: SparkSession, rootDir: String, storeDir: String,
       prefix: String = ""): DataFrame = {
     val (meta, points) = importDirectory(spark, rootDir, prefix)
-    val cached = points.cache()
-    val stages = cached.select("stage").distinct().collect()
-      .map(_.getString(0))
-    stages.foreach { stageStr =>
-      val st = Stage.fromString(stageStr)
-      PointsStore.write(
-        cached.filter(col("stage") === stageStr).drop("stage"),
-        storeDir, st)
-    }
-    cached.unpersist()
-    MetricCatalog.withMetricId(MetricCatalog.withDerivedColumns(meta))
+    PointsStore.append(points.repartition(col("stage"), col("bucket")), storeDir)
+    MetricCatalog.catalogRows(meta, System.currentTimeMillis() / 1000)
   }
 }

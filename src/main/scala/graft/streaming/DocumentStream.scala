@@ -55,7 +55,7 @@ object DocumentStream {
   /** End-to-end curation job: gate → dedup → parquet append, stamped
     * with `batch_seq` = batchId so a micro-batch replayed after a crash
     * resolves last-write-wins on read (same idempotency contract as
-    * [[StreamingIngest.startEventTimeIngestJob]]). */
+    * [[StreamingIngest.startIngestJob]]'s points). */
   def startCurationJob(docs: DataFrame, textCol: String,
       eventTimeCol: String, outDir: String, checkpointDir: String,
       minQuality: Double = 0.0,

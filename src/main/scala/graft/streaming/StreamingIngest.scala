@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -33,8 +33,10 @@ object StreamingIngest {
     * socket/text-file streaming source yields) into [[RawPoint]]s.
     * Malformed lines are DROPPED, like carbon's per-line try/except;
     * `nan` values parse (NaN is the protocol's missing marker,
-    * metric.py:32). Pure column expressions — the parse stays inside
-    * whole-stage codegen on the ingest hot path. */
+    * metric.py:32). Names are sanitized here, so the ring-buffer state,
+    * the auto-create and the spool overlay all see one name. Pure column
+    * expressions — the parse stays inside whole-stage codegen on the
+    * ingest hot path. */
   def parseCarbonLines(lines: DataFrame, lineCol: String = "value"): Dataset[RawPoint] = {
     val spark = lines.sparkSession
     import spark.implicits._
@@ -43,7 +45,8 @@ object StreamingIngest {
       .select(parts.as("p"))
       .filter(size(col("p")) === 3)
       .select(
-        element_at(col("p"), 1).as("metric"),
+        graft.sources.MetricCatalog.sanitizedName(element_at(col("p"), 1))
+          .as("metric"),
         try_element_at(col("p"), lit(3)).try_cast(LongType).as("ts"),
         try_element_at(col("p"), lit(2)).try_cast(DoubleType).as("value"))
       // try_cast yields null on garbage (non-numeric value/ts) → drop,
@@ -136,8 +139,8 @@ object StreamingIngest {
           val st = Stage.fromString(stageStr.stripSuffix("_0").stripSuffix("_aggr"),
             stage0 = stageStr.endsWith("_0"))
           // points are keyed by the metric's UUIDv5 like the reference's
-          // tables (metric.py:157-178) and Bgutil.write — the same id
-          // auto-create commits to the catalog, so a planned read links
+          // tables (metric.py:157-178) and every other writer — the same
+          // id auto-create commits to the catalog, so a planned read links
           // catalog.id → points.metric_id with no name/ID mismatch
           val rows = batch.filter(col("stage") === stageStr)
             .select(graft.functions.GraftFunctions.graft_uuid5(col("metric"))
@@ -147,7 +150,7 @@ object StreamingIngest {
             // readers resolve upserts by last-write-wins on batch_seq
             .withColumn("batch_seq", lit(batchId))
           // in-batch last-write-wins per (metric, step): the LATEST RAW
-          // TS wins (matching batchDownsample's rule and the hot-read
+          // TS wins (matching Downsample.stagePoints' rule and the hot-read
           // overlay, so a slot answers identically on every path);
           // arrival order only breaks exact-duplicate-ts ties
           val deduped = Downsample.lastWriteWins(
@@ -165,10 +168,12 @@ object StreamingIngest {
   /** Metric auto-create for one micro-batch (plugins/carbon.py:310-369:
     * the creation thread drains a queue of unseen metrics and writes
     * metadata before points become visible): left-anti the batch's
-    * metric names against the committed catalog, derive full catalog
-    * rows (id = UUIDv5, p0..pN/depth/parent, metadata from
-    * `metadataFor`) for the genuinely new ones, and commit a new catalog
-    * version. Replay-idempotent by construction — a replayed batch
+    * metric names against the committed catalog, make
+    * [[graft.sources.MetricCatalog.catalogRows]] (metadata from
+    * `metadataFor`) for the genuinely new ones, and commit their
+    * [[graft.sources.MetricCatalog.upsert]]. Unlike `bgutil write`, which
+    * re-creates, only unseen metrics are created, like the carbon
+    * plugin. Replay-idempotent by construction — a replayed batch
     * left-antis to empty against the already-updated catalog and
     * commits nothing. All relations are metric-metadata-sized; the
     * `metadataFor` mapping runs distributed (Dataset.map), never a
@@ -189,99 +194,8 @@ object StreamingIngest {
       val m = metadataFor(n)
       (n, m.aggregator.name, m.retention.toString)
     }.toDF("name", "aggregator", "retention")
-    val enriched = MetricCatalog.withDerivedColumns(rows)
-      .withColumn("id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
-      .withColumn("updated_on", lit(nowS))
+    val enriched = MetricCatalog.catalogRows(rows, nowS)
       .localCheckpoint(true) // tiny; avoids recomputing for the commit
-    if (!enriched.isEmpty) {
-      val merged = existing match {
-        case Some(cat) => MetricCatalog.dedupByName(
-          cat.unionByName(enriched, allowMissingColumns = true))
-        case None => enriched
-      }
-      store.commit(merged)
-    }
-  }
-
-  /** Event-time windowed rollup — the pure Structured Streaming
-    * alternative for coarse stages: tumbling windows of the stage
-    * precision with a watermark bounding out-of-order tolerance (the
-    * reference's ±15 min, drivers/cassandra.py:638-640). Emits final
-    * (metric, ts, value, count) averages-as-partials once the watermark
-    * passes; late points beyond the watermark are dropped, mirroring the
-    * ring buffer's eviction of too-old points. */
-  def windowedRollupStream(
-      pointsStream: Dataset[RawPoint],
-      precisionS: Long,
-      watermark: String = "15 minutes"): DataFrame = {
-    pointsStream
-      .withColumn("event_time", col("ts").cast("timestamp"))
-      .withWatermark("event_time", watermark)
-      .groupBy(col("metric"),
-        window(col("event_time"), s"$precisionS seconds"))
-      .agg(sum(when(!isnan(col("value")), col("value"))).as("value"),
-        count(when(!isnan(col("value")), col("value"))).cast("double").as("count"))
-      .select(col("metric").as("metric_id"),
-        col("window.start").cast("long").as("ts"),
-        col("value"), col("count"))
-  }
-
-  /** Event-time ingest job for one aggregated stage: the watermark-based
-    * alternative to the stateful flow. Windows are emitted ONCE, when the
-    * watermark passes (append mode) — final results only, so the store
-    * needs no batch_seq upsert resolution, at the price of the
-    * watermark's emission latency and hard lateness cutoff (the
-    * reference's ±15 min, drivers/cassandra.py:638-640). Rows land in
-    * the standard [[graft.sources.PointsStore]] layout, pruned-readable
-    * like any batch write.
-    *
-    * Although append-mode windows are final, a micro-batch REPLAYED after
-    * a crash (failure between the parquet append and the checkpoint
-    * commit) appends its rows a second time. Stamping `batch_seq` =
-    * batchId makes the sink idempotent: the store read path resolves
-    * duplicates last-write-wins on batch_seq (PointsStore.read), exactly
-    * like the stateful [[startIngestJob]]. */
-  def startEventTimeIngestJob(
-      pointsStream: Dataset[RawPoint],
-      stage: Stage,
-      storeDir: String,
-      checkpointDir: String,
-      watermark: String = "15 minutes") = {
-    import graft.sources.PointsStore
-    windowedRollupStream(pointsStream, stage.precisionS, watermark)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        PointsStore.write(
-          batch.withColumn("replica", lit(0))
-            .withColumn("batch_seq", lit(batchId)),
-          storeDir, stage)
-        ()
-      }
-  }
-
-  /** Batch view of the same dataflow for backfills: per-metric dedup
-    * (last-write-wins on ingest order) then one grouped rollup per stage —
-    * semantically the steady-state result of feeding every point through
-    * the incremental path. */
-  def batchDownsample(points: DataFrame, catalog: DataFrame): DataFrame = {
-    import graft.operators.Downsample
-    val withMeta = points.join(broadcast(
-      catalog.select(col("name").as("metric_id"), col("aggregator"),
-        col("retention"))), Seq("metric_id"))
-    val stages = catalog.select("retention").distinct().collect()
-      .map(r => Retention.fromString(r.getString(0)))
-      .flatMap(r => r.stages.map(s => (r.toString, s)))
-    stages.map { case (ret, st) =>
-      val forRet = withMeta.filter(col("retention") === ret)
-      val rolled =
-        if (st.stage0) Downsample.lastWriteWins(forRet, st.precisionS,
-          col("ts")).select(col("metric_id"), col("ts"), col("value"),
-          lit(1.0).as("count"))
-        else Downsample.rollupStage(forRet, st.precisionS)
-          .select(col("metric_id"), col("ts"), col("value"), col("count"))
-      rolled.withColumn("stage", lit(st.toString))
-    }.reduce(_ unionByName _)
+    if (!enriched.isEmpty) store.commit(MetricCatalog.upsert(existing, enriched))
   }
 }

@@ -6,7 +6,7 @@ import graft.operators.{Downsample, TimeSeriesReader}
 import graft.sources.{MetricCatalog, PointsStore}
 import graft.streaming.StreamingIngest
 
-/** End-to-end on the driver-provided testdata: events → batch downsample →
+/** End-to-end on the driver-provided testdata: events → staged points →
   * partitioned store → glob find → re-aggregated read, checked against a
   * direct computation (SURVEY.md §3.1/§3.2 as one flow). */
 class FullPipelineSpec extends SparkSuite {
@@ -22,28 +22,23 @@ class FullPipelineSpec extends SparkSuite {
       case _ => unix_timestamp(col("ts"))
     }
     val raw = ev.select(
-      concat(lit("ev."), col("event_type"), lit("."), col("user_id") % 10).as("metric_id"),
+      concat(lit("ev."), col("event_type"), lit("."), col("user_id") % 10).as("name"),
       tsS.as("ts"),
       col("value"))
 
     val retention = Retention.fromString("1440*60s:720*3600s")
-    val catalog = MetricCatalog.withDerivedColumns(
-      raw.select(col("metric_id").as("name")).distinct())
-      .withColumn("id", col("name"))
-      .withColumn("aggregator", lit("average"))
-      .withColumn("retention", lit(retention.toString))
+    val catalog = MetricCatalog.catalogRows(raw.select(col("name"),
+      lit("average").as("aggregator"), lit(retention.toString).as("retention"))
+      .distinct(), 0L)
 
-    // ingest: batch downsample all stages, write each into the store
-    val rolled = StreamingIngest.batchDownsample(
-      raw.withColumn("metric_id", col("metric_id")), catalog)
+    // ingest: stage every point for each stage, keyed by the catalog id,
+    // and land all stages in one store write
+    val keyed = raw
+      .withColumn("metric_id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
+      .withColumn("aggregator", lit("average"))
     val storeDir = java.nio.file.Files.createTempDirectory("pipe").toString
-    retention.stages.foreach { st =>
-      PointsStore.write(
-        rolled.filter(col("stage") === st.toString)
-          .select("metric_id", "ts", "value", "count")
-          .withColumn("replica", lit(0)),
-        storeDir, st)
-    }
+    PointsStore.writeMulti(retention.stages.map(st =>
+      (Downsample.stagePoints(keyed, st), st, 1)), storeDir)
 
     // read back at stage1 (3600 s) through glob find + grouped fetch: a
     // day that ended a day before nowS is past stage0's one-day retention
@@ -57,7 +52,8 @@ class FullPipelineSpec extends SparkSuite {
 
     // direct oracle: the ingest path last-write-wins per 60 s stage0 step,
     // so the expected hourly average is over the deduped step values
-    val want = Downsample.lastWriteWins(raw, 60, col("ts"))
+    val want = Downsample.lastWriteWins(raw.withColumnRenamed("name", "metric_id"),
+        60, col("ts"))
       .filter(col("metric_id").rlike("^ev\\.click\\.[^.]*$"))
       .filter(col("ts") >= 1704067200L && col("ts") < 1704067200L + 86400)
       .groupBy(col("metric_id").as("name"),

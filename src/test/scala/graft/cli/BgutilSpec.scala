@@ -82,27 +82,21 @@ class BgutilSpec extends SparkSuite {
     }
   }
 
-  test("directories table maintained on write, reconciled by repair") {
-    import spark.implicits._
+  test("directories derive from the catalog, never drift") {
     val dir = java.nio.file.Files.createTempDirectory("bgutil_dirs").toString
     val db = Db(spark, dir)
     Bgutil.syncdb(db)
     Bgutil.write(db, "sys.cpu.0.load", 60L, 1.0, "60*60s:24*3600s", "average")
     Bgutil.writePoints(db, Seq(("app.api.req", 60L, 2.0)),
       "60*60s:24*3600s", "total")
-    assert(db.hasDirectories)
     assert(Bgutil.listDirs(db, "**").collect().map(_.getString(0)).toSeq ===
       Seq("app", "app.api", "sys", "sys.cpu", "sys.cpu.0"))
     assert(Bgutil.listDirs(db, "sys.*").collect().map(_.getString(0)).toSeq ===
       Seq("sys.cpu"))
-
-    // tamper: drop one real dir, add a bogus empty one
-    db.commitDirectories(
-      Seq("app", "app.api", "sys", "sys.cpu", "zz.ghost").toDF("name"))
-    val added = Bgutil.repairDirectories(db)
-    assert(added.collect().map(_.getString(0)).toSeq === Seq("sys.cpu.0"))
+    // a delete takes its directories with it: nothing to reconcile
+    Bgutil.delete(db, "app.**")
     assert(Bgutil.listDirs(db, "**").collect().map(_.getString(0)).toSeq ===
-      Seq("app", "app.api", "sys", "sys.cpu", "sys.cpu.0")) // ghost gone
+      Seq("sys", "sys.cpu", "sys.cpu.0"))
   }
 
   test("catalog commits are versioned behind an atomic CURRENT pointer") {
@@ -143,6 +137,60 @@ class BgutilSpec extends SparkSuite {
     val st1 = graft.sources.PointsStore.read(spark, db.pointsPath,
       graft.model.Stage(24, 3600, stage0 = false), 0L, 7200L)
     assert(st1.count() === 3) // 2 metrics in window 0 + 1 in window 3600
+  }
+
+  test("write of nan stores count 0 at an average metric's coarse stage") {
+    import org.apache.spark.sql.functions.col
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("bgnan").toString)
+    Bgutil.syncdb(db)
+    Bgutil.write(db, "sys.nan.load", 120L, Double.NaN, "60*60s:24*3600s", "average")
+    // Aggregator.merge (metric.py:340-370): an average counts only
+    // non-NaN points, the same partial writePoints stores
+    val st1 = graft.sources.PointsStore.read(spark, db.pointsPath,
+      graft.model.Stage(24, 3600, stage0 = false), 0L, 3600L)
+      .select("ts", "value", "count").collect()
+    assert(st1.length === 1)
+    assert(st1.head.getLong(0) === 0L && st1.head.getDouble(1).isNaN)
+    assert(st1.head.getDouble(2) === 0.0)
+    val s0 = graft.sources.PointsStore.read(spark, db.pointsPath,
+      graft.model.Stage(60, 60, stage0 = true), 0L, 3600L)
+      .filter(col("ts") === 120L).select("count").collect()
+    assert(s0.map(_.getDouble(0)).toSeq === Seq(1.0))
+  }
+
+  test("carbon ingest and writePoints sanitize names before keying them") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.model.{Aggregator, MetricMetadata, Retention}
+    import graft.streaming.CarbonListener
+    val dir = java.nio.file.Files.createTempDirectory("bgsanitize").toString
+    val db = Db(spark, dir)
+    Bgutil.syncdb(db)
+    val retention = "60*60s:24*3600s"
+    val spool = java.nio.file.Paths.get(dir, "carbon_spool")
+    java.nio.file.Files.createDirectories(spool)
+    java.nio.file.Files.writeString(spool.resolve("batch-0.txt"), "s..a. 1.0 60\n")
+    CarbonListener.ingestFromSpool(spark, spool.toString, db.pointsPath,
+        s"$dir/ckpt", _ => MetricMetadata(Aggregator.Average,
+          Retention.fromString(retention)),
+        autoCreate = Some(db.catalogStore))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    Bgutil.writePoints(db, Seq(("s..b", 60L, 2.0)), retention, "average")
+    assert(Bgutil.list(db, "**").collect().map(_.getString(0)).toSeq ===
+      Seq("s.a", "s.b"))
+    val got = Bgutil.read(db, "s.*", 60L, 120L).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got === Set(("s.a", 60L, 1.0), ("s.b", 60L, 2.0)))
+  }
+
+  test("a re-created metric at the same updated_on takes the new metadata") {
+    import org.apache.spark.sql.functions.col
+    val db = Db(spark, java.nio.file.Files.createTempDirectory("bgtie").toString)
+    Bgutil.syncdb(db)
+    Bgutil.writePoints(db, Seq(("t.m", 60L, 1.0)), "60*60s:24*3600s", "average")
+    Bgutil.writePoints(db, Seq(("t.m", 60L, 2.0)), "60*60s:24*3600s", "total")
+    assert(db.catalog.filter(col("name") === "t.m")
+      .select("aggregator", "updated_on").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("total", 60L)))
   }
 
   test("read is one planned scan per retention class, not a per-metric union") {
@@ -250,8 +298,6 @@ class BgutilSpec extends SparkSuite {
 
   test("copy: copied points read back under the new name once it has a " +
       "catalog row") {
-    import org.apache.spark.sql.functions.{col, lit}
-    import graft.functions.GraftFunctions.graft_uuid5
     import graft.sources.MetricCatalog
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("bgcopy").toString
@@ -262,13 +308,9 @@ class BgutilSpec extends SparkSuite {
       ("sys.cpu.0.load", 180L, 3.0)), retention, "average")
     Bgutil.copy(db, "sys.cpu.0.load", "copy.")
     // the copy writes points only; give the destination name its row
-    db.commitCatalog(MetricCatalog.dedupByName(db.catalog.unionByName(
-      MetricCatalog.withDerivedColumns(Seq("copy.sys.cpu.0.load").toDF("name"))
-        .withColumn("id", graft_uuid5(col("name")))
-        .withColumn("aggregator", lit("average"))
-        .withColumn("retention", lit(retention))
-        .withColumn("updated_on", lit(180L)),
-      allowMissingColumns = true)))
+    db.commitCatalog(MetricCatalog.upsert(Some(db.catalog),
+      MetricCatalog.catalogRows(Seq(("copy.sys.cpu.0.load", "average", retention))
+        .toDF("name", "aggregator", "retention"), 180L)))
     def series(glob: String) = Bgutil.read(db, glob, 120L, 240L)
       .collect().map(r => (r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(_._1).toSeq

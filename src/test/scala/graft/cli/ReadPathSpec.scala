@@ -227,25 +227,6 @@ class ReadPathSpec extends SparkSuite {
       Seq((120000L, None), (120060L, Some(1.0)), (120120L, None)))
   }
 
-  test("a legacy unversioned catalog, rewritten in place, is not memoized") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("memolegacy").toString
-    val db = Db(spark, dir)
-    def writeCatalog(ns: String*): Unit =
-      MetricCatalog.withMetricId(MetricCatalog.withDerivedColumns(ns.toDF("name")))
-        .withColumn("aggregator", lit("average"))
-        .withColumn("retention", lit("10000*60s"))
-        .withColumn("updated_on", lit(0L))
-        .write.mode("overwrite").parquet(s"$dir/catalog")
-    writeCatalog("l.a")
-    assert(db.catalogVersion === None)
-    val entries = Bgutil.CatalogMemo.entries
-    assert(Bgutil.resolve(db, "l.*").map(_.name) === Seq("l.a"))
-    assert(Bgutil.CatalogMemo.entries === entries)
-    writeCatalog("l.a", "l.b")
-    assert(Bgutil.resolve(db, "l.*").map(_.name) === Seq("l.a", "l.b"))
-  }
-
   test("the catalog memo is a bounded LRU") {
     val db = Db(spark, java.nio.file.Files.createTempDirectory("memolru").toString)
     Bgutil.syncdb(db)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.model.Stage
+import graft.model.{MetricName, Stage}
 
 /** Whisper bulk import (S6, cli/import_whisper.py:51-303) against a
   * hand-crafted .wsp binary in whisper's public pack layout. */
@@ -68,8 +68,28 @@ class WhisperImportSpec extends SparkSuite {
     val catalog = WhisperImport.importToStore(spark, root, store, "w.")
     assert(catalog.count() === 2)
     val s0 = PointsStore.read(spark, store, Stage(3, 60, stage0 = true), 0L, 240L)
-      .filter(col("metric_id") === "w.sys.cpu.load")
+      .filter(col("metric_id") === MetricName.metricId("w.sys.cpu.load"))
       .orderBy("ts").select("ts", "value").as[(Long, Double)].collect()
     assert(s0.toSeq === Seq((60L, 1.5), (120L, 2.5)))
+  }
+
+  test("imported points read back through the returned catalog") {
+    import graft.cli.Bgutil
+    import graft.operators.TimeSeriesReader
+    val root = Files.createTempDirectory("wsp_read").toString
+    Files.createDirectories(Paths.get(s"$root/sys/cpu"))
+    Files.write(Paths.get(s"$root/sys/cpu/load.wsp"), wspBytes)
+    val db = Bgutil.Db(spark, Files.createTempDirectory("wsp_db").toString)
+    val catalog = WhisperImport.importToStore(spark, root, db.pointsPath, "w.")
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(_._2).toSeq
+    val want = Seq(("w.sys.cpu.load", 60L, Some(1.5)),
+      ("w.sys.cpu.load", 120L, Some(2.5)), ("w.sys.cpu.load", 180L, None))
+    assert(values(TimeSeriesReader.findAndFetchPlanned(spark, catalog,
+      db.pointsPath, "w.sys.cpu.*", 60L, 240L, nowS = 240L)) === want)
+    // committed, the catalog serves the CLI read face too
+    db.commitCatalog(catalog)
+    assert(values(Bgutil.read(db, "w.sys.cpu.*", 60L, 240L)) === want)
   }
 }

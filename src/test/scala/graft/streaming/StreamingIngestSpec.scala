@@ -203,48 +203,6 @@ class AutoCreateIngestSpec extends graft.SparkSuite {
   }
 }
 
-class WindowedRollupSpec extends graft.SparkSuite {
-  import spark.implicits._
-  import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-  import org.apache.spark.sql.streaming.OutputMode
-  import graft.streaming.StreamingIngest.RawPoint
-
-  test("watermarked tumbling rollup finalizes windows, drops too-late points") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[RawPoint]
-    val out = StreamingIngest.windowedRollupStream(
-      input.toDS(), precisionS = 60, watermark = "120 seconds")
-    val q = out.writeStream.format("memory").queryName("wr_out")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(RawPoint("m", 10L, 1.0), RawPoint("m", 20L, 3.0))
-      q.processAllAvailable()
-      // window [0,60) not final yet (watermark at 20-120 < 60)
-      assert(spark.table("wr_out").count() === 0)
-
-      // event time advances past 60+120 -> [0,60) finalizes
-      input.addData(RawPoint("m", 200L, 5.0))
-      q.processAllAvailable()
-      input.addData(RawPoint("m", 300L, 7.0))
-      q.processAllAvailable()
-      val rows = spark.table("wr_out")
-        .select("metric_id", "ts", "value", "count")
-        .as[(String, Long, Double, Double)].collect().toSet
-      assert(rows.contains(("m", 0L, 4.0, 2.0)))
-
-      // a point far behind the watermark is dropped, not re-emitted
-      input.addData(RawPoint("m", 5L, 100.0), RawPoint("m", 400L, 9.0))
-      q.processAllAvailable()
-      val after = spark.table("wr_out")
-        .filter($"ts" === 0L)
-        .as[(String, Long, Double, Double)].collect().toSet
-      assert(after === Set(("m", 0L, 4.0, 2.0)))
-    } finally {
-      q.stop(); spark.sql("DROP TABLE IF EXISTS wr_out")
-    }
-  }
-}
-
 object StreamingIngestSpec {
   /** Held outside the suite so stateful-stream closures never capture the
     * (non-serializable) test class. */
