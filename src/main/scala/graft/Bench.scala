@@ -286,18 +286,48 @@ object Bench {
 
   /** What one query run cost the scheduler: its jobs' callsites and its
     * completed stages (each with its task count and task metrics). */
-  private class RunProfile extends org.apache.spark.scheduler.SparkListener {
+  private[graft] class RunProfile
+      extends org.apache.spark.scheduler.SparkListener {
     import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+      SparkListenerSQLExecutionStart}
     val jobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
-    // a stage's name is the short callsite of the action that created
-    // it; a job's result stage is its last-created, highest-id stage
+    // callsite of each running SQL execution, by execution id
+    private val sqlSites =
+      new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        shortCallSite(s.details).foreach(sqlSites.put(s.executionId, _))
+      case s: SparkListenerSQLExecutionEnd => sqlSites.remove(s.executionId)
+      case _ =>
+    }
+    // a job inside a SQL execution takes the execution's callsite: AQE
+    // submits query-stage jobs from a pool thread, whose own callsite
+    // names no program line. Any other job takes its result stage's
+    // name — the short callsite of the action that created it (the
+    // result stage is the job's last-created, highest-id stage)
     override def onJobStart(j: SparkListenerJobStart): Unit =
-      jobSites.add(j.stageInfos.sortBy(_.stageId).lastOption.map(_.name)
-        .getOrElse("?"))
+      jobSites.add(Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(sqlSites.get(id.toLong)))
+        .getOrElse(j.stageInfos.sortBy(_.stageId).lastOption.map(_.name)
+          .getOrElse("?")))
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       stages.add(s.stageInfo)
   }
+
+  /** A callsite's short form (`collect at Foo.scala:12`), rebuilt from
+    * its long form, whose first frame is the last Spark method and whose
+    * second is the first program frame. */
+  private def shortCallSite(longForm: String): Option[String] =
+    longForm.split("\n") match {
+      case Array(sparkFrame, userFrame, _*) =>
+        val method = sparkFrame.takeWhile(_ != '(').split('.').last
+        val at = userFrame.dropWhile(_ != '(').drop(1).takeWhile(_ != ')')
+        Some(s"$method at $at")
+      case _ => None
+    }
 
   /** Time each query `reps` passes (interleaved) on the noop sink, one
     * line per query run: wall, plan construction, jobs, stages, tasks

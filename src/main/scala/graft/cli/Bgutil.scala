@@ -117,7 +117,7 @@ object Bgutil {
         "  compactscdlog <logDir>                        drop an SCD changelog's replay duplicates\n" +
         "  compactlayout <dir> [nFiles]                  refold an append-fragmented z-order layout\n" +
         "  read <glob> <startS> <endS> [maxDataPoints]   dense series, optionally consolidated\n" +
-        "  render <glob> <startS> <endS> [fn[:arg]...]   apply graphite function chain\n" +
+        "  render <target> <startS> <endS> [maxDataPoints]  evaluate a graphite target expression\n" +
         "  dirs <glob>                                   directory glob, derived from the catalog\n" +
         "  clustersdiff <otherDb> <t0> <t1> <glob...>    cross-cluster diff + timing pctls\n" +
         "  carbon <port> [retention] [aggregator]        carbon plaintext daemon -> streaming ingest\n" +
@@ -149,8 +149,10 @@ object Bgutil {
     case "read" => read(db, rest(0), rest(1).toLong, rest(2).toLong,
       maxDataPoints = if (rest.length > 3) rest(3).toInt else 0)
       .orderBy("name", "ts").show(200)
-    case "render" => render(db, rest(0), rest(1).toLong, rest(2).toLong,
-      rest.drop(3).toSeq).show(200, truncate = false)
+    case "render" => deterministicOrder(RenderTarget.render(db, rest(0),
+      rest(1).toLong, rest(2).toLong,
+      maxDataPoints = if (rest.length > 3) rest(3).toInt else 0))
+      .show(200, truncate = false)
     case "list" => list(db, rest(0)).show(200, truncate = false)
     case "du" => du(db).show(200, truncate = false)
     case "stats" => stats(db).show(200, truncate = false)
@@ -388,7 +390,12 @@ object Bgutil {
     db.commitCatalog(MetricCatalog.upsert(Some(db.catalog),
       MetricCatalog.catalogRows(metrics, points.map(_._2).max)))
 
-    val raw = points.toDF("name", "ts", "value")
+    // a partitioned source, not a local relation: the optimizer would
+    // fold the projection below onto the driver and ship the rows inside
+    // every task's closure
+    val sc = db.spark.sparkContext
+    val raw = sc.parallelize(points, sc.defaultParallelism)
+      .toDF("name", "ts", "value")
       .withColumn("name", name).filter(col("name") =!= "")
       .withColumn("metric_id", graft.functions.GraftFunctions.graft_uuid5(col("name")))
       .withColumn("aggregator", lit(metadata.aggregator.name))
@@ -482,13 +489,13 @@ object Bgutil {
     * committed. Returns the spool lines of the matched metrics as (name,
     * stage0 step) → value. Lines are LWW-resolved per (metric, stage0
     * step) by LATEST RAW TS (arrival order only breaks exact-duplicate-ts
-    * ties), the same rule the ingest's in-batch LWW and the batch
-    * downsampler apply, so a slot answers the same whether its point is
-    * still hot or already durable. The fetch lets durable values WIN over
-    * the spool, so a lingering already-drained line never shadows a newer
-    * durable value. Slots the spool can't hit (coarser consolidated
-    * spines) keep the durable value, same as carbonlink's grain
-    * mismatch. A db with no spool (no daemon) pays one file-exists
+    * ties), the same rule the streaming downsampler's ts-sorted update
+    * and the batch downsampler apply, so a slot answers the same whether
+    * its point is still hot or already durable. The fetch lets durable
+    * values WIN over the spool, so a lingering already-drained line never
+    * shadows a newer durable value. Slots the spool can't hit (coarser
+    * consolidated spines) keep the durable value, same as carbonlink's
+    * grain mismatch. A db with no spool (no daemon) pays one file-exists
     * check. */
   private def spoolBacklog(db: Db, matched: Seq[TimeSeriesReader.Matched],
       startS: Long, endS: Long): Map[(String, Long), Double] = {
@@ -504,8 +511,7 @@ object Bgutil {
     // the drain deletes consumed files CONCURRENTLY with this scan — a
     // listed file may be gone by execution time, which is the normal
     // operating state, not an error. Collected order is Spark's scan
-    // order (file by file, line by line), the order the streaming
-    // drain's in-batch LWW numbers its rows in. Only lines whose raw ts
+    // order (file by file, line by line). Only lines whose raw ts
     // can snap into the window reach the driver: a step lies within one
     // precision of its points
     val maxPrec = precision.values.max
@@ -528,378 +534,14 @@ object Bgutil {
     latest.map { case (k, (_, v)) => k -> v }.toMap
   }
 
-  /** The render API surface over the planned read: apply a graphite-style
-    * function chain to every series a glob matches — what a graphite-web
-    * `target=fn(fn(glob.*))` request runs, executed as ONE Spark plan
-    * downstream of the pruned store scan (plugins/graphite.py:142-225
-    * hands graphite-web an iterable and lets Python loop; here the
-    * transforms ARE the plan). Each spec is `name[:arg[:arg]]`:
-    * perSecond | derivative | nonNegativeDerivative | integral |
-    * keepLastValue | movingAverage:N | timeShift:S | scale:F[:ADD] |
-    * summarize:INTERVAL_S:FN | combine:FN:ALIAS | highest:N[:STAT] |
-    * aliasByNode:I[,J,…] | alias:NAME | movingMedian:N | stdev:N |
-    * movingMin:N | movingMax:N | movingSum:N | exclude:REGEX |
-    * grep:REGEX | currentAbove:T | currentBelow:T |
-    * integralByInterval:S | sortBy:KEY | groupByNode:I:FN |
-    * averageAbove:T | averageBelow:T | asPercent | absolute |
-    * logarithm[:BASE] | clamp:LO:HI | removeAboveValue:T |
-    * removeBelowValue:T | offsetToZero | invert | pow:E | squareRoot |
-    * transformNull[:V] | nPercentile:N | removeAbovePercentile:N |
-    * removeBelowPercentile:N | maximumAbove:T | maximumBelow:T |
-    * minimumAbove:T | minimumBelow:T | divideSeries:GLOB |
-    * diffSeries:GLOB[:ALIAS] | hitcount:INTERVAL_S | changed |
-    * delay:N | timeSlice:T0:T1 | linearRegression |
-    * holtWintersForecast:STEP_S | holtWintersConfidenceBands:STEP_S |
-    * holtWintersAberration:STEP_S (fetch extra leading history and trim
-    * with timeSlice, as graphite warms the model with 7 days) |
-    * weightedAverage:GLOB:I[,J,…] | multiplySeries[:ALIAS] |
-    * percentileOfSeries:N | mostDeviant:N |
-    * averageOutsidePercentile:N | substr:START[:STOP] |
-    * aliasSub:SEARCH:REPLACE | scaleToSeconds:S |
-    * smartSummarize:INTERVAL_S:FN | interpolate | isNonNull |
-    * round[:P] | sigmoid | logit | exp | aggregateLine[:FN] |
-    * sumSeriesWithWildcards:I[,J,…] | averageSeriesWithWildcards:I[,J,…] |
-    * timeStack:SHIFT_S[:START[:END]] | fallbackSeries:GLOB |
-    * exponentialMovingAverage:N | lowest:N[:STAT] |
-    * groupByNodes:FN:I[,J,…] | unique | limit:N | constantLine:V |
-    * consolidateBy:FN[:MAX_POINTS] | perSecond[:MAX] (counter wrap) |
-    * asPercent[:TOTAL_GLOB|:N] | stacked | areaBetween | cactiStyle |
-    * minMax | aggregateWithWildcards:FN:I[,J,…] |
-    * toLowerCase | toUpperCase | pieAverage | pieMaximum | pieMinimum |
-    * keepLastValue:LIMIT | nonNegativeDerivative[:MAX] |
-    * filterSeries:FN:OP:N | legendValue:STAT[:STAT…] | aliasByMetric |
-    * secondYAxis | drawAsInfinite | color:C | alpha:A | lineWidth:W |
-    * dashed[:LEN] (draw-option pass-throughs)
-    * (divideSeries/diffSeries fetch their second operand with the SAME
-    * time window as the main glob — graphite's target arguments). */
-  def render(db: Db, glob: String, startS: Long, endS: Long,
-      fnSpecs: Seq[String], maxDataPoints: Int = 0): DataFrame = {
-    // a parenthesized first argument is a graphite TARGET EXPRESSION —
-    // evaluate it like the /render HTTP face. Treating it as a glob
-    // would silently return whatever the comma-alternation happens to
-    // match (a wrong answer, not an error).
-    if (glob.contains("(")) {
-      require(fnSpecs.isEmpty,
-        "render: a target expression cannot be combined with a colon chain")
-      return deterministicOrder(
-        RenderTarget.render(db, glob, startS, endS, maxDataPoints))
-    }
-    // timeStack overlays PAST data: widen the leaf fetch by its max
-    // shift, apply the chain below it on the widened window, and clip
-    // back to [startS, endS) right after the stack — the same shape
-    // RenderTarget.eval gives nested targets. Consolidation is skipped
-    // on a widened fetch (a budget spread over the 8×-wider window
-    // would coarsen and re-anchor the spine the caller asked for).
-    val stackIdx = fnSpecs.indexWhere(s =>
-      s == "timeStack" || s.startsWith("timeStack:"))
-    val (fetchStart, mdp) =
-      if (stackIdx < 0) (startS, maxDataPoints)
-      else {
-        val p = fnSpecs(stackIdx).split(":")
-        require(p.length >= 2, "timeStack: missing shift argument")
-        val endK = if (p.length > 3) p(3).toInt else 7
-        (startS - endK * math.abs(RenderTarget.parseInterval(p(1))), 0)
-      }
-    var out = read(db, glob, fetchStart, endS, mdp)
-    for ((spec, i) <- fnSpecs.zipWithIndex) {
-      val parts = spec.split(":")
-      out = applyRenderFn(db, out, parts(0), parts.drop(1).toIndexedSeq,
-        fetchStart, endS, mdp)
-      if (i == stackIdx)
-        out = out.filter(col("ts") >= startS && col("ts") < endS)
-    }
-    deterministicOrder(out)
-  }
-
-  /** Render output order: legend order when a sortBy materialized one,
-    * (name, ts) otherwise — shared by the colon-chain and
-    * target-expression paths. */
+  /** `bgutil render`'s output order: legend order when a sortBy*
+    * materialized one, (name, ts) otherwise. */
   private def deterministicOrder(out: DataFrame): DataFrame = {
     // terminal display shapes (the pie reducers) have no ts column
     val keys =
       if (out.columns.contains("series_order")) Seq("series_order", "ts")
       else Seq("name", "ts")
     out.orderBy(keys.filter(out.columns.contains).map(col): _*)
-  }
-
-  /** One render function application — shared by the colon-spec chain
-    * above and the graphite target-expression parser
-    * ([[RenderTarget]]), which hands it the parsed call arguments.
-    * `maxDataPoints` carries the request's consolidation budget into
-    * the SECOND-operand reads (divideSeries/diffSeries/fallbackSeries/
-    * weightedAverage) — without it a consolidated main series would
-    * ts-join an unconsolidated operand and miss every coarse slot;
-    * `nowS` carries the request's reference instant there for the same
-    * reason (the operand must land on the main series' stage). */
-  private[cli] def applyRenderFn(db: Db, df: DataFrame, name: String,
-      args: IndexedSeq[String], startS: Long, endS: Long,
-      maxDataPoints: Int = 0, nowS: Option[Long] = None): DataFrame = {
-    import graft.operators.{SeriesFunctions => SF}
-    // shims keeping the big match textually identical to the original
-    // colon-spec form: parts(0) was the name, parts(i) the (i−1)th arg.
-    // Accesses are TRACKED: an argument the dispatch never reads is a
-    // user error (wrong arity, a varargs shape the chain doesn't take)
-    // and must fail loudly, not silently drop the argument.
-    var maxUsed = 0
-    def parts(i: Int): String = {
-      if (i > maxUsed) maxUsed = i
-      if (i == 0) name
-      else if (i - 1 >= args.length) throw new IllegalArgumentException(
-        s"$name: missing argument ${i} (got ${args.length}: " +
-          s"${args.mkString(", ")})")
-      else args(i - 1)
-    }
-    // graphite interval arguments may be quoted time strings ('1hour',
-    // '30min') — accept both raw seconds and unit syntax
-    def intervalArg(i: Int): Long = RenderTarget.parseInterval(parts(i))
-    // moving-window sizes must be point counts: a '5min'-style window
-    // needs the series step, which a set engine derives per series —
-    // reject the time-string form with a usable message
-    def pointsArg(i: Int): Int = {
-      val v = parts(i)
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$name: window must be a POINT COUNT, got '$v' (time-string " +
-            "windows are not supported; divide by the series step)")
-      }
-    }
-    val partsLen = args.length + 1
-    val out = {
-        name match {
-          case "perSecond" => SF.perSecond(df,
-            if (partsLen > 1) Some(parts(1).toDouble) else None)
-          case "derivative" => SF.derivative(df)
-          case "nonNegativeDerivative" => SF.nonNegativeDerivative(df,
-            if (partsLen > 1) Some(parts(1).toDouble) else None)
-          case "integral" => SF.integral(df)
-          case "keepLastValue" if partsLen > 1 =>
-            SF.keepLastValueLimited(df, parts(1).toInt)
-          case "keepLastValue" => SF.keepLastValue(df)
-          case "filterSeries" =>
-            SF.filterSeries(df, parts(1), parts(2), parts(3).toDouble)
-          case "legendValue" =>
-            SF.legendValue(df, (1 until partsLen).map(parts))
-          case "aliasByMetric" => SF.aliasByNode(df, Seq(-1))
-          // draw-option functions: graphite attaches render attributes
-          // the data layer doesn't carry — pass through, CONSUMING the
-          // args so the unused-argument guard stays meaningful
-          case "secondYAxis" | "drawAsInfinite" => df
-          case "color" | "alpha" | "lineWidth" => parts(1); df
-          case "dashed" => if (partsLen > 1) parts(1); df
-          case "movingAverage" => SF.movingAverage(df, pointsArg(1))
-          case "timeShift" => SF.timeShift(df, intervalArg(1))
-          case "scale" => SF.scaleOffset(df, parts(1).toDouble,
-            if (partsLen > 2) parts(2).toDouble else 0.0)
-          case "summarize" => SF.summarize(df, intervalArg(1), parts(2))
-          // third argument = graphite aggregate's xFilesFactor
-          case "combine" if partsLen > 3 =>
-            SF.combineSeriesXff(df, parts(1), parts(2), parts(3).toDouble)
-          case "combine" => SF.combineSeries(df, parts(1), parts(2))
-          case "highest" => SF.highest(df, parts(1).toInt,
-            if (partsLen > 2) parts(2) else "max")
-          case "aliasByNode" =>
-            SF.aliasByNode(df, parts(1).split(",").toSeq.map(_.toInt))
-          case "alias" => SF.aliasSeries(df, parts(1))
-          case "movingMedian" => SF.movingMedian(df, pointsArg(1))
-          case "movingMin" => SF.movingMin(df, pointsArg(1))
-          case "movingMax" => SF.movingMax(df, pointsArg(1))
-          case "movingSum" => SF.movingSum(df, pointsArg(1))
-          case "removeAboveValue" => SF.removeAboveValue(df, parts(1).toDouble)
-          case "removeBelowValue" => SF.removeBelowValue(df, parts(1).toDouble)
-          case "offsetToZero" => SF.offsetToZero(df)
-          case "invert" => SF.invert(df)
-          case "pow" => SF.powSeries(df, parts(1).toDouble)
-          case "squareRoot" => SF.squareRoot(df)
-          case "stdev" => SF.stdev(df, pointsArg(1))
-          case "exclude" => SF.exclude(df, parts(1))
-          case "grep" => SF.grep(df, parts(1))
-          case "currentAbove" => SF.currentAbove(df, parts(1).toDouble)
-          case "currentBelow" =>
-            SF.currentAbove(df, parts(1).toDouble, above = false)
-          case "integralByInterval" => SF.integralByInterval(df, intervalArg(1))
-          case "sortBy" => SF.sortSeries(df, parts(1))
-          case "groupByNode" => SF.groupByNode(df, parts(1).toInt, parts(2))
-          case "averageAbove" => SF.averageAbove(df, parts(1).toDouble)
-          case "averageBelow" =>
-            SF.averageAbove(df, parts(1).toDouble, above = false)
-          // second form: an explicit total — graphite accepts either a
-          // totalSeries glob (read like divideSeries' divisor, with the
-          // consolidation budget carried through) or a constant number
-          case "asPercent" if partsLen > 1 =>
-            parts(1).toDoubleOption match {
-              case Some(n) =>
-                require(n != 0, "asPercent: constant total must be non-zero")
-                SF.scaleOffset(df, 100.0 / n)
-              case None => SF.asPercentOf(df,
-                read(db, parts(1), startS, endS, maxDataPoints, nowS))
-            }
-          case "asPercent" => SF.asPercent(df)
-          case "stacked" => SF.stacked(df)
-          case "areaBetween" => SF.areaBetween(df)
-          case "cactiStyle" => SF.cactiStyle(df)
-          case "minMax" => SF.minMax(df)
-          case "aggregateWithWildcards" => SF.seriesWithWildcards(df,
-            parts(1), parts(2).split(",").toSeq.map(_.toInt))
-          case "absolute" => SF.absolute(df)
-          case "logarithm" => SF.logarithm(df,
-            if (partsLen > 1) parts(1).toDouble else 10.0)
-          case "clamp" => SF.clamp(df,
-            Some(parts(1).toDouble), Some(parts(2).toDouble))
-          case "transformNull" => SF.transformNull(df,
-            if (partsLen > 1) parts(1).toDouble else 0.0)
-          case "nPercentile" => SF.nPercentile(df, parts(1).toDouble)
-          case "removeAbovePercentile" =>
-            SF.removeAbovePercentile(df, parts(1).toDouble)
-          case "removeBelowPercentile" =>
-            SF.removeBelowPercentile(df, parts(1).toDouble)
-          case "maximumAbove" => SF.maximumAbove(df, parts(1).toDouble)
-          case "maximumBelow" =>
-            SF.maximumAbove(df, parts(1).toDouble, above = false)
-          case "minimumAbove" => SF.minimumBelow(df, parts(1).toDouble,
-            below = false)
-          case "minimumBelow" => SF.minimumBelow(df, parts(1).toDouble)
-          case "divideSeries" =>
-            SF.divideSeries(df, read(db, parts(1), startS, endS, maxDataPoints, nowS))
-          case "diffSeries" => SF.diffSeries(df,
-            read(db, parts(1), startS, endS, maxDataPoints, nowS),
-            if (partsLen > 2) parts(2) else "diffSeries")
-          case "hitcount" => SF.hitcount(df, intervalArg(1))
-          case "changed" => SF.changed(df)
-          case "delay" => SF.delay(df, pointsArg(1))
-          case "timeSlice" => SF.timeSlice(df, parts(1).toLong, parts(2).toLong)
-          case "linearRegression" => SF.linearRegression(df)
-          case "holtWintersForecast" =>
-            graft.operators.HoltWinters.forecast(df, parts(1).toLong)
-          case "holtWintersConfidenceBands" =>
-            graft.operators.HoltWinters.confidenceBands(df, parts(1).toLong)
-          case "holtWintersAberration" =>
-            graft.operators.HoltWinters.aberration(df, parts(1).toLong)
-          case "weightedAverage" =>
-            SF.weightedAverage(df, read(db, parts(1), startS, endS, maxDataPoints, nowS),
-              parts(2).split(",").toSeq.map(_.toInt))
-          case "multiplySeries" => SF.multiplySeries(df,
-            if (partsLen > 1) parts(1) else "multiplySeries")
-          case "percentileOfSeries" => SF.percentileOfSeries(df, parts(1).toDouble)
-          case "mostDeviant" => SF.mostDeviant(df, parts(1).toInt)
-          case "averageOutsidePercentile" =>
-            SF.averageOutsidePercentile(df, parts(1).toDouble)
-          case "substr" => SF.substrSeries(df, parts(1).toInt,
-            if (partsLen > 2) parts(2).toInt else 0)
-          case "aliasSub" => SF.aliasSub(df, parts(1), parts(2))
-          case "scaleToSeconds" => SF.scaleToSeconds(df, intervalArg(1))
-          case "smartSummarize" =>
-            SF.smartSummarize(df, intervalArg(1), parts(2), startS)
-          case "interpolate" => SF.interpolate(df)
-          case "isNonNull" => SF.isNonNull(df)
-          case "round" => SF.roundFunction(df,
-            if (partsLen > 1) parts(1).toInt else 0)
-          case "sigmoid" => SF.sigmoid(df)
-          case "logit" => SF.logit(df)
-          case "exp" => SF.expFunction(df)
-          case "aggregateLine" => SF.aggregateLine(df,
-            if (partsLen > 1) parts(1) else "avg")
-          case "sumSeriesWithWildcards" =>
-            SF.seriesWithWildcards(df, "sum", parts(1).split(",").toSeq.map(_.toInt))
-          case "averageSeriesWithWildcards" =>
-            SF.seriesWithWildcards(df, "avg", parts(1).split(",").toSeq.map(_.toInt))
-          case "timeStack" => SF.timeStack(df, intervalArg(1),
-            if (partsLen > 2) parts(2).toInt else 0,
-            if (partsLen > 3) parts(3).toInt else 7)
-          case "fallbackSeries" =>
-            SF.fallbackSeries(df, read(db, parts(1), startS, endS, maxDataPoints, nowS))
-          case "exponentialMovingAverage" =>
-            SF.exponentialMovingAverage(df, parts(1).toInt)
-          case "lowest" => SF.lowest(df, parts(1).toInt,
-            if (partsLen > 2) parts(2) else "max")
-          case "groupByNodes" => SF.groupByNodes(df, parts(1),
-            parts(2).split(",").toSeq.map(_.toInt))
-          case "toLowerCase" => SF.toLowerCaseSeries(df)
-          case "toUpperCase" => SF.toUpperCaseSeries(df)
-          // pie-mode reducers: terminal (name, value) shape
-          case "pieAverage" => SF.pieValue(df, "average")
-          case "pieMaximum" => SF.pieValue(df, "maximum")
-          case "pieMinimum" => SF.pieValue(df, "minimum")
-          case "unique" => SF.uniqueSeries(df)
-          case "limit" => SF.limitSeries(df, parts(1).toInt)
-          case "constantLine" => df.unionByName(
-            SF.constantLine(df.sparkSession, parts(1).toDouble, startS, endS))
-          // graphite's consolidateBy(series, 'fn') takes the point budget
-          // from the request's maxDataPoints; the explicit second arg is
-          // this chain's extension for a fixed budget
-          case "consolidateBy" =>
-            val budget = if (partsLen > 2) parts(2).toInt else maxDataPoints
-            require(budget > 0,
-              "consolidateBy: no point budget — pass one explicitly or " +
-                "set the request's maxDataPoints")
-            SF.consolidateBy(df, parts(1), budget)
-          case "movingWindow" => SF.movingWindow(df, pointsArg(1),
-            if (partsLen > 2) parts(2) else "average")
-          case "removeEmptySeries" => SF.removeEmptySeries(df,
-            if (partsLen > 1) parts(1).toDouble else 0.0)
-          case "removeBetweenPercentile" =>
-            SF.removeBetweenPercentile(df, parts(1).toDouble)
-          case "powSeries" => SF.powSeriesList(df,
-            if (partsLen > 1) parts(1) else "powSeries")
-          // the confidence AREA is the bands with an area draw mode —
-          // the data layer carries the same two series
-          case "holtWintersConfidenceArea" =>
-            graft.operators.HoltWinters.confidenceBands(df, parts(1).toLong)
-          // cumulative = consolidateBy(series, 'sum'): only meaningful
-          // when the request carries a consolidation budget
-          case "cumulative" =>
-            if (maxDataPoints > 0) SF.consolidateBy(df, "sum", maxDataPoints)
-            else df
-          case "multiplySeriesWithWildcards" => SF.seriesWithWildcards(df,
-            "multiply", parts(1).split(",").toSeq.map(_.toInt))
-          // mapSeries' grouping is implicit in reduceSeries' key (the
-          // name minus the reduce node) — consume the map nodes so the
-          // unused-argument guard holds
-          case "mapSeries" => (1 until partsLen).foreach(parts); df
-          case "reduceSeries" => SF.reduceSeries(df, parts(1),
-            parts(2).toInt, (3 until partsLen).map(parts))
-          case "useSeriesAbove" => useSeriesAbove(db, df, parts(1).toDouble,
-            parts(2), parts(3), startS, endS, maxDataPoints, nowS)
-          case "sumSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints, nowS), "sum")
-          case "diffSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints, nowS), "diff")
-          case "multiplySeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints, nowS), "multiply")
-          case "divideSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints, nowS), "divide")
-          case "aggregateSeriesLists" => SF.pairwiseSeriesLists(df,
-            read(db, parts(1), startS, endS, maxDataPoints, nowS), parts(2) match {
-              case "total" => "sum"
-              case f => f
-            })
-          case other =>
-            throw new IllegalArgumentException(s"render: unknown function '$other'")
-        }
-    }
-    if (maxUsed < args.length)
-      throw new IllegalArgumentException(
-        s"$name: ${args.length - maxUsed} unused argument(s) " +
-          s"(${args.drop(maxUsed).mkString(", ")}) — wrong arity or an " +
-          "unsupported varargs shape")
-    out
-  }
-
-  /** `useSeriesAbove(seriesList, value, search, replace)`: for each
-    * input series whose max exceeds `value`, fetch the companion metric
-    * named by the regex substitution search→replace (functions.py
-    * useSeriesAbove — the "swap request rate for its latency twin"
-    * helper). The qualifying name list is display-sized (the input is a
-    * glob-capped fetch), resolved driver-side like applyByNode. */
-  def useSeriesAbove(db: Db, df: DataFrame, value: Double, search: String,
-      replace: String, startS: Long, endS: Long,
-      maxDataPoints: Int, nowS: Option[Long] = None): DataFrame = {
-    val names = df.groupBy("name").agg(max("value").as("__m"))
-      .filter(col("__m") > value)
-      .select("name").collect().map(_.getString(0))
-    val derived = names.map(_.replaceAll(search, replace)).distinct.sorted
-    if (derived.isEmpty) df.limit(0)
-    else derived.map(n => read(db, n, startS, endS, maxDataPoints, nowS))
-      .reduce(_ unionByName _)
   }
 
   /** Resolve a glob to names (cli/command_list.py:23-49). */

@@ -1,13 +1,16 @@
 package graft.cli
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, max}
+
+import graft.operators.{HoltWinters, SeriesFunctions => SF}
 
 /** Parser + evaluator for graphite-web render TARGET expressions —
   * `target=sumSeries(movingAverage(sys.cpu.*.load,10))` — the request
-  * shape every graphite dashboard emits (the reference hands these to
-  * graphite-web verbatim; here they compile onto the same
-  * [[Bgutil.applyRenderFn]] dispatch the CLI chain uses, so one plan
-  * serves the whole nested expression).
+  * shape every graphite dashboard emits and the one render language of
+  * both the `/render` face and `bgutil render` (the reference hands these
+  * to graphite-web verbatim; here the nested expression compiles into
+  * one plan downstream of the pruned store scans).
   *
   * Grammar (recursive descent, no dependencies):
   * {{{
@@ -18,13 +21,11 @@ import org.apache.spark.sql.DataFrame
   *              braces)
   * }}}
   *
-  * Graphite canonical names map onto the library's forms (sumSeries →
-  * slot-wise combine with the raw call text as the alias, highestMax →
-  * highest:max, offset → scale-with-add, …). Functions whose SECOND
-  * series argument is itself a nested call are supported when that
-  * argument is a plain path/glob (divideSeries(a.*, b.total) — the
-  * dashboard-typical shape); a nested call there raises a clear error
-  * rather than silently mis-parsing. */
+  * Every function is dispatched by its graphite name ([[applyFn]]).
+  * Functions whose SECOND series argument is itself a nested call are
+  * supported when that argument is a plain path/glob (divideSeries(a.*,
+  * b.total) — the dashboard-typical shape); a nested call there raises a
+  * clear error rather than silently mis-parsing. */
 object RenderTarget {
 
   // ---- tokenizer/parser ------------------------------------------------
@@ -96,7 +97,7 @@ object RenderTarget {
 
     /** A scalar argument: quoted string, or a bare run up to the next
       * top-level ',' or ')' (numbers, stat names, regexes). A nested
-      * call in scalar position is kept as raw text — applyRenderFn
+      * call in scalar position is kept as raw text — [[applyFn]]
       * treats series-valued args as globs, and [[eval]] rejects
       * parenthesized text there with a clear error. */
     def parseArg(): String = {
@@ -128,63 +129,15 @@ object RenderTarget {
 
   // ---- evaluation ------------------------------------------------------
 
-  /** Graphite canonical name → (library fn, leading literal args).
-    * Names already matching the CLI dispatch pass through untouched. */
-  private def mapped(fn: String, raw: String, args: List[String])
-      : (String, List[String]) = fn match {
-    case "sumSeries" => ("combine", List("sum", raw))
-    case "averageSeries" | "avg" => ("combine", List("avg", raw))
-    case "minSeries" => ("combine", List("min", raw))
-    case "maxSeries" => ("combine", List("max", raw))
-    case "countSeries" => ("combine", List("count", raw))
-    case "rangeOfSeries" => ("combine", List("range", raw))
-    case "stddevSeries" => ("combine", List("stddev", raw))
-    case "highestMax" => ("highest", args :+ "max")
-    case "highestAverage" => ("highest", args :+ "average")
-    case "highestCurrent" => ("highest", args :+ "current")
-    case "lowestAverage" => ("lowest", args :+ "average")
-    case "lowestCurrent" => ("lowest", args :+ "current")
-    case "sortByMaxima" => ("sortBy", List("maxima"))
-    case "sortByMinima" => ("sortBy", List("minima"))
-    case "sortByTotal" => ("sortBy", List("total"))
-    case "sortByName" => ("sortBy", List("name"))
-    case "offset" | "add" => ("scale", "1.0" :: args)
-    case "log" => ("logarithm", args)
-    // the modern general combine: aggregate(seriesList, 'fn'
-    // [, xFilesFactor]) — fn aliases normalized to the dispatch's
-    // combine names; the optional third argument is graphite's
-    // xFilesFactor (slot kept only when enough series are present).
-    // Anything further must fail loudly, not drop.
-    case "aggregate" =>
-      val f = args.headOption.getOrElse(throw new IllegalArgumentException(
-        "aggregate: missing function argument")) match {
-        case "average" => "avg"
-        case "total" => "sum"
-        case "rangeOf" => "range"
-        case g => g
-      }
-      if (args.length > 2) throw new IllegalArgumentException(
-        s"aggregate: unsupported trailing argument(s) " +
-          s"${args.drop(2).mkString(", ")}")
-      ("combine", List(f, raw) ++ args.drop(1))
-    case other => (other, args)
-  }
-
   /** The combine family takes VARARG series lists in graphite —
     * `sumSeries(a.*, b.*)` — evaluated here by unioning every operand
     * before the slot-wise combine. `avg` is graphite's registered alias
-    * for averageSeries; `multiplySeries` is the same shape with its own
-    * dispatch name (its optional scalar is an alias, so without the
-    * union path a second SERIES operand would be consumed as the alias
-    * and silently dropped). */
+    * for averageSeries; `multiplySeries` is the same shape (its optional
+    * scalar is an alias, so without the union path a second SERIES
+    * operand would be consumed as the alias and silently dropped). */
   private val CombineFns = Set("sumSeries", "averageSeries", "avg",
     "minSeries", "maxSeries", "countSeries", "rangeOfSeries",
     "stddevSeries", "multiplySeries", "powSeries")
-
-  /** Functions whose trailing arguments are an integer vararg list the
-    * dispatch takes as ONE comma-joined argument. */
-  private val IntVarargFns = Set("aliasByNode", "sumSeriesWithWildcards",
-    "averageSeriesWithWildcards")
 
   /** Per-target evaluation state: `setXFilesFactor` sets the DEFAULT
     * xFilesFactor that later-evaluated functions read, exactly like
@@ -198,18 +151,6 @@ object RenderTarget {
     * as graphite's fetch does from requestContext['now']. */
   private final class EvalCtx(val nowS: Option[Long]) {
     var xff: Option[Double] = None
-  }
-
-  /** Consumers of the context default: the combine family (graphite's
-    * aggregate reads requestContext when no explicit xff is passed) and
-    * removeEmptySeries (same rule). An EXPLICIT xff argument wins. */
-  private def withCtxXff(name: String, finalArgs: List[String],
-      ctx: EvalCtx): List[String] = ctx.xff match {
-    case Some(x) if name == "combine" && finalArgs.length == 2 =>
-      finalArgs :+ x.toString
-    case Some(x) if name == "removeEmptySeries" && finalArgs.isEmpty =>
-      List(x.toString)
-    case _ => finalArgs
   }
 
   /** Evaluate a parsed target against a db and time window.
@@ -229,8 +170,7 @@ object RenderTarget {
       // constantLine is a SOURCE, not a transform: its one argument is
       // the value, which the grammar necessarily parsed as the series
       case CallNode("constantLine", PathNode(v), Nil, _) =>
-        graft.operators.SeriesFunctions.constantLine(
-          db.spark, v.toDouble, startS, endS)
+        SF.constantLine(db.spark, v.toDouble, startS, endS)
       // timeFunction("name"[, stepS]) is likewise a SOURCE: a synthetic
       // series whose value is the timestamp, on the step grid
       // (identity('name') is its registered alias)
@@ -239,39 +179,31 @@ object RenderTarget {
       case CallNode("timeFunction" | "time" | "identity",
           PathNode(name), args, _) =>
         val step = if (args.nonEmpty) parseInterval(args.head) else 60L
-        graft.operators.SeriesFunctions.timeFunction(
-          db.spark, name, startS, endS, step)
+        SF.timeFunction(db.spark, name, startS, endS, step)
       // threshold(value[, 'label'[, 'color']]): a labeled constantLine
       // (the color is a draw attribute the data layer doesn't carry)
       case CallNode("threshold", PathNode(v), args, _) =>
         import org.apache.spark.sql.functions.lit
-        graft.operators.SeriesFunctions
-          .constantLine(db.spark, v.toDouble, startS, endS)
+        SF.constantLine(db.spark, v.toDouble, startS, endS)
           .withColumn("name", lit(args.headOption.getOrElse(v)))
       case CallNode("sinFunction" | "sin", PathNode(name), args, _) =>
         val amp = if (args.nonEmpty) args.head.trim.toDouble else 1.0
         val step = if (args.length > 1) parseInterval(args(1)) else 60L
-        graft.operators.SeriesFunctions.sinFunction(
-          db.spark, name, amp, startS, endS, step)
+        SF.sinFunction(db.spark, name, amp, startS, endS, step)
       case CallNode("randomWalkFunction" | "randomWalk",
           PathNode(name), args, _) =>
         val step = if (args.nonEmpty) parseInterval(args.head) else 60L
-        graft.operators.SeriesFunctions.randomWalk(
-          db.spark, name, startS, endS, step)
+        SF.randomWalk(db.spark, name, startS, endS, step)
       // verticalLine('ts'[, 'label']): the instant parses in graphite's
       // render time syntax, relative to the window end
       case CallNode("verticalLine", PathNode(ts), args, _) =>
-        graft.operators.SeriesFunctions.verticalLine(
-          db.spark, parseTime(ts, endS), args.headOption.getOrElse(ts))
+        SF.verticalLine(db.spark, parseTime(ts, endS),
+          args.headOption.getOrElse(ts))
       // group(series, series, ...): union the operands verbatim — the
       // combine family's fetch shape without a slot-wise combine
       case CallNode("group", series, args, _) =>
-        (series :: args.map { a =>
-          require(!a.contains("("),
-            "group: nested call operands are not supported — " +
-              "use plain paths/globs")
-          PathNode(a)
-        }).map(evalC(db, _, startS, endS, maxDataPoints, ctx))
+        seriesOperands("group", series, args)
+          .map(evalC(db, _, startS, endS, maxDataPoints, ctx))
           .reduce(_ unionByName _)
       // setXFilesFactor(series, xff) — graphite's stateful context
       // setter: the series passes through UNCHANGED and every function
@@ -322,7 +254,7 @@ object RenderTarget {
       // display-sized; each query re-evaluates like applyByNode.
       case CallNode("aliasQuery", series,
           List(search, replace, newName), _) =>
-        import org.apache.spark.sql.functions.{col, lit, max_by}
+        import org.apache.spark.sql.functions.{lit, max_by}
         val base = evalC(db, series, startS, endS, maxDataPoints, ctx)
         val names = base.select("name").distinct().collect()
           .map(_.getString(0)).sorted
@@ -352,12 +284,8 @@ object RenderTarget {
       // varargs series: union all operands, then combine slot-wise
       case CallNode(fn, series, args, raw)
           if CombineFns(fn) && args.nonEmpty =>
-        val operands = (series :: args.map { a =>
-          require(!a.contains("("),
-            s"$fn: nested call operands are not supported — " +
-              "use plain paths/globs")
-          PathNode(a)
-        }).map(evalC(db, _, startS, endS, maxDataPoints, ctx))
+        val operands = seriesOperands(fn, series, args)
+          .map(evalC(db, _, startS, endS, maxDataPoints, ctx))
         // powSeries folds in ARGUMENT order and pow is non-commutative:
         // prefix each operand's names with its position so the fold's
         // sorted-name order IS the argument order (within one glob the
@@ -366,17 +294,16 @@ object RenderTarget {
         val ordered =
           if (fn == "powSeries")
             operands.zipWithIndex.map { case (d, i) =>
-              import org.apache.spark.sql.functions.{col, concat, lit}
+              import org.apache.spark.sql.functions.{concat, lit}
               d.withColumn("name", concat(lit(f"$i%05d|"), col("name")))
             }
           else operands
-        val unioned = ordered.reduce(_ unionByName _)
-        val (name, finalArgs) =
-          if (fn == "multiplySeries" || fn == "powSeries") (fn, List(raw))
-          else mapped(fn, raw, Nil)
-        Bgutil.applyRenderFn(db, unioned, name,
-          withCtxXff(name, finalArgs, ctx).toIndexedSeq,
-          startS, endS, maxDataPoints, ctx.nowS)
+        // the union's legend is the call text: multiplySeries/powSeries
+        // take it as their alias argument, the rest read `raw`
+        val alias =
+          if (fn == "multiplySeries" || fn == "powSeries") List(raw) else Nil
+        applyFn(db, ordered.reduce(_ unionByName _), fn, alias, raw,
+          startS, endS, maxDataPoints, ctx)
       // graphite's timeShift('1d') means "draw data from 1d AGO": the
       // FETCH window shifts into the past and the timestamps shift
       // forward onto the requested window (an unsigned offset implies
@@ -389,15 +316,14 @@ object RenderTarget {
         val (s0, s1, delta) =
           if (fwd) (startS + back, endS + back, -back)
           else (startS - back, endS - back, back)
-        graft.operators.SeriesFunctions.timeShift(
-          evalC(db, series, s0, s1, maxDataPoints, ctx), delta)
+        SF.timeShift(evalC(db, series, s0, s1, maxDataPoints, ctx), delta)
       // timeStack likewise overlays PAST data onto the requested window:
       // copy k draws from [startS-k·Δ, endS-k·Δ]. Fetch once over the
       // union of those windows ([startS-endK·Δ, endS]), shift, and clip —
       // a post-fetch shift of the unwidened window would land every
       // non-zero-k copy entirely outside [startS, endS).
-      case CallNode("timeStack", series, args, _) if args.nonEmpty =>
-        import org.apache.spark.sql.functions.col
+      case CallNode("timeStack", series, args, _)
+          if args.nonEmpty && args.length <= 3 =>
         val shiftS = math.abs(parseInterval(args.head))
         val startK = if (args.length > 1) args(1).trim.toInt else 0
         val endK = if (args.length > 2) args(2).trim.toInt else 7
@@ -407,31 +333,32 @@ object RenderTarget {
         // requested window's slots
         val widened =
           evalC(db, series, startS - endK * shiftS, endS, 0, ctx)
-        graft.operators.SeriesFunctions
-          .timeStack(widened, shiftS, startK, endK)
+        SF.timeStack(widened, shiftS, startK, endK)
           .filter(col("ts") >= startS && col("ts") < endS)
+      // the sources and window-moving functions above take exactly
+      // their graphite shapes; any other shape is refused by name
+      case CallNode(fn @ ("constantLine" | "timeShift" | "timeStack"),
+          _, _, raw) =>
+        throw new IllegalArgumentException(s"$fn: unsupported call '$raw'")
       case CallNode(fn, series, args, raw) =>
         args.find(a => a.contains("(")).foreach { a =>
           throw new IllegalArgumentException(
             s"$fn: nested call in scalar/second-series position " +
               s"('$a') is not supported — use a plain path/glob there")
         }
-        val df = evalC(db, series, startS, endS, maxDataPoints, ctx)
-        // integer varargs collapse to the dispatch's comma-joined form:
-        // aliasByNode(s,1,3) → aliasByNode:1,3 ; groupByNodes keeps its
-        // function first, nodes joined
-        val joined = fn match {
-          case f if IntVarargFns(f) && args.length > 1 =>
-            List(args.mkString(","))
-          case "groupByNodes" | "aggregateWithWildcards"
-              if args.length > 2 =>
-            List(args.head, args.tail.mkString(","))
-          case _ => args
-        }
-        val (name, finalArgs) = mapped(fn, raw, joined)
-        Bgutil.applyRenderFn(db, df, name,
-          withCtxXff(name, finalArgs, ctx).toIndexedSeq,
-          startS, endS, maxDataPoints, ctx.nowS)
+        applyFn(db, evalC(db, series, startS, endS, maxDataPoints, ctx),
+          fn, args, raw, startS, endS, maxDataPoints, ctx)
+    }
+
+  /** A varargs call's series operands: the parsed first one, then every
+    * further argument as a plain path/glob. */
+  private def seriesOperands(fn: String, series: Node,
+      args: List[String]): List[Node] =
+    series :: args.map { a =>
+      require(!a.contains("("),
+        s"$fn: nested call operands are not supported — " +
+          "use plain paths/globs")
+      PathNode(a)
     }
 
   /** Parse + evaluate in one step (the /render endpoint's entry). */
@@ -439,6 +366,276 @@ object RenderTarget {
       endS: Long, maxDataPoints: Int = 0,
       nowS: Option[Long] = None): DataFrame =
     eval(db, parse(target), startS, endS, maxDataPoints, nowS)
+
+  /** One function application, keyed on graphite's function name. `raw`
+    * is the call's text, the combine family's legend. `ctx` carries the
+    * request's reference instant into the SECOND-operand reads
+    * (divideSeries, diffSeries, asPercent's total, fallbackSeries,
+    * weightedAverage, the *SeriesLists pairs, useSeriesAbove), which
+    * also take the request's consolidation budget — without both, a
+    * consolidated or staged main series would ts-join an operand on
+    * another spine and miss every slot. Argument reads are TRACKED: an
+    * argument the function never reads is a user error (wrong arity, a
+    * varargs shape it doesn't take) and fails loudly, not silently. */
+  private def applyFn(db: Bgutil.Db, df: DataFrame, fn: String,
+      args: List[String], raw: String, startS: Long, endS: Long,
+      maxDataPoints: Int, ctx: EvalCtx): DataFrame = {
+    val n = args.length
+    var used = 0
+    def arg(i: Int): String = {
+      if (i >= n) throw new IllegalArgumentException(
+        s"$fn: missing argument ${i + 1} (got $n: ${args.mkString(", ")})")
+      used = math.max(used, i + 1)
+      args(i)
+    }
+    def opt(i: Int): Option[String] = if (i < n) Some(arg(i)) else None
+    def num(i: Int): Double = arg(i).toDouble
+    // graphite interval arguments may be quoted time strings ('1hour',
+    // '30min') — accept both raw seconds and unit syntax
+    def interval(i: Int): Long = parseInterval(arg(i))
+    // moving-window sizes must be point counts: a '5min'-style window
+    // needs the series step, which a set engine derives per series —
+    // reject the time-string form with a usable message
+    def points(i: Int): Int = {
+      val v = arg(i)
+      try v.toInt catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"$fn: window must be a POINT COUNT, got '$v' (time-string " +
+            "windows are not supported; divide by the series step)")
+      }
+    }
+    // a trailing node list (aliasByNode(s,1,3)): at least one node
+    def nodes(from: Int): Seq[Int] =
+      (from until math.max(n, from + 1)).map(arg(_).toInt)
+    def operand(i: Int): DataFrame =
+      Bgutil.read(db, arg(i), startS, endS, maxDataPoints, ctx.nowS)
+    // an explicit xFilesFactor wins over the setXFilesFactor default
+    def combine(f: String, xff: Option[String] = None): DataFrame =
+      xff.map(_.toDouble).orElse(ctx.xff) match {
+        case Some(x) => SF.combineSeriesXff(df, f, raw, x)
+        case None => SF.combineSeries(df, f, raw)
+      }
+    val out = fn match {
+      case "perSecond" => SF.perSecond(df, opt(0).map(_.toDouble))
+      case "derivative" => SF.derivative(df)
+      case "nonNegativeDerivative" =>
+        SF.nonNegativeDerivative(df, opt(0).map(_.toDouble))
+      case "integral" => SF.integral(df)
+      case "keepLastValue" => opt(0) match {
+        case Some(limit) => SF.keepLastValueLimited(df, limit.toInt)
+        case None => SF.keepLastValue(df)
+      }
+      case "filterSeries" => SF.filterSeries(df, arg(0), arg(1), num(2))
+      case "legendValue" => SF.legendValue(df, args.indices.map(arg))
+      case "aliasByMetric" => SF.aliasByNode(df, Seq(-1))
+      // draw-option functions: graphite attaches render attributes the
+      // data layer doesn't carry — pass through, CONSUMING the args so
+      // the unused-argument guard stays meaningful
+      case "secondYAxis" | "drawAsInfinite" => df
+      case "color" | "alpha" | "lineWidth" => arg(0); df
+      case "dashed" => opt(0); df
+      case "movingAverage" => SF.movingAverage(df, points(0))
+      case "scale" => SF.scaleOffset(df, num(0))
+      case "offset" | "add" => SF.scaleOffset(df, 1.0, num(0))
+      case "summarize" => SF.summarize(df, interval(0), arg(1))
+      case "sumSeries" => combine("sum")
+      case "averageSeries" | "avg" => combine("avg")
+      case "minSeries" => combine("min")
+      case "maxSeries" => combine("max")
+      case "countSeries" => combine("count")
+      case "rangeOfSeries" => combine("range")
+      case "stddevSeries" => combine("stddev")
+      // the modern general combine: aggregate(seriesList, 'fn'
+      // [, xFilesFactor]) — graphite's fn aliases normalized to the
+      // combine's names
+      case "aggregate" => combine(arg(0) match {
+        case "average" => "avg"
+        case "total" => "sum"
+        case "rangeOf" => "range"
+        case g => g
+      }, opt(1))
+      case "highestMax" => SF.highest(df, arg(0).toInt, "max")
+      case "highestAverage" => SF.highest(df, arg(0).toInt, "average")
+      case "highestCurrent" => SF.highest(df, arg(0).toInt, "current")
+      case "lowestAverage" => SF.lowest(df, arg(0).toInt, "average")
+      case "lowestCurrent" => SF.lowest(df, arg(0).toInt, "current")
+      case "aliasByNode" => SF.aliasByNode(df, nodes(0))
+      case "alias" => SF.aliasSeries(df, arg(0))
+      case "movingMedian" => SF.movingMedian(df, points(0))
+      case "movingMin" => SF.movingMin(df, points(0))
+      case "movingMax" => SF.movingMax(df, points(0))
+      case "movingSum" => SF.movingSum(df, points(0))
+      case "removeAboveValue" => SF.removeAboveValue(df, num(0))
+      case "removeBelowValue" => SF.removeBelowValue(df, num(0))
+      case "offsetToZero" => SF.offsetToZero(df)
+      case "invert" => SF.invert(df)
+      case "pow" => SF.powSeries(df, num(0))
+      case "squareRoot" => SF.squareRoot(df)
+      case "stdev" => SF.stdev(df, points(0))
+      case "exclude" => SF.exclude(df, arg(0))
+      case "grep" => SF.grep(df, arg(0))
+      case "currentAbove" => SF.currentAbove(df, num(0))
+      case "currentBelow" => SF.currentAbove(df, num(0), above = false)
+      case "integralByInterval" => SF.integralByInterval(df, interval(0))
+      case "sortByMaxima" => SF.sortSeries(df, "maxima")
+      case "sortByMinima" => SF.sortSeries(df, "minima")
+      case "sortByTotal" => SF.sortSeries(df, "total")
+      case "sortByName" => SF.sortSeries(df, "name")
+      case "groupByNode" => SF.groupByNode(df, arg(0).toInt, arg(1))
+      case "averageAbove" => SF.averageAbove(df, num(0))
+      case "averageBelow" => SF.averageAbove(df, num(0), above = false)
+      // second form: an explicit total — graphite accepts either a
+      // totalSeries glob (read like divideSeries' divisor) or a
+      // constant number
+      case "asPercent" => opt(0) match {
+        case None => SF.asPercent(df)
+        case Some(total) => total.toDoubleOption match {
+          case Some(t) =>
+            require(t != 0, "asPercent: constant total must be non-zero")
+            SF.scaleOffset(df, 100.0 / t)
+          case None => SF.asPercentOf(df, operand(0))
+        }
+      }
+      case "stacked" => SF.stacked(df)
+      case "areaBetween" => SF.areaBetween(df)
+      case "cactiStyle" => SF.cactiStyle(df)
+      case "minMax" => SF.minMax(df)
+      case "aggregateWithWildcards" =>
+        SF.seriesWithWildcards(df, arg(0), nodes(1))
+      case "absolute" => SF.absolute(df)
+      case "logarithm" | "log" =>
+        SF.logarithm(df, opt(0).fold(10.0)(_.toDouble))
+      case "clamp" => SF.clamp(df, Some(num(0)), Some(num(1)))
+      case "transformNull" =>
+        SF.transformNull(df, opt(0).fold(0.0)(_.toDouble))
+      case "nPercentile" => SF.nPercentile(df, num(0))
+      case "removeAbovePercentile" => SF.removeAbovePercentile(df, num(0))
+      case "removeBelowPercentile" => SF.removeBelowPercentile(df, num(0))
+      case "maximumAbove" => SF.maximumAbove(df, num(0))
+      case "maximumBelow" => SF.maximumAbove(df, num(0), above = false)
+      case "minimumAbove" => SF.minimumBelow(df, num(0), below = false)
+      case "minimumBelow" => SF.minimumBelow(df, num(0))
+      case "divideSeries" => SF.divideSeries(df, operand(0))
+      case "diffSeries" =>
+        SF.diffSeries(df, operand(0), opt(1).getOrElse("diffSeries"))
+      case "hitcount" => SF.hitcount(df, interval(0))
+      case "changed" => SF.changed(df)
+      case "delay" => SF.delay(df, points(0))
+      case "timeSlice" => SF.timeSlice(df, arg(0).toLong, arg(1).toLong)
+      case "linearRegression" => SF.linearRegression(df)
+      case "holtWintersForecast" => HoltWinters.forecast(df, arg(0).toLong)
+      // the confidence AREA is the bands with an area draw mode — the
+      // data layer carries the same two series
+      case "holtWintersConfidenceBands" | "holtWintersConfidenceArea" =>
+        HoltWinters.confidenceBands(df, arg(0).toLong)
+      case "holtWintersAberration" => HoltWinters.aberration(df, arg(0).toLong)
+      case "weightedAverage" => SF.weightedAverage(df, operand(0), nodes(1))
+      case "multiplySeries" =>
+        SF.multiplySeries(df, opt(0).getOrElse("multiplySeries"))
+      case "percentileOfSeries" => SF.percentileOfSeries(df, num(0))
+      case "mostDeviant" => SF.mostDeviant(df, arg(0).toInt)
+      case "averageOutsidePercentile" =>
+        SF.averageOutsidePercentile(df, num(0))
+      case "substr" =>
+        SF.substrSeries(df, arg(0).toInt, opt(1).fold(0)(_.toInt))
+      case "aliasSub" => SF.aliasSub(df, arg(0), arg(1))
+      case "scaleToSeconds" => SF.scaleToSeconds(df, interval(0))
+      case "smartSummarize" =>
+        SF.smartSummarize(df, interval(0), arg(1), startS)
+      case "interpolate" => SF.interpolate(df)
+      case "isNonNull" => SF.isNonNull(df)
+      case "round" => SF.roundFunction(df, opt(0).fold(0)(_.toInt))
+      case "sigmoid" => SF.sigmoid(df)
+      case "logit" => SF.logit(df)
+      case "exp" => SF.expFunction(df)
+      case "aggregateLine" => SF.aggregateLine(df, opt(0).getOrElse("avg"))
+      case "sumSeriesWithWildcards" =>
+        SF.seriesWithWildcards(df, "sum", nodes(0))
+      case "averageSeriesWithWildcards" =>
+        SF.seriesWithWildcards(df, "avg", nodes(0))
+      case "multiplySeriesWithWildcards" =>
+        SF.seriesWithWildcards(df, "multiply", nodes(0))
+      case "fallbackSeries" => SF.fallbackSeries(df, operand(0))
+      case "exponentialMovingAverage" =>
+        SF.exponentialMovingAverage(df, arg(0).toInt)
+      case "groupByNodes" => SF.groupByNodes(df, arg(0), nodes(1))
+      case "toLowerCase" => SF.toLowerCaseSeries(df)
+      case "toUpperCase" => SF.toUpperCaseSeries(df)
+      // pie-mode reducers: terminal (name, value) shape
+      case "pieAverage" => SF.pieValue(df, "average")
+      case "pieMaximum" => SF.pieValue(df, "maximum")
+      case "pieMinimum" => SF.pieValue(df, "minimum")
+      case "unique" => SF.uniqueSeries(df)
+      case "limit" => SF.limitSeries(df, arg(0).toInt)
+      // graphite's consolidateBy(series, 'fn') takes the point budget
+      // from the request's maxDataPoints; an explicit second argument
+      // fixes the budget
+      case "consolidateBy" =>
+        val budget = opt(1).fold(maxDataPoints)(_.toInt)
+        require(budget > 0,
+          "consolidateBy: no point budget — pass one explicitly or " +
+            "set the request's maxDataPoints")
+        SF.consolidateBy(df, arg(0), budget)
+      case "movingWindow" =>
+        SF.movingWindow(df, points(0), opt(1).getOrElse("average"))
+      // graphite's removeEmptySeries reads the setXFilesFactor default
+      // when no explicit xFilesFactor is passed, like the combine family
+      case "removeEmptySeries" => SF.removeEmptySeries(df,
+        opt(0).map(_.toDouble).orElse(ctx.xff).getOrElse(0.0))
+      case "removeBetweenPercentile" => SF.removeBetweenPercentile(df, num(0))
+      case "powSeries" => SF.powSeriesList(df, opt(0).getOrElse("powSeries"))
+      // cumulative = consolidateBy(series, 'sum'): only meaningful when
+      // the request carries a consolidation budget
+      case "cumulative" =>
+        if (maxDataPoints > 0) SF.consolidateBy(df, "sum", maxDataPoints)
+        else df
+      // mapSeries' grouping is implicit in reduceSeries' key (the name
+      // minus the reduce node) — consume the map nodes so the
+      // unused-argument guard holds
+      case "mapSeries" => args.indices.foreach(arg); df
+      case "reduceSeries" =>
+        SF.reduceSeries(df, arg(0), arg(1).toInt, (2 until n).map(arg))
+      case "useSeriesAbove" => useSeriesAbove(db, df, num(0), arg(1),
+        arg(2), startS, endS, maxDataPoints, ctx.nowS)
+      case "sumSeriesLists" => SF.pairwiseSeriesLists(df, operand(0), "sum")
+      case "diffSeriesLists" => SF.pairwiseSeriesLists(df, operand(0), "diff")
+      case "multiplySeriesLists" =>
+        SF.pairwiseSeriesLists(df, operand(0), "multiply")
+      case "divideSeriesLists" =>
+        SF.pairwiseSeriesLists(df, operand(0), "divide")
+      case "aggregateSeriesLists" =>
+        SF.pairwiseSeriesLists(df, operand(0), arg(1) match {
+          case "total" => "sum"
+          case f => f
+        })
+      case other =>
+        throw new IllegalArgumentException(s"render: unknown function '$other'")
+    }
+    if (used < n)
+      throw new IllegalArgumentException(
+        s"$fn: ${n - used} unused argument(s) " +
+          s"(${args.drop(used).mkString(", ")}) — wrong arity or an " +
+          "unsupported varargs shape")
+    out
+  }
+
+  /** `useSeriesAbove(seriesList, value, search, replace)`: for each
+    * input series whose max exceeds `value`, fetch the companion metric
+    * named by the regex substitution search→replace (functions.py
+    * useSeriesAbove — the "swap request rate for its latency twin"
+    * helper). The qualifying name list is display-sized (the input is a
+    * glob-capped fetch), resolved driver-side like applyByNode. */
+  private def useSeriesAbove(db: Bgutil.Db, df: DataFrame, value: Double,
+      search: String, replace: String, startS: Long, endS: Long,
+      maxDataPoints: Int, nowS: Option[Long]): DataFrame = {
+    val names = df.groupBy("name").agg(max("value").as("__m"))
+      .filter(col("__m") > value)
+      .select("name").collect().map(_.getString(0))
+    val derived = names.map(_.replaceAll(search, replace)).distinct.sorted
+    if (derived.isEmpty) df.limit(0)
+    else derived.map(n => Bgutil.read(db, n, startS, endS, maxDataPoints, nowS))
+      .reduce(_ unionByName _)
+  }
 
   /** Python %-format for aliasQuery legends ('%d cores', '%.1f qps'):
     * the numeric conversions graphite's newName takes. %d truncates

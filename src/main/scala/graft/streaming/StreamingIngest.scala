@@ -102,10 +102,13 @@ object StreamingIngest {
 
   /** Wire the stateful downsample flow into a running ingest job: each
     * micro-batch's emissions are appended per stage into a
-    * [[graft.sources.PointsStore]] layout (last-write-wins applied within
-    * the batch; across batches the store read applies it on merge, like
-    * Cassandra upserts). This is the carbon plugin's write path
-    * (plugins/carbon.py:177-204) as one streaming query.
+    * [[graft.sources.PointsStore]] layout. A batch holds at most one
+    * emission per (metric, stage, ts) — the state function runs once per
+    * metric per batch and [[MetricAggregates.update]] emits each step at
+    * most once — so across batches the store read's last-write-wins on
+    * `batch_seq` is the only merge, like Cassandra upserts. This is the
+    * carbon plugin's write path (plugins/carbon.py:177-204) as one
+    * streaming query.
     *
     * Caller owns trigger/checkpoint choice, e.g.
     * `.trigger(Trigger.AvailableNow)` for drain-and-stop. On local
@@ -120,7 +123,6 @@ object StreamingIngest {
       capacity: Int = Downsampler.Capacity,
       idleTimeoutMs: Long = 0L,
       autoCreate: Option[graft.sources.MetricCatalog.CatalogStore] = None) = {
-    import graft.operators.Downsample
     import graft.sources.PointsStore
     val out = downsampleFlow(pointsStream, metadataFor, capacity, idleTimeoutMs)
     out.writeStream
@@ -149,14 +151,7 @@ object StreamingIngest {
             // batchId is monotonic across restarts (checkpoint-tracked):
             // readers resolve upserts by last-write-wins on batch_seq
             .withColumn("batch_seq", lit(batchId))
-          // in-batch last-write-wins per (metric, step): the LATEST RAW
-          // TS wins (matching Downsample.stagePoints' rule and the hot-read
-          // overlay, so a slot answers identically on every path);
-          // arrival order only breaks exact-duplicate-ts ties
-          val deduped = Downsample.lastWriteWins(
-            rows.withColumn("__seq", monotonically_increasing_id()),
-            st.precisionS, struct(col("ts"), col("__seq"))).drop("__seq")
-          (deduped, st, 8)
+          (rows, st, 8)
         }
         // every stage in ONE write job with ONE commit: per-batch
         // latency was the SUM of sequential per-stage job commits

@@ -1,12 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Pins the bench's compact stdout contract: the driver captures only the
   * last 2000 chars of stdout, so the final JSON line must stay under that
   * with every query present (BENCH_r06.json's "parsed": null was exactly
   * this line outgrowing the window). */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends SparkSuite {
 
   // the three composed pipelines + the BASELINE.md micro tasks, read from
   // the SAME constant Bench.main asserts its runtime task list against —
@@ -108,5 +106,31 @@ class BenchSpec extends AnyFunSuite {
       "spark.sql.codegen.cache.maxEntries" -> "2000",
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false"))
     assert(!GraftSession.Profile.exists(_._1.contains("openCostInBytes")))
+  }
+
+  test("time names AQE query-stage jobs by their SQL execution's callsite") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val profile = new Bench.RunProfile
+    sc.addSparkListener(profile)
+    try {
+      sc.setJobDescription("bench:spec")
+      // the exchange makes AQE materialize a query stage from a pool thread
+      spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k")
+        .groupBy("k").count().collect()
+      sc.setJobDescription(null)
+      // listener events arrive in order: once a later marker job is seen,
+      // every job of the query has been
+      sc.setCallSite("marker")
+      sc.parallelize(1 to 1).count()
+      sc.clearCallSite()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!profile.jobSites.contains("marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(profile)
+    val keys = profile.jobSites.asScala.toSeq.filter(_ != "marker")
+    assert(keys.length >= 2, keys)
+    assert(!keys.exists(_.contains("CompletableFuture")), keys)
+    assert(keys.forall(_.matches("collect at BenchSpec.scala:\\d+")), keys)
   }
 }

@@ -71,7 +71,7 @@ class FullPipelineSpec extends SparkSuite {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
-    import graft.cli.Bgutil
+    import graft.cli.{Bgutil, RenderTarget}
 
     val dbDir = java.nio.file.Files.createTempDirectory("carbon_e2e").toString
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
@@ -104,9 +104,9 @@ class FullPipelineSpec extends SparkSuite {
       ("sys.cpu.0.load", 60L, 1.0), ("sys.cpu.0.load", 120L, 3.0),
       ("sys.cpu.1.load", 60L, 5.0)))
 
-    // and the render chain runs off the same store
-    val rendered = Bgutil.render(db, "sys.cpu.*.load", 60L, 180L,
-      Seq("combine:sum:total.load")).collect()
+    // and a render target runs off the same store
+    val rendered = RenderTarget.render(db,
+      "alias(sumSeries(sys.cpu.*.load),'total.load')", 60L, 180L).collect()
       .map(r => (r.getLong(1), Option(r.get(2)))).toMap
     assert(rendered(60L) === Some(6.0))
   }

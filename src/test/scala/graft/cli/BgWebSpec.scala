@@ -85,7 +85,7 @@ class BgWebSpec extends SparkSuite {
         s"?target=$target&from=120&until=180")
       assert(rc === 200, rb)
       // combine names the series after the raw sumSeries call text;
-      // pointwise scale keeps the name (same as the CLI chain)
+      // pointwise scale keeps the name
       assert(rb.contains("\"target\":\"sumSeries(sys.*.0.*)\""), rb)
       // slot 120: cpu 1.0, mem None (its point sits at 150) → 1.0×2
       assert(rb.contains("[2.0,120]"), rb)
@@ -211,6 +211,35 @@ class BgWebSpec extends SparkSuite {
       twice("/metrics/find?query=sys.cpu.*.load")
       twice("/metrics/expand?query=sys.**")
       twice("/api/biggraphite/metric/sys.cpu.1.load")
+    } finally server.stop(0)
+  }
+
+  test("render: /api/bgutil/render answers a timeShift target like /render") {
+    val db = freshDb()
+    val server = BgWeb.build(db, 0)
+    server.start()
+    val port = server.getAddress.getPort
+    try {
+      val target = java.net.URLEncoder.encode(
+        "timeShift(sys.cpu.0.load,'1min')", "UTF-8")
+      val (rc, rb) = get(s"http://localhost:$port/render" +
+        s"?target=$target&from=180&until=300")
+      assert(rc === 200, rb)
+      val series = "\"target\":\"([^\"]*)\",\"datapoints\":\\[(.*?)\\]\\}".r
+      val web = series.findAllMatchIn(rb).toSeq.flatMap { m =>
+        "\\[([^,\\]]+),(\\d+)\\]".r.findAllMatchIn(m.group(2)).map(p =>
+          (m.group(1), p.group(2).toLong,
+            Some(p.group(1)).filter(_ != "null").map(_.toDouble)))
+      }
+      // the point at 120 is drawn one minute later, inside the window
+      assert(web === Seq(("sys.cpu.0.load", 180L, Some(1.0)),
+        ("sys.cpu.0.load", 240L, None)), rb)
+      val (ac, ab) = get(s"http://localhost:$port/api/bgutil/render" +
+        s"?arg=$target&arg=180&arg=300")
+      assert(ac === 200, ab)
+      val output = ab.stripPrefix("{\"output\":\"").stripSuffix("\"}")
+        .replace("\\n", "\n").replace("\\\"", "\"")
+      assert(RenderTargetSpec.showRows(output) === web, output)
     } finally server.stop(0)
   }
 

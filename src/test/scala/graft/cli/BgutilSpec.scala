@@ -63,23 +63,54 @@ class BgutilSpec extends SparkSuite {
     Bgutil.write(db, "sys.net.0.rx", 120L, 40.0, "60*60s:24*3600s", "average")
     Bgutil.write(db, "sys.net.0.rx", 180L, 100.0, "60*60s:24*3600s", "average")
 
-    val rate = Bgutil.render(db, "sys.net.*.rx", 60L, 240L,
-      Seq("perSecond", "scale:60"))
-      .collect().map(r => (r.getAs[Long]("ts"), Option(r.get(
+    val rate = RenderTarget.render(db, "scale(perSecond(sys.net.*.rx),60)",
+        60L, 240L)
+      .orderBy("name", "ts").collect().map(r => (r.getAs[Long]("ts"), Option(r.get(
         r.fieldIndex("value"))).map(_.asInstanceOf[Double])))
     assert(rate.toSeq === Seq((60L, None), (120L, Some(30.0)),
       (180L, Some(60.0))))
 
-    val summ = Bgutil.render(db, "sys.net.*.rx", 60L, 240L,
-      Seq("summarize:120:sum", "aliasByNode:1,2"))
-      .collect().map(r => (r.getAs[String]("name"), r.getAs[Long]("ts"),
+    val summ = RenderTarget.render(db,
+        "aliasByNode(summarize(sys.net.*.rx,120,'sum'),1,2)", 60L, 240L)
+      .orderBy("name", "ts").collect().map(r => (r.getAs[String]("name"), r.getAs[Long]("ts"),
         r.getAs[Double]("value")))
     // windows align to multiples of 120: [0,120)={60s:10}, [120,240)={40,100}
     assert(summ.toSeq === Seq(("net.0", 0L, 10.0), ("net.0", 120L, 140.0)))
 
     intercept[IllegalArgumentException] {
-      Bgutil.render(db, "sys.net.*.rx", 60L, 240L, Seq("bogusFn"))
+      RenderTarget.render(db, "bogusFn(sys.net.*.rx)", 60L, 240L)
     }
+  }
+
+  test("writePoints feeds its points to Spark as a partitioned source") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = java.nio.file.Files.createTempDirectory("bgwp").toString
+    val db = Db(spark, dir)
+    Bgutil.syncdb(db)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val write = try {
+      Bgutil.writePoints(db, (0 until 50).map(i =>
+        (s"sys.m${i % 5}", i * 60L, i.toDouble)), "60*60s:24*3600s", "average")
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30_000_000_000L
+      def written = plans.toArray.map(_.toString)
+        .filter(_.contains(db.pointsPath))
+      while (written.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      written
+    } finally spark.listenerManager.unregister(listener)
+    assert(write.length === 1, plans)
+    assert(!write.head.contains("LocalTableScan"), write.head)
+    assert(Bgutil.read(db, "sys.m0", 0L, 3000L)
+      .filter("value is not null").count() === 10)
   }
 
   test("directories derive from the catalog, never drift") {

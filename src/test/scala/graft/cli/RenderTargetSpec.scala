@@ -7,6 +7,7 @@ import graft.cli.RenderTarget.{CallNode, PathNode}
 /** The graphite target-expression parser and its evaluation against a
   * real store. */
 class RenderTargetSpec extends SparkSuite {
+  import RenderTargetSpec.cliRender
 
   test("parses nested calls, quoted and numeric args, glob paths") {
     val n = RenderTarget.parse(
@@ -43,13 +44,13 @@ class RenderTargetSpec extends SparkSuite {
       n2 == "sumSeries(sys.cpu.*.load)" && ts == 120L && v.contains(60.0)
     }, out.mkString(", "))
 
-    // highestMax maps onto highest:n:max
+    // highestMax: the top n series by their max
     val hm = RenderTarget.render(db,
       "highestMax(sys.cpu.*.load,1)", 120L, 180L)
       .select("name").distinct().collect().map(_.getString(0)).toSeq
     assert(hm === Seq("sys.cpu.1.load"))
 
-    // stddevSeries maps onto combine:stddev (population, like graphite)
+    // stddevSeries: slot-wise population stddev, like graphite
     val sd = RenderTarget.render(db,
       "stddevSeries(sys.cpu.*.load)", 120L, 180L)
       .collect().collectFirst { case r if !r.isNullAt(2) => r.getDouble(2) }
@@ -169,17 +170,18 @@ class RenderTargetSpec extends SparkSuite {
     assert(out.contains(("sys.req.count", 120L, Some(9.0))))
     assert(out.contains(("timeShift(sys.req.count,-60)", 120L, Some(7.0))))
 
-    // the colon-spec chain widens and clips the same way
-    val chain = Bgutil.render(db, "sys.req.count", 120L, 180L,
-        Seq("timeStack:60:0:1"))
-      .collect().map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
-    assert(chain.forall { case (_, ts, _) => ts >= 120L && ts < 180L }, chain)
-    assert(chain.contains(("timeShift(sys.req.count,-60)", 120L, Some(7.0))))
+    // a timeStack/timeShift call outside those shapes is refused by name
+    for (t <- Seq("timeStack(sys.req.count)", "timeShift(sys.req.count)",
+        "timeShift(sys.req.count,'1min',false)")) {
+      val e = intercept[IllegalArgumentException](
+        RenderTarget.render(db, t, 120L, 180L))
+      assert(e.getMessage.startsWith(t.takeWhile(_ != '(') + ":"),
+        e.getMessage)
+    }
 
     // asPercent with a CONSTANT total is a scale, not a glob read
-    val ap = Bgutil.render(db, "sys.req.count", 120L, 180L,
-        Seq("asPercent:50"))
+    val ap = RenderTarget.render(db, "asPercent(sys.req.count,50)",
+        120L, 180L)
       .collect().collectFirst { case r if !r.isNullAt(2) => r.getDouble(2) }
     assert(ap === Some(9.0 / 50 * 100))
 
@@ -329,16 +331,14 @@ class RenderTargetSpec extends SparkSuite {
       .collect().map(_.getLong(1)).sorted.toSeq
     assert(tf === Seq(120L, 180L))
 
-    // the CLI render subcommand routes parenthesized targets to the
-    // expression parser (a glob read would silently mis-match), and
-    // refuses to mix the two forms
-    val cli = Bgutil.render(db,
-      "divideSeriesLists(app.*.ok,app.*.total)", 120L, 180L, Seq.empty)
-      .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
+    // the CLI render subcommand evaluates the same target expression;
+    // its one optional argument after the window is a point budget
+    val cli = cliRender(db, "divideSeriesLists(app.*.ok,app.*.total)",
+        "120", "180")
+      .collect { case (n, _, Some(v)) => (n, v) }.toSet
     assert(cli === dl)
     intercept[IllegalArgumentException] {
-      Bgutil.render(db, "sumSeries(app.*.ok)", 120L, 180L,
-        Seq("absolute"))
+      cliRender(db, "sumSeries(app.*.ok)", "120", "180", "absolute")
     }
   }
 
@@ -495,5 +495,61 @@ class RenderTargetSpec extends SparkSuite {
       RenderTarget.render(db, "divideSeries(a.b,sumSeries(a.b))", 0L, 300L)
     }
     assert(e.getMessage.contains("not supported"))
+  }
+
+  test("bgutil render honours its maxDataPoints argument") {
+    val dir = java.nio.file.Files.createTempDirectory("rtcli").toString
+    val db = Db(spark, dir)
+    Bgutil.writePoints(db, (0 until 20).map(i => ("sys.req.count",
+      i * 60L, i.toDouble)), "60*60s:24*3600s", "average")
+    val target = "scale(sys.req.count,2)"
+    val full = cliRender(db, target, "0", "1200")
+    val budget = cliRender(db, target, "0", "1200", "10")
+    assert(full.length === 20)
+    assert(budget.length === 10, budget)
+    val want = RenderTarget.render(db, target, 0L, 1200L, 10)
+      .orderBy("ts").collect().map(r => (r.getString(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
+    assert(budget === want)
+  }
+
+  test("targets speak graphite's names only: combine is unknown") {
+    val dir = java.nio.file.Files.createTempDirectory("rtnames").toString
+    val db = Db(spark, dir)
+    Bgutil.write(db, "a.x", 120L, 2.0, "60*60s:24*3600s", "average")
+    for (t <- Seq("combine(a.x,sum,total)", "highest(a.x,1)",
+        "sortBy(a.x,'maxima')")) {
+      val e = intercept[IllegalArgumentException](
+        RenderTarget.render(db, t, 120L, 180L))
+      assert(e.getMessage ===
+        s"render: unknown function '${t.takeWhile(_ != '(')}'")
+    }
+    // scale takes graphite's one factor; offset carries the addend
+    intercept[IllegalArgumentException](
+      RenderTarget.render(db, "scale(a.x,2,1)", 120L, 180L))
+    val off = RenderTarget.render(db, "offset(scale(a.x,2),1)", 120L, 180L)
+      .collect().collectFirst { case r if !r.isNullAt(2) => r.getDouble(2) }
+    assert(off === Some(5.0))
+  }
+}
+
+object RenderTargetSpec {
+  /** The (name, ts, value) rows of a `show()` table, as `bgutil render`
+    * prints it; NULL is a missing value. */
+  def showRows(table: String): Seq[(String, Long, Option[Double])] = {
+    val lines = table.linesIterator.filter(_.startsWith("|")).toSeq
+    def cells(l: String) = l.split("\\|").map(_.trim).drop(1)
+    val header = cells(lines.head)
+    val (n, t, v) = (header.indexOf("name"), header.indexOf("ts"),
+      header.indexOf("value"))
+    lines.tail.map(cells).map(c =>
+      (c(n), c(t).toLong, if (c(v) == "NULL") None else Some(c(v).toDouble)))
+  }
+
+  /** Run `bgutil render <args…>` and read back the rows it prints. */
+  def cliRender(db: Db, args: String*): Seq[(String, Long, Option[Double])] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Bgutil.run(db, "render", args.toArray))
+    showRows(out.toString("UTF-8"))
   }
 }

@@ -96,6 +96,31 @@ class DownsamplerSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
+  test("update emits at most one row per (stage, ts) for any batch") {
+    val rnd = new scala.util.Random(7)
+    for (agg <- Aggregator.all) {
+      val ma = new MetricAggregates(MetricMetadata(agg,
+        Retention.fromString("20*10s:10*60s:10*600s")), capacity = 5)
+      var head = 1000L
+      for (_ <- 1 to 300) {
+        // mostly around the head: same-step duplicates, out-of-order
+        // points; sometimes older than the 5-slot buffer, or far ahead
+        val batch = Seq.fill(rnd.nextInt(16)) {
+          val ts = rnd.nextInt(10) match {
+            case 0 => head - 10L * (5 + rnd.nextInt(50))
+            case 1 => head + 10L * rnd.nextInt(40)
+            case _ => head - 10L * rnd.nextInt(4) + rnd.nextInt(10)
+          }
+          (math.max(0L, ts), rnd.nextInt(100).toDouble)
+        }
+        val keys = ma.update(batch).map(e => (e.stage, e.ts))
+        assert(keys.distinct.length === keys.length,
+          s"$agg: ${keys.diff(keys.distinct)} emitted twice for $batch")
+        head += 10L * rnd.nextInt(3)
+      }
+    }
+  }
+
   test("purge evicts idle metrics (:190-200)") {
     val ds = new Downsampler(Capacity)
     val m = metric(Aggregator.Total, "test.metric.sum")

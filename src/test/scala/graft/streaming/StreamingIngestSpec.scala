@@ -127,6 +127,31 @@ class IngestJobSpec extends graft.SparkSuite {
     assert(byTs(300L) === ((70.0, 1.0)))
     assert(byTs(0L)._1 === 14.0 && byTs(0L)._2 === 2.0)
   }
+
+  test("a streamed store holds one row per (metric_id, stage, ts, batch_seq)") {
+    implicit val sqlCtx = spark.sqlContext
+    val storeDir = java.nio.file.Files.createTempDirectory("ingest1").toString
+    val ckptDir = java.nio.file.Files.createTempDirectory("ckpt1").toString
+    val input = MemoryStream[RawPoint]
+    val q = StreamingIngest.startIngestJob(input.toDS(),
+      StreamingIngestSpec.lookupMeta, storeDir, ckptDir).start()
+    val rnd = new scala.util.Random(11)
+    try for (b <- 0 until 4) {
+      // per batch: same-step duplicates and out-of-order points around
+      // the head, plus points older than the 20-slot buffer
+      input.addData(Seq.fill(80) {
+        val ts = if (rnd.nextInt(8) == 0) rnd.nextInt(100).toLong
+          else b * 300L + rnd.nextInt(60)
+        RawPoint(s"m${rnd.nextInt(3)}", ts, rnd.nextInt(9).toDouble)
+      }: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val store = spark.read.parquet(storeDir)
+    assert(store.select("batch_seq").distinct().count() === 4)
+    val dup = store.groupBy("metric_id", "stage", "ts", "batch_seq")
+      .count().filter(col("count") > 1)
+    assert(dup.count() === 0, dup.collect().mkString(", "))
+  }
 }
 
 class CarbonLineSpec extends graft.SparkSuite {
