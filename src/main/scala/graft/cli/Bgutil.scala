@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model._
@@ -34,11 +34,11 @@ object Bgutil {
     }
     def pointsPath = s"$dir/points"
     def catalog: DataFrame = catalogAt(catalogVersion)
-    /** The catalog stored at `path`. A committed version is never
-      * rewritten, so its schema is inferred once. */
+    /** The catalog version stored at `path`, read with the declared
+      * [[MetricCatalog.Schema]]. */
     def catalogAt(path: String): DataFrame =
-      graft.sources.InferredSchemas.parquet(spark, path, s"$dir/catalog")
-    def points: DataFrame = spark.read.parquet(pointsPath)
+      spark.read.schema(MetricCatalog.Schema).parquet(path)
+    def points: DataFrame = PointsStore.scan(spark, pointsPath)
     def hasCatalog: Boolean = Files.exists(currentFile)
 
     /** This db's catalog as a [[MetricCatalog.CatalogStore]] — the
@@ -70,11 +70,9 @@ object Bgutil {
       val next = s"$dir/catalog_v$nextToken"
       // the DATED layout (partitioned by 30-day updated_on month, the ES
       // dated-index analog) so time-scoped maintenance scans prune whole
-      // month dirs. An EMPTY commit (syncdb's bootstrap) writes flat — a
-      // partitioned write of zero rows produces no files at all, leaving
-      // nothing to infer schema from
-      if (!df.isEmpty) MetricCatalog.writeDated(df, next)
-      else df.write.mode(SaveMode.Overwrite).parquet(next)
+      // month dirs; a commit of zero rows writes no data file and reads
+      // back as the empty catalog
+      MetricCatalog.writeDated(df, next)
       if (token != prevToken) {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(next))
         throw new IllegalStateException(
@@ -86,9 +84,16 @@ object Bgutil {
       Files.writeString(tmp, nextToken)
       Files.move(tmp, currentFile, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
-      // old version is garbage now; best-effort cleanup
-      prevToken.foreach(t => org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"$dir/catalog_v$t")))
+      // keep the replaced version: a render that resolved it may still be
+      // scanning it. Every older version is garbage (best-effort), as is
+      // one a killed commit left behind; a concurrent commit's in-flight
+      // version is never older than the replaced one
+      Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+        .filter { f =>
+          val v = f.getName.stripPrefix("catalog_v").takeWhile(_.isDigit)
+          f.getName.startsWith("catalog_v") && v.nonEmpty && v.toLong < prevVersion
+        }
+        .foreach(org.apache.commons.io.FileUtils.deleteQuietly(_))
     }
   }
 
@@ -732,14 +737,12 @@ object Bgutil {
 
   def info(db: Db): Unit = {
     println(s"catalog: ${db.catalog.count()} metrics")
-    // a fully-expired store keeps its (empty) stage dirs — parquet schema
-    // inference would fail there, so probe the partition layout first
-    val stages = PointsStore.listStages(db.pointsPath)
-    val withData = stages.filter(st =>
-      PointsStore.listBuckets(db.pointsPath, st).nonEmpty)
-    if (withData.nonEmpty)
-      println(s"points: ${db.points.count()} rows, stages: " +
-        withData.map(_.toString).sorted.mkString(", "))
+    val perStage =
+      if (PointsStore.listStages(db.pointsPath).isEmpty) Array.empty[Row]
+      else db.points.groupBy("stage").count().collect()
+    if (perStage.nonEmpty)
+      println(s"points: ${perStage.map(_.getLong(1)).sum} rows, stages: " +
+        perStage.map(_.getString(0)).sorted.mkString(", "))
     else println("points: empty")
   }
 }

@@ -325,7 +325,7 @@ object ProductQuantization {
     // jobs; the lifecycle's ~tiny-write latency was the measured k13
     // cost). Layout and contents are byte-identical to the sequential
     // writes; awaited before return so the state is complete.
-    val pending = Similarity.overlappedWrites(
+    Similarity.withOverlappedWrites(
       () => cents.write.mode("overwrite").parquet(centPath),
       // the CONFIGURED (m, ksub) are persisted alongside the mode:
       // pqTrain drops codes whose cluster goes empty, so inferring the
@@ -335,19 +335,17 @@ object ProductQuantization {
       // degrading recall. The meta row is the configuration of record.
       () => spark.range(1).select(lit(byResidual).as("by_residual"),
           lit(m).as("m"), lit(ksub).as("ksub"))
-        .write.mode("overwrite").parquet(metaPath))
-    try {
+        .write.mode("overwrite").parquet(metaPath)) {
       if (!byResidual) {
         val cb = pqTrain(corpus, idCol, vecCol, m, ksub, pqIters)
-        val cbPending = Similarity.overlappedWrites(
-          () => cb.write.mode("overwrite").parquet(cbPath))
-        try {
+        Similarity.withOverlappedWrites(
+            () => cb.write.mode("overwrite").parquet(cbPath)) {
           encodePostings(corpus, idCol, vecCol, cents, cb, byResidual = false)
             // one writer per cell, see Similarity.buildIvfIndex
             .repartition(col("cell_id"))
             .write.mode("overwrite").partitionBy("cell_id")
             .parquet(postPath)
-        } finally Similarity.awaitWrites(cbPending)
+        }
       } else {
         val dim = probeDim(corpus, vecCol)
         require(dim % m == 0,
@@ -360,16 +358,15 @@ object ProductQuantization {
             "neighbor_id", "cv", cents)
         val resid = residuals(cells, cents).localCheckpoint(true)
         val cb = pqTrain(resid, "neighbor_id", "rv", m, ksub, pqIters)
-        val cbPending = Similarity.overlappedWrites(
-          () => cb.write.mode("overwrite").parquet(cbPath))
-        try {
+        Similarity.withOverlappedWrites(
+            () => cb.write.mode("overwrite").parquet(cbPath)) {
           encodeResidualPostings(resid, cents, cb)
             .repartition(col("cell_id")) // one writer per cell
             .write.mode("overwrite").partitionBy("cell_id")
             .parquet(postPath)
-        } finally Similarity.awaitWrites(cbPending)
+        }
       }
-    } finally Similarity.awaitWrites(pending)
+    }
   }
 
   /** RETRAIN an IVF-PQ index from its SOURCE vectors — the PQ twin of

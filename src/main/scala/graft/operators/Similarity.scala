@@ -459,9 +459,8 @@ object Similarity {
       // cents is a k-row checkpointed relation, so the two writes are
       // independent jobs — the small write's commit latency hides under
       // the corpus-scale assign+write instead of serializing before it
-      val pending = overlappedWrites(
-        () => cents.write.mode("overwrite").parquet(s"$dir/centroids"))
-      try {
+      withOverlappedWrites(
+          () => cents.write.mode("overwrite").parquet(s"$dir/centroids")) {
         Clustering.assignCells(
             corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")),
             "neighbor_id", "cv", cents)
@@ -473,38 +472,39 @@ object Similarity {
           .repartition(col("cell_id"))
           .write.mode("overwrite").partitionBy("cell_id")
           .parquet(s"$dir/postings")
-      } finally awaitWrites(pending)
+      }
       // generation reset LAST: the fixed-path data above is complete
       // before the pointer stops naming the old generation
       resetGenerations(spark, dir)
     }
   }
 
-  /** Launch independent write jobs on side threads (guide §2.6 —
-    * overlap independent jobs): the callers' artifact writes commute
-    * (different paths, inputs already frozen driver-side), so their
-    * per-job commit latency can hide under the caller's main-thread
-    * work. MUST be awaited via [[awaitWrites]] before the caller
-    * publishes the state. */
-  private[operators] def overlappedWrites(
-      writes: (() => Unit)*): Seq[java.util.concurrent.Future[_]] = {
-    val pool = writePool
-    writes.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-      override def call(): Unit = w()
-    }))
+  /** Run `body` while `writes` run as independent jobs on side threads
+    * (guide §2.6 — overlap independent jobs): the callers' artifact
+    * writes commute (different paths, inputs already frozen driver-side),
+    * so their per-job commit latency hides under `body`. Every write is
+    * awaited before this returns, so the caller can publish the state
+    * next. A failing `body`'s exception surfaces with the write failures
+    * attached as suppressed; otherwise the first write failure is thrown,
+    * carrying the others. */
+  private[operators] def withOverlappedWrites[T](writes: (() => Unit)*)(
+      body: => T): T = {
+    val pending = writes.map(w => writePool.submit(
+      new java.util.concurrent.Callable[Unit] { override def call(): Unit = w() }))
+    def failures: Seq[Throwable] = pending.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+    }
+    val out = try body catch {
+      case t: Throwable => failures.foreach(t.addSuppressed); throw t
+    }
+    failures match {
+      case Seq() => out
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+    }
   }
 
-  /** Await [[overlappedWrites]]; rethrows the first write failure. */
-  private[operators] def awaitWrites(
-      pending: Seq[java.util.concurrent.Future[_]]): Unit =
-    pending.foreach { f =>
-      try f.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    }
-
-  /** Small daemon pool for [[overlappedWrites]] — 2 threads is plenty
+  /** Small daemon pool for [[withOverlappedWrites]] — 2 threads is plenty
     * (the point is hiding commit latency, not parallel throughput). */
   private lazy val writePool = {
     val tf = new java.util.concurrent.ThreadFactory {
@@ -549,16 +549,15 @@ object Similarity {
     val cents = Clustering.kmeansFit(base, "neighbor_id", "cv", k, iters)
     // overlapped like buildIvfIndex: the k-row centroid write's commit
     // latency hides under the corpus-scale reassign+write
-    val pending = overlappedWrites(() =>
-      cents.write.mode("overwrite").parquet(s"$dir/centroids_g$gen"))
-    try {
+    withOverlappedWrites(() =>
+        cents.write.mode("overwrite").parquet(s"$dir/centroids_g$gen")) {
       Clustering.assignCells(base, "neighbor_id", "cv", cents)
         .withColumn("cnorm", l2norm(col("cv")))
         .select("neighbor_id", "cv", "cnorm", "cell_id")
         .repartition(col("cell_id")) // one writer per cell, see buildIvfIndex
         .write.mode("overwrite").partitionBy("cell_id")
         .parquet(s"$dir/postings_g$gen")
-    } finally awaitWrites(pending)
+    }
     // pointer swap (see [[swapManifest]]: readers in the delete→rename
     // instant resolve the newest COMPLETE state, and the same rule
     // covers a crash between the rename and the sweep below), then

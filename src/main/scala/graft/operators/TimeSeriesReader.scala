@@ -66,7 +66,7 @@ object TimeSeriesReader {
   }
 
   /** One metric a glob matched: the catalog columns a fetch plans with.
-    * `xff` is set when the catalog carries an xFilesFactor column. */
+    * `xff` is set when the metric has an xFilesFactor. */
   final case class Matched(name: String, id: String, aggregator: String,
       retention: String, xff: Option[Double])
 
@@ -81,7 +81,8 @@ object TimeSeriesReader {
     MetricCatalog.globMetrics(catalog, glob, maxMetrics)
       .select(cols.map(col): _*).collect().toIndexedSeq
       .map(r => Matched(r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), if (hasXff) Some(r.getAs[Double](4)) else None))
+        r.getString(3),
+        if (hasXff && !r.isNullAt(4)) Some(r.getDouble(4)) else None))
   }
 
   /** Planned multi-metric read — the full find+fetch lifecycle

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 import graft.glob.{Glob, GlobPredicates}
 
@@ -32,6 +33,17 @@ object MetricCatalog {
     * 16 covers realistic Graphite namespaces; deeper names still work via
     * the regex path. */
   val MaxComponents = 16
+
+  /** A committed catalog's columns in the order [[catalogRows]] and
+    * [[writeDated]] write them; rows made without xfilesfactor read it
+    * as null. */
+  val Schema: StructType = StructType(
+    Seq("name", "aggregator", "retention").map(StructField(_, StringType)) ++
+      Seq(StructField("xfilesfactor", DoubleType)) ++
+      (0 until MaxComponents).map(i => StructField(s"p$i", StringType)) ++
+      Seq(StructField("depth", IntegerType), StructField("parent", StringType),
+        StructField("id", StringType), StructField("updated_on", LongType),
+        StructField("updated_month", LongType)))
 
   /** Add id/p0..pN/depth/parent columns to a DataFrame with a `name`
     * column. Pure column derivations — no shuffle. */
@@ -178,20 +190,15 @@ object MetricCatalog {
       .partitionBy("updated_month").parquet(dir)
 
   /** Metrics whose catalog entry went stale (bgutil clean,
-    * drivers/cassandra.py:3052-3141): updated_on older than maxAgeS. */
+    * drivers/cassandra.py:3052-3141): updated_on older than maxAgeS, on
+    * a dated catalog ([[writeDated]]). The month floor never exceeds
+    * updated_on, so `updated_month <= cutoff` is a lossless
+    * partition-pruning pre-filter: whole new-month dirs are skipped at
+    * plan time. */
   def expiredMetrics(catalog: DataFrame, nowS: Long, maxAgeS: Long): DataFrame = {
     val cutoff = nowS - maxAgeS
-    // on a dated layout, the month floor never exceeds updated_on, so
-    // `updated_month <= cutoff` is a lossless partition-pruning
-    // pre-filter for `updated_on <= cutoff` — whole new-month dirs are
-    // skipped at plan time
-    val pruned =
-      if (catalog.columns.contains("updated_month"))
-        catalog.filter(col("updated_month") <= lit(cutoff))
-      else catalog
-    // updated_on is epoch seconds (long) everywhere in this catalog —
-    // compare longs directly, consistent with Bgutil.clean
-    pruned.filter(col("updated_on") <= lit(cutoff))
+    catalog.filter(col("updated_month") <= lit(cutoff))
+      .filter(col("updated_on") <= lit(cutoff))
   }
 
   /** Orphan points: points whose metric has no catalog row (bgutil repair,

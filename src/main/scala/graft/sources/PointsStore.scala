@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.Stage
 
@@ -11,10 +12,39 @@ import graft.model.Stage
   * plays the role of the hand-built per-partition SELECTs
   * (biggraphite/drivers/cassandra.py:796-809,1846-1919).
   *
-  * Schema: metric_id, ts (epoch s), value, count, replica
-  * (+ stage, bucket partition columns).
+  * Schema: [[Schema]], read as declared, never inferred.
   */
 object PointsStore {
+
+  /** metric_id, ts (epoch s), value, count, replica, the `batch_seq` of
+    * a store that declares upserts, then the (stage, bucket) partition
+    * columns; a file lacking a column reads it as null. */
+  val Schema: StructType = StructType(Seq(
+    StructField("metric_id", StringType),
+    StructField("ts", LongType),
+    StructField("value", DoubleType),
+    StructField("count", DoubleType),
+    StructField("replica", IntegerType),
+    StructField("batch_seq", LongType),
+    StructField("stage", StringType),
+    StructField("bucket", LongType)))
+
+  /** Zero-byte file in a store's root declaring that it holds batch_seq
+    * upserts; Spark's listing skips names starting with `_`. */
+  val UpsertsMarker = "_upserts"
+
+  def declaresUpserts(baseDir: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(baseDir, UpsertsMarker))
+
+  /** The store's rows; a plain store's files never carry batch_seq. */
+  def scan(spark: SparkSession, baseDir: String): DataFrame =
+    scan(spark, baseDir, declaresUpserts(baseDir))
+
+  private def scan(spark: SparkSession, baseDir: String,
+      upserts: Boolean): DataFrame =
+    spark.read.schema(
+      if (upserts) Schema else StructType(Schema.filterNot(_.name == "batch_seq"))
+    ).parquet(baseDir)
 
   /** Partition sizing constants ported from drivers/cassandra.py:641-648:
     * target ~2000 points per read partition, hard cap 25000 points, never
@@ -73,7 +103,8 @@ object PointsStore {
     *
     * All batches must share one schema (metric_id, ts, value, count,
     * replica, and optionally batch_seq — the [[write]] contract); each
-    * gets its own salt, sized to ITS row count (`saltFor`). */
+    * gets its own salt, sized to ITS row count (`saltFor`). Batches with
+    * batch_seq declare the store's upserts before their rows land. */
   def writeMulti(batches: Seq[(DataFrame, Stage, Int)],
       baseDir: String): Unit = {
     require(batches.nonEmpty, "writeMulti needs at least one batch")
@@ -89,6 +120,11 @@ object PointsStore {
           s"${head.toSeq.sorted.mkString(", ")} — all batches must share " +
           "one column set (metric_id, ts, value, count, replica, and " +
           "batch_seq on all batches or none)")
+    }
+    if (head.contains("batch_seq") && !declaresUpserts(baseDir)) {
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(baseDir))
+      java.nio.file.Files.newOutputStream(
+        java.nio.file.Paths.get(baseDir, UpsertsMarker)).close()
     }
     append(batches.map { case (points, stage, writeSalt) =>
       val span = bucketSpanS(stage.precisionS)
@@ -138,13 +174,13 @@ object PointsStore {
     * metric_id stats, dictionary and bloom filter, which the layout
     * writer's (metric_id, ts) sort makes selective.
     *
-    * Stores written by the streaming ingest job carry a `batch_seq`
-    * column: each micro-batch re-emits running coarse aggregates, and the
-    * upsert contract (Cassandra-style last-write-wins,
-    * StreamingIngest.startIngestJob) is resolved HERE — the highest
-    * batch_seq per (metric, replica, step) wins, so every consumer of the
-    * read path (pointGrouper, fetchMatched, bgutil read) sees exactly the
-    * final state, never stale re-emissions.
+    * A store that declares upserts ([[UpsertsMarker]]) resolves them
+    * HERE: each streaming micro-batch re-emits running coarse aggregates,
+    * and the upsert contract (Cassandra-style last-write-wins,
+    * StreamingIngest.startIngestJob) keeps the highest batch_seq per
+    * (metric, replica, step), so every consumer of the read path sees
+    * exactly the final state. A plain store's rows of one step are
+    * partials pointGrouper combines, never merged.
     *
     * `byMetric` hash-partitions the pruned rows by metric_id before that
     * merge: the merge and every later per-metric grouping of the read
@@ -152,14 +188,15 @@ object PointsStore {
   def read(spark: SparkSession, baseDir: String, stage: Stage,
       startS: Long, endS: Long, metricIds: Seq[String] = Nil,
       byMetric: Boolean = false): DataFrame = {
-    val base = InferredSchemas.parquet(spark, baseDir, baseDir)
-    readFrom(base, stage, startS, endS, metricIds, byMetric)
+    val upserts = declaresUpserts(baseDir)
+    readFrom(scan(spark, baseDir, upserts), upserts, stage, startS, endS,
+      metricIds, byMetric)
   }
 
-  /** [[read]] against a caller-supplied base relation — so a compaction
-    * loop can list the store's files ONCE and prune per slice, instead
-    * of re-listing the whole table every slice. */
-  private[sources] def readFrom(base: DataFrame, stage: Stage,
+  /** [[read]] against a caller-supplied [[scan]] of the store — so a
+    * compaction loop can list the store's files ONCE and prune per slice,
+    * instead of re-listing the whole table every slice. */
+  private def readFrom(base: DataFrame, upserts: Boolean, stage: Stage,
       startS: Long, endS: Long, metricIds: Seq[String] = Nil,
       byMetric: Boolean = false): DataFrame = {
     val span = bucketSpanS(stage.precisionS)
@@ -173,16 +210,14 @@ object PointsStore {
       .filter(col("ts") >= startS && col("ts") < endS)
     if (metricIds.nonEmpty) df = df.filter(col("metric_id").isin(metricIds: _*))
     if (byMetric) df = df.repartition(col("metric_id"))
-    if (df.columns.contains("batch_seq")) {
-      val extra = if (df.columns.contains("replica")) Seq("replica") else Nil
-      // null batch_seq (rows from files written without the column, e.g.
-      // after a terminal compactStage followed by new streaming appends)
-      // must LOSE to any real sequence — max_by would otherwise return
-      // null for an all-null group and erase the row entirely
+    if (upserts) {
+      // null batch_seq (rows appended before the store declared its
+      // upserts) must LOSE to any real sequence — max_by would otherwise
+      // return null for an all-null group and erase the row entirely
       df = graft.operators.Downsample.lastWriteWins(
         df.withColumn("batch_seq",
           coalesce(col("batch_seq"), lit(Long.MinValue))),
-        stage.precisionS, col("batch_seq"), extraKeys = extra)
+        stage.precisionS, col("batch_seq"), extraKeys = Seq("replica"))
     }
     df
   }
@@ -202,24 +237,6 @@ object PointsStore {
       .sortBy(sortCols.head, sortCols.tail: _*)
       .format("parquet")
       .saveAsTable(tableName)
-  }
-
-  /** Compact one stage in place: collapse streaming re-emissions
-    * (batch_seq upsert duplicates) to their final values — the batch
-    * analog of Cassandra compaction folding upserted cells
-    * (drivers/cassandra.py:943-1019 tunes exactly this). Uses dynamic
-    * partition overwrite so ONLY the buckets that exist are rewritten,
-    * and the read path afterwards skips the per-read LWW merge (the
-    * batch_seq column is dropped). No-op when the stage carries no
-    * batch_seq. */
-  def compactStage(spark: SparkSession, baseDir: String, stage: Stage): Unit = {
-    // terminal form: drops the batch_seq column, so use it only on stores
-    // that stop receiving streaming writes (a later append would re-mix
-    // schemas; read() tolerates that via the null sentinel, but parquet
-    // schema inference on a mixed store is file-order dependent)
-    compactStageSlices(spark, baseDir, stage, bucketsPerSlice = Int.MaxValue,
-      dropBatchSeq = true)
-    ()
   }
 
   /** Driver-side listing of the bucket partition values present for one
@@ -253,30 +270,27 @@ object PointsStore {
 
   /** Rolling per-slice compaction: collapse streaming re-emissions a few
     * buckets at a time instead of materializing the whole stage at once —
-    * the whole-stage [[compactStage]] localCheckpoint is fine for a test
-    * store but at 100 TB would stage the entire table; each slice here
-    * bounds the working set to `bucketsPerSlice` partitions (time-window
+    * at 100 TB a whole-stage pass would stage the entire table; each
+    * slice bounds the working set to `bucketsPerSlice` partitions (time-window
     * compaction, the TWCS analog of drivers/cassandra.py:943-1019, which
     * also compacts per 3 h window precisely so compaction never touches
     * the whole table).
     *
     * Slices are independent and the job is restartable at slice
     * granularity: a killed run leaves earlier slices compacted and later
-    * ones still carrying batch_seq — the read path resolves both shapes.
+    * ones still holding re-emissions, which the read merge resolves.
     * `sinceS` compacts only buckets at or after the cutoff: a live store
     * only re-emits watermark-recent windows, so steady-state compaction
     * touches a CONSTANT number of recent buckets, not the table's age.
     *
-    * The winning `batch_seq` is KEPT by default so the store schema stays
-    * uniform while streaming keeps appending (a fresh re-emission after
+    * The winning `batch_seq` is kept, so a fresh re-emission after
     * compaction still supersedes the compacted row via the normal read
-    * merge). `dropBatchSeq` is for terminal compaction only.
+    * merge. A plain store's slices are rewritten without a merge.
     * Slices are rewritten through the same layout writer appends use, so
     * a compacted bucket keeps its (metric_id, ts) clustering.
     * Returns the compacted bucket values. */
   def compactStageSlices(spark: SparkSession, baseDir: String, stage: Stage,
-      bucketsPerSlice: Int = 8, sinceS: Long = Long.MinValue,
-      dropBatchSeq: Boolean = false): Seq[Long] = {
+      bucketsPerSlice: Int = 8, sinceS: Long = Long.MinValue): Seq[Long] = {
     require(bucketsPerSlice > 0)
     val span = bucketSpanS(stage.precisionS)
     // Guarded: a concurrent PointsStore.write (the streaming ingest
@@ -291,12 +305,12 @@ object PointsStore {
       // base listed ONCE; each slice's dynamic overwrite (set PER-WRITE,
       // never on the session) replaces only its own (stage, bucket)
       // dirs, which no later slice reads
-      val base = spark.read.parquet(baseDir)
+      val upserts = declaresUpserts(baseDir)
+      val base = scan(spark, baseDir, upserts)
       Compaction.rewriteSlices(buckets, bucketsPerSlice) { slice =>
         // readFrom prunes to the slice's buckets and applies batch_seq
         // last-write-wins; rewrite only those partition dirs
-        val merged = readFrom(base, stage, slice.min, slice.max + span)
-        if (dropBatchSeq) merged.drop("batch_seq") else merged
+        readFrom(base, upserts, stage, slice.min, slice.max + span)
       } { (staged, _) =>
         layout(staged).mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")

@@ -142,11 +142,14 @@ class BgutilSpec extends SparkSuite {
     // concurrent committers from ever sharing a directory
     val token = java.nio.file.Files.readString(current).trim
     assert(token.takeWhile(_.isDigit).toLong === 3L) // syncdb + 2 writes
-    // only the current version dir remains (older ones garbage-collected)
+    // the current version dir and the one it replaced remain (older
+    // ones garbage-collected)
     val dirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("catalog_v"))
-      .map(_.getName).toSeq
-    assert(dirs === Seq(s"catalog_v$token"))
+      .map(_.getName).toSeq.sorted
+    assert(dirs.length === 2)
+    assert(dirs(0).startsWith("catalog_v2-"))
+    assert(dirs(1) === s"catalog_v$token")
     assert(db.catalog.count() === 2)
   }
 

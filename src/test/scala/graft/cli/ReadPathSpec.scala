@@ -11,9 +11,8 @@ import graft.model.Retention
 import graft.operators.TimeSeriesReader
 import graft.sources.{MetricCatalog, PointsStore}
 
-/** The planned read's job budget, the freshness of the schemas it no
-  * longer infers on every request, and the per-catalog-version memo of
-  * glob matches. */
+/** The planned read's job budget, its declared schemas, and the
+  * per-catalog-version memo of glob matches. */
 class ReadPathSpec extends SparkSuite {
 
   /** Spark jobs started by `body`, counted by a listener. */
@@ -45,7 +44,7 @@ class ReadPathSpec extends SparkSuite {
         ("sys.cpu.1.load", i * 60L, 2.0 * i))),
       "1440*60s:720*3600s", "average")
     def readOnce(): Int = Bgutil.read(db, "sys.cpu.0.load", 0L, 7200L).collect().length
-    assert(readOnce() === 120) // cold: infers the catalog and store schemas
+    assert(readOnce() === 120)
     // warm: the catalog scan, the points exchange, the fold's broadcast
     // and the result — no schema inference, broadcast metadata join,
     // second aggregation exchange or range-sampling sort
@@ -68,20 +67,58 @@ class ReadPathSpec extends SparkSuite {
     assert(series(db, "m.a", 120000L, 120180L) ===
       Seq((120000L, None), (120060L, Some(1.0)), (120120L, Some(2.0))))
 
-    // a streaming-style append brings the first batch_seq column: two
-    // re-emissions of one slot, the later one (batch_seq 2) must win.
-    // Its files sort first (bucket=0), so the store's inferred schema
-    // now carries batch_seq; a schema kept from before the append would
-    // skip the merge and average the two (6.0)
-    val id = db.catalog.filter(col("name") === "m.a").select("id").head().getString(0)
-    val stage0 = Retention.fromString(retention).stage0
-    import spark.implicits._
-    PointsStore.write(Seq((60L, 5.0, 1L), (60L, 7.0, 2L)).toDF("ts", "value", "batch_seq")
-      .select(lit(id).as("metric_id"), col("ts"), col("value"),
-        lit(1.0).as("count"), lit(0).as("replica"), col("batch_seq")),
-      db.pointsPath, stage0, writeSalt = 1)
+    // a streaming-style append declares the store's upserts: two
+    // re-emissions of one slot, the later one (batch_seq 2) must win
+    appendSeq(db, "m.a", 60L)
     assert(series(db, "m.a", 0L, 180L) ===
       Seq((0L, None), (60L, Some(7.0)), (120L, None)))
+    assert(series(db, "m.a", 120000L, 120180L) ===
+      Seq((120000L, None), (120060L, Some(1.0)), (120120L, Some(2.0))))
+
+    // the same with the plain point in bucket 0 and the re-emissions in
+    // bucket 120000
+    val other = plainStore("readfresh2", "m.b", 60L)
+    appendSeq(other, "m.b", 120060L)
+    assert(series(other, "m.b", 120000L, 120180L) ===
+      Seq((120000L, None), (120060L, Some(7.0)), (120120L, None)))
+    assert(series(other, "m.b", 0L, 180L) ===
+      Seq((0L, None), (60L, Some(1.0)), (120L, None)))
+  }
+
+  test("a store expired past every bucket reads as all-null series") {
+    val db = plainStore("readexpired", "x.a")
+    Bgutil.expire(db, 100L * 365 * 86400)
+    assert(PointsStore.listBuckets(db.pointsPath,
+      Retention.fromString("10000*60s").stage0).isEmpty)
+    assert(series(db, "x.a", 120000L, 120180L) ===
+      Seq((120000L, None), (120060L, None), (120120L, None)))
+  }
+
+  test("a catalog commit runs only its write, and the next resolve one job") {
+    val db = plainStore("commitjobs", "c.a")
+    import spark.implicits._
+    val next = MetricCatalog.upsert(Some(db.catalog), MetricCatalog.catalogRows(
+      Seq(("c.b", "average", "10000*60s")).toDF("name", "aggregator", "retention"),
+      120L))
+    val writeJobs = jobsOf(MetricCatalog.writeDated(next,
+      java.nio.file.Files.createTempDirectory("commitjobs_w").toString))
+    assert(jobsOf(db.commitCatalog(next)) === writeJobs)
+    // the new version's schema is declared: the resolve is the one scan
+    var got: Seq[String] = Nil
+    assert(jobsOf { got = Bgutil.resolve(db, "c.*").map(_.name) } === 1)
+    assert(got === Seq("c.a", "c.b"))
+  }
+
+  test("a commit keeps the version it replaced; older ones are swept") {
+    val db = plainStore("catalogkeep", "k.a")
+    val held = db.catalog
+    Bgutil.writePoints(db, Seq(("k.b", 60L, 1.0)), "10000*60s", "average")
+    // a render that resolved the replaced version can still scan it
+    assert(held.select("name").collect().map(_.getString(0)).toSet === Set("k.a"))
+    Bgutil.writePoints(db, Seq(("k.c", 60L, 1.0)), "10000*60s", "average")
+    val versions = new java.io.File(db.dir).list().filter(_.startsWith("catalog_v"))
+    assert(versions.length === 2)
+    assert(versions.contains(db.catalogVersion.split('/').last))
   }
 
   private def names(db: Db, glob: String): Set[String] =
@@ -95,7 +132,7 @@ class ReadPathSpec extends SparkSuite {
         ("sys.cpu.1.load", i * 60L, 2.0 * i))),
       "1440*60s:720*3600s", "average")
     def readOnce(glob: String): Int = Bgutil.read(db, glob, 0L, 7200L).collect().length
-    assert(readOnce("sys.cpu.0.load") === 120) // cold: infers the schemas
+    assert(readOnce("sys.cpu.0.load") === 120)
     // repeated glob: the memo answers the resolve; the points exchange,
     // the one collect of the grouped points and the explode of the
     // driver-built vectors remain
@@ -106,22 +143,21 @@ class ReadPathSpec extends SparkSuite {
     assert(fresh <= 4, s"a warm new-glob read ran $fresh Spark jobs")
   }
 
-  /** A store holding one metric with a plain point at 120060 (bucket
-    * 120000). */
-  private def plainStore(prefix: String, name: String): Db = {
+  /** A store holding one metric with a plain point at `ts` (default
+    * 120060, bucket 120000). */
+  private def plainStore(prefix: String, name: String, ts: Long = 120060L): Db = {
     val db = Db(spark, java.nio.file.Files.createTempDirectory(prefix).toString)
     Bgutil.syncdb(db)
-    Bgutil.writePoints(db, Seq((name, 120060L, 1.0)), "10000*60s", "average")
+    Bgutil.writePoints(db, Seq((name, ts, 1.0)), "10000*60s", "average")
     db
   }
 
-  /** Two streaming-style re-emissions of `name`'s slot 60 (bucket 0,
-    * whose files sort first, so the store's schema carries batch_seq);
-    * batch 2 wins. No catalog commit. */
-  private def appendSeq(db: Db, name: String): Unit = {
+  /** Two streaming-style re-emissions of `name`'s slot `ts` (default 60,
+    * bucket 0); batch 2 wins. No catalog commit. */
+  private def appendSeq(db: Db, name: String, ts: Long = 60L): Unit = {
     val id = Bgutil.resolve(db, name).head.id
     import spark.implicits._
-    PointsStore.write(Seq((60L, 5.0, 1L), (60L, 7.0, 2L)).toDF("ts", "value", "batch_seq")
+    PointsStore.write(Seq((ts, 5.0, 1L), (ts, 7.0, 2L)).toDF("ts", "value", "batch_seq")
       .select(lit(id).as("metric_id"), col("ts"), col("value"),
         lit(1.0).as("count"), lit(0).as("replica"), col("batch_seq")),
       db.pointsPath, Retention.fromString("10000*60s").stage0, writeSalt = 1)

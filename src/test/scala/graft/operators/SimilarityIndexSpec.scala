@@ -489,4 +489,19 @@ class SimilarityIndexSpec extends SparkSuite {
     assert(spark.read.parquet(Similarity.livePaths(spark, dir)._2)
       .count() === 120)
   }
+
+  test("overlapped writes keep the body's exception, the write's suppressed") {
+    val e = intercept[IllegalStateException] {
+      Similarity.withOverlappedWrites(() => throw new RuntimeException("side")) {
+        throw new IllegalStateException("body")
+      }
+    }
+    assert(e.getMessage === "body")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("side"))
+    // with a clean body the side failure surfaces
+    val side = intercept[RuntimeException] {
+      Similarity.withOverlappedWrites(() => throw new RuntimeException("side"))(1)
+    }
+    assert(side.getMessage === "side")
+  }
 }

@@ -140,4 +140,39 @@ class CatalogAndStoreSpec extends SparkSuite {
     val kept = PointsStore.expireOldBuckets(all, Seq(stage), nowS = 100100L)
     assert(kept.select("ts").as[Long].collect().toSeq === Seq(100000L))
   }
+
+  test("the writers produce exactly the declared schemas") {
+    import org.apache.spark.sql.types.StructType
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    /** One data file's footer schema and the directory's column order. */
+    def written(dir: String): (StructType, Seq[String]) = {
+      val file = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(_.toString.endsWith(".parquet")).findFirst().get.toString
+      (spark.read.parquet(file).schema, spark.read.parquet(dir).columns.toSeq)
+    }
+    def dataCols(s: StructType, partitions: Int) = StructType(s.dropRight(partitions))
+
+    val cat = tmp("declcat")
+    MetricCatalog.writeDated(MetricCatalog.catalogRows(
+      Seq(("a.b", "average", "60*60s", 0.5))
+        .toDF("name", "aggregator", "retention", "xfilesfactor"), 60L), cat)
+    assert(written(cat) ===
+      ((dataCols(MetricCatalog.Schema, 1), MetricCatalog.Schema.fieldNames.toSeq)))
+
+    val stage = Stage(1440, 60, stage0 = true)
+    val seqd = tmp("declseq")
+    PointsStore.writeMulti(Seq((Seq(("m", 60L, 1.0, 1.0, 0, 3L))
+      .toDF("metric_id", "ts", "value", "count", "replica", "batch_seq"),
+      stage, 1)), seqd)
+    assert(written(seqd) ===
+      ((dataCols(PointsStore.Schema, 2), PointsStore.Schema.fieldNames.toSeq)))
+    assert(PointsStore.declaresUpserts(seqd))
+    // a plain batch keeps its columns: no batch_seq, no declaration
+    val plain = tmp("declplain")
+    PointsStore.write(Seq(("m", 60L, 1.0, 1.0, 0))
+      .toDF("metric_id", "ts", "value", "count", "replica"), plain, stage)
+    assert(written(plain)._2 === PointsStore.Schema.fieldNames.toSeq
+      .filterNot(_ == "batch_seq"))
+    assert(!PointsStore.declaresUpserts(plain))
+  }
 }

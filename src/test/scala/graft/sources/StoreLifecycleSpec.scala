@@ -9,7 +9,7 @@ import graft.model.Stage
 class StoreLifecycleSpec extends SparkSuite {
   import spark.implicits._
 
-  test("compactStage folds batch_seq re-emissions to final values") {
+  test("compactStageSlices folds batch_seq re-emissions to final values") {
     val dir = java.nio.file.Files.createTempDirectory("compact").toString
     val stage = Stage(1000, 60, stage0 = false)
     // batch 1 emits a running aggregate, batch 2 supersedes it
@@ -25,11 +25,9 @@ class StoreLifecycleSpec extends SparkSuite {
       .orderBy("ts").select("ts", "value").as[(Long, Double)].collect().toSeq
     assert(before === Seq((0L, 30.0), (60L, 5.0)))
 
-    PointsStore.compactStage(spark, dir, stage)
-    // physically 2 rows now, no batch_seq column, same logical contents
-    val raw = spark.read.parquet(dir)
-    assert(raw.count() === 2)
-    assert(!raw.columns.contains("batch_seq"))
+    PointsStore.compactStageSlices(spark, dir, stage)
+    // physically 2 rows now, same logical contents
+    assert(spark.read.parquet(dir).count() === 2)
     val after = PointsStore.read(spark, dir, stage, 0L, 120L)
       .orderBy("ts").select("ts", "value").as[(Long, Double)].collect().toSeq
     assert(after === before)
